@@ -12,13 +12,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens_col
 from ..session import ensure_min_partitions
 from ..textnorm import FULL_SPLIT_PATTERN
 from .hashing import M31, hash_params, md5_long, universal_hash
 
 
 def _plain_tokens(text: Column) -> Column:
-    """Dedup tokenization: lowercase + split + drop empties. (No stop-reset
+    """Shingle tokenization: lowercase + split + drop empties. (No stop-reset
     segmentation here — shingles for near-dup detection deliberately span
     sentence boundaries.)"""
     return F.filter(F.split(F.lower(text), FULL_SPLIT_PATTERN), lambda t: t != "")
@@ -208,6 +209,7 @@ SIMHASH_BITS = 60  # stays positive in int64 for both engines
 
 def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(doc_id, simhash): 60-bit simhash over token md5s weighted by tf.
+    Tokens are the index's (``tokens_col``: ignore strings dropped).
     One explode + one groupBy with 60 conditional-sum aggregates — all
     JVM-side, partial-agg friendly. The (doc, token) tf aggregation stays
     deliberately: a per-occurrence ±1 sum would be algebraically equal
@@ -218,7 +220,7 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     per row instead of one per bit."""
     toks = ensure_min_partitions(docs).select(
         F.col(id_col).alias("doc_id"),
-        F.explode(_plain_tokens(F.col(text_col))).alias("tok"),
+        F.explode(tokens_col(F.col(text_col))).alias("tok"),
     )
     tf = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
     hb = tf.select("doc_id", "tf", md5_long(F.col("tok")).alias("h"))

@@ -4,19 +4,24 @@ Reference parity (service/search.go:174-200 dispatch; index.go:291-306
 first-token lookup; README query dialect) re-expressed over columnar
 tables, plus the BM25/block-max layer mandated by BASELINE.json.
 
-Distributed scoring plan:
-    segments.where(term_id ∈ query terms)        ── parquet row-group pruning
-      ⨝ broadcast(query-term idf)                ── tiny dim join
-      groupBy(doc_bucket).applyInPandas(scorer)  ── all terms for one doc
-                                                    range co-located; WAND
-                                                    block skipping inside
-      orderBy(score desc, doc_id asc) LIMIT k    ── global top-k
-        (TakeOrderedAndProject — no full sort)
+Distributed scoring plan (bm25_topk):
+    segments.where(term_id IN query terms)       ── parquet pushdown; idf
+                                                    attached in python
+      repartition(n, doc_bucket) | coalesce(1)   ── all of a bucket's blocks
+                                                    in one task; n from the
+                                                    query's posting volume
+      mapInArrow(_partition_scorer)              ── per bucket: block-max
+                                                    sweep, one python call
+                                                    per task
+      orderBy(score desc, doc_id asc) LIMIT k    ── TakeOrderedAndProject
 
-The scorer is an exact block-max algorithm: piecewise-constant upper
-bounds are swept from block metadata only (first_doc/last_doc/max_score —
-no payload decode), and blocks are decoded strictly in upper-bound order
-until the running k-th best exact score exceeds the next segment's bound.
+The sweep is exact: piecewise-constant upper bounds come from block
+metadata only (first_doc/last_doc/max_score), and blocks are decoded in
+upper-bound order until the k-th best exact score exceeds the next
+segment's bound. The batch scorer (grouped applyInPandas over a persisted
+bucket-partitioned view), the facet scorer (cogroup with the allowed
+docs) and driver-local ``bm25_serve`` share the numerics in
+``query/kernel.py``: per-doc accumulation and exact top-k.
 """
 
 from __future__ import annotations
@@ -40,6 +45,7 @@ from ..codecs import (
 from ..config import EngineConfig
 from ..index_store import IndexStore, Manifest
 from ..textnorm import tokenize
+from .kernel import accumulate, topk
 from .regexparser import regex_to_prefixes
 
 TOPK_SCHEMA = "doc_id long, score double"
@@ -265,22 +271,10 @@ def _partition_scorer(p: _Bm25Params, idf_by_tid: dict[int, float] | None = None
 
 
 def _exhaustive_topk(n_blocks: int, decode_block, k: int) -> pd.DataFrame:
-    """Brute-force DAAT: decode everything, scatter-add, top-k."""
-    all_d = []
-    all_s = []
-    for i in range(n_blocks):
-        d, s = decode_block(i)
-        if len(d):
-            all_d.append(d)
-            all_s.append(s)
-    if not all_d:
-        return pd.DataFrame({"doc_id": [], "score": []})
-    docs = np.concatenate(all_d)
-    scores = np.concatenate(all_s)
-    uniq, inv = np.unique(docs, return_inverse=True)
-    tot = np.zeros(len(uniq))
-    np.add.at(tot, inv, scores)
-    return _topk_df(uniq, tot, k)
+    """Brute-force DAAT: decode everything, accumulate, top-k."""
+    decoded = [decode_block(i) for i in range(n_blocks)]
+    d, s = topk(*accumulate([d for d, _ in decoded], [s for _, s in decoded]), k)
+    return pd.DataFrame({"doc_id": d, "score": s})
 
 
 def _blockmax_sweep(
@@ -344,15 +338,7 @@ def _blockmax_sweep(
             m = (d >= lo) & (d < hi)
             docs_l.append(d[m])
             scores_l.append(s[m])
-        if not docs_l:
-            continue
-        docs = np.concatenate(docs_l)
-        scores = np.concatenate(scores_l)
-        if not len(docs):
-            continue
-        uniq, inv = np.unique(docs, return_inverse=True)
-        tot = np.zeros(len(uniq))
-        np.add.at(tot, inv, scores)
+        uniq, tot = accumulate(docs_l, scores_l)
         for d, s in zip(uniq.tolist(), tot.tolist()):
             if d in scored_docs:
                 continue
@@ -370,33 +356,6 @@ def _blockmax_sweep(
     out_docs = np.array([-d for _, d in heap], dtype=np.int64)
     out_scores = np.array([s for s, _ in heap])
     return pd.DataFrame({"doc_id": out_docs, "score": out_scores})
-
-
-def _topk_arrays(
-    docs: np.ndarray, scores: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Top-k as numpy arrays (score desc, doc_id asc). The batch scorer
-    calls this per (term-set × bucket) group — constructing a pandas
-    frame per group cost 7.5 s of a 23 s scoring pass at 1000 queries ×
-    19 buckets (profiled), so frame construction happens ONCE per task,
-    never per group."""
-    if len(docs) == 0:
-        return docs.astype(np.int64), scores
-    if len(docs) > max(4 * k, 4096):
-        # O(n) prefilter: keep everything ≥ the kth score (ties included,
-        # so the lexsort below still breaks them exactly), then sort the
-        # small survivor set instead of the full candidate array
-        thr = np.partition(scores, len(scores) - k)[len(scores) - k]
-        keep = scores >= thr
-        docs, scores = docs[keep], scores[keep]
-    # score desc, doc_id asc tie-break
-    order = np.lexsort((docs, -scores))[:k]
-    return docs[order].astype(np.int64), scores[order]
-
-
-def _topk_df(docs: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
-    d, s = _topk_arrays(docs, scores, k)
-    return pd.DataFrame({"doc_id": d, "score": s})
 
 
 class SearchIndex:
@@ -756,12 +715,12 @@ class SearchIndex:
                 "positions retrieval (kwic/collocations/term_positions) "
                 "requires an index built with store_positions=True"
             )
-        tid_rows = self.search_exact(term).select("term_id").collect()
-        if not tid_rows:
+        tids = self._term_ids([term.lower()])
+        if tids is None:
             return self.spark.createDataFrame(
                 [], "doc_id long, tf int, positions array<int>"
             )
-        tid = tid_rows[0]["term_id"]
+        (tid,) = tids.values()
         segs = self.segments.where(F.col("term_id") == tid).select(
             "n_docs", "docs", "tfs", "dls", "pos_counts", "positions"
         )
@@ -1444,15 +1403,8 @@ class SearchIndex:
                 continue
             docs_l.append(ent[0])
             scores_l.append(ent[1] * float(idf))
-        if not docs_l:
-            return []
-        docs = np.concatenate(docs_l)
-        scores = np.concatenate(scores_l)
-        uniq, inv = np.unique(docs, return_inverse=True)
-        tot = np.zeros(len(uniq))
-        np.add.at(tot, inv, scores)
-        top = _topk_df(uniq, tot, k)
-        return list(zip(top["doc_id"].tolist(), top["score"].tolist()))
+        d, s = topk(*accumulate(docs_l, scores_l), k)
+        return list(zip(d.tolist(), s.tolist()))
 
     def _perfect_scorer_partitioning(self, Q: int):
         """One shuffle partition per scoring group, exactly.
@@ -1550,7 +1502,7 @@ class SearchIndex:
                 )
                 keys = ["doc_bucket", "psalt"]
             else:
-                sp = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+                sp = int(self.cfg.shuffle_partitions)
                 nb = self._n_doc_buckets
                 sp_eff = min(sp, 2 * nb) if nb else sp
                 view = base.repartition(sp_eff, "doc_bucket")
@@ -1640,7 +1592,7 @@ class SearchIndex:
         # queries split into Q groups scored by separate tasks (blocks
         # shared by groups are duplicated in the shuffle — the honest
         # price of parallelism finer than the bucket grain).
-        sp = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        sp = int(self.cfg.shuffle_partitions)
         nb = self._n_doc_buckets
         n_queries = len(q_terms)
         # A/B on the 19-bucket bench regime: Q=3 salting tripled the
@@ -1717,19 +1669,6 @@ class SearchIndex:
                     return _empty
                 return D[span[0]:span[1]], S[span[0]:span[1]]
 
-            # doc_bucket = doc_id // width bounds this bucket's doc span,
-            # so per-query aggregation can be a DENSE bincount over
-            # bucket-relative offsets (C-speed, no per-query sort) instead
-            # of unique+add.at. A fully-vectorized incidence variant
-            # (global lexsort/reduceat) was A/B-measured ~1.6× SLOWER at
-            # 1000 queries; the dense path replaces the per-query
-            # O(n log n) unique with O(span + postings). Guard the span:
-            # 4M-doc buckets cost a 32 MB accumulator — beyond that (or on
-            # pathological sparse id spaces) fall back to the sort path.
-            base = int(pdf["first_doc"].min())
-            span = int(pdf["last_doc"].max()) - base + 1
-            dense = 0 < span <= (1 << 22)
-
             # queries normalizing to the SAME indexed term-set share one
             # scoring pass (frequent in serving workloads)
             tset_groups: dict[tuple, list[int]] = {}
@@ -1741,40 +1680,12 @@ class SearchIndex:
             out_score: list[np.ndarray] = []
             for tset, qis in tset_groups.items():
                 parts = [term_postings(t) for t in tset]
-                if len(parts) == 1:
-                    # single-term query group: doc_ids are already unique
-                    # within a term, so the aggregation pass (bincount +
-                    # nonzero over the bucket span, ~2.3 s/1000 queries
-                    # profiled) is a no-op — rank the postings directly
-                    d, s = parts[0]
-                    if len(d) == 0:
-                        continue
-                    td, ts_ = _topk_arrays(d, s, k)
-                elif dense:
-                    acc = None
-                    for d, s in parts:
-                        if len(d) == 0:
-                            continue
-                        v = np.bincount(d - base, weights=s, minlength=span)
-                        acc = v if acc is None else acc + v
-                    if acc is None:
-                        continue
-                    nz = np.nonzero(acc)[0]
-                    if len(nz) == 0:
-                        continue
-                    td, ts_ = _topk_arrays(nz + np.int64(base), acc[nz], k)
-                else:
-                    docs = np.concatenate([p[0] for p in parts])
-                    if len(docs) == 0:
-                        continue
-                    scores = np.concatenate([p[1] for p in parts])
-                    uniq, inv = np.unique(docs, return_inverse=True)
-                    tot = np.zeros(len(uniq))
-                    np.add.at(tot, inv, scores)
-                    td, ts_ = _topk_arrays(uniq, tot, k)
-                # numpy accumulation only — ONE pandas frame per task at
-                # the end (a frame per group × per query measured 7.5 s /
-                # 23 s scoring pass; see _topk_arrays)
+                # numpy only — ONE pandas frame per task at the end (a
+                # frame per group × per query measured 7.5 s of a 23 s
+                # scoring pass at 1000 queries × 19 buckets)
+                td, ts_ = topk(
+                    *accumulate([p[0] for p in parts], [p[1] for p in parts]), k
+                )
                 for qi in qis:
                     out_qid.append(np.full(len(td), qi, np.int32))
                     out_doc.append(td)

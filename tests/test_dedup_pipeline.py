@@ -8,6 +8,7 @@ from gloomy_spark.ops.dedup import (
     jaccard_pairs,
     lsh_jaccard_pipeline,
     minhash_lsh_pairs,
+    simhash,
 )
 
 
@@ -34,3 +35,33 @@ def test_lsh_jaccard_pipeline_subset_and_exact_values(spark):
     assert high <= set(piped), "missed near-certain near-dups"
     # overall recall sanity
     assert len(piped) >= max(1, int(0.5 * len(exact)))
+
+
+@pytest.mark.spark
+def test_simhash_drops_ignore_strings_like_registry_sql(spark):
+    """A standalone '"' token is an ignore string: the registry's DuckDB
+    SQL (and the index tokenizer) drop it, so simhash must too."""
+    import duckdb
+    import pandas as pd
+
+    from gloomy_spark.entry_queries import q_simhash
+
+    documents = pd.DataFrame({
+        "doc_id": [1, 2, 3],
+        "text": [
+            'he said " stop " and left',
+            '" " " quoted text " with marks',
+            "no marks here at all",
+        ],
+    })
+    got = {
+        r["doc_id"]: r["simhash"]
+        for r in simhash(spark.createDataFrame(documents)).collect()
+    }
+    con = duckdb.connect()
+    try:
+        con.register("documents", documents)
+        want = dict(con.execute(q_simhash()[1]).fetchall())
+    finally:
+        con.close()
+    assert got == want

@@ -1,0 +1,117 @@
+"""query/kernel.py against the reference numerics it replaced: np.unique +
+np.add.at accumulation, then a full lexsort (score desc, doc_id asc).
+Equality is bit-for-bit (array_equal on the float scores, no tolerance)."""
+
+from __future__ import annotations
+
+import numpy as np
+import pytest
+
+from gloomy_spark.query.kernel import accumulate, topk
+
+
+def _reference(docs_list, scores_list, k):
+    if not docs_list:
+        return np.empty(0, np.int64), np.empty(0, np.float64)
+    docs = np.concatenate(docs_list).astype(np.int64)
+    scores = np.concatenate(scores_list)
+    uniq, inv = np.unique(docs, return_inverse=True)
+    tot = np.zeros(len(uniq))
+    np.add.at(tot, inv, scores)
+    order = np.lexsort((uniq, -tot))[:k]
+    return uniq[order], tot[order]
+
+
+def _check(docs_list, scores_list, k):
+    got_d, got_s = topk(*accumulate(docs_list, scores_list), k)
+    want_d, want_s = _reference(docs_list, scores_list, k)
+    assert got_d.dtype == np.int64
+    assert np.array_equal(got_d, want_d)
+    assert np.array_equal(got_s, want_s)
+
+
+def _term_lists(rng, n_terms, n_docs, lo=0, stride=1):
+    """Per-term posting lists: sorted unique doc ids, positive scores."""
+    docs_l, scores_l = [], []
+    for _ in range(n_terms):
+        n = int(rng.integers(1, n_docs + 1))
+        d = np.sort(rng.choice(n_docs, size=n, replace=False)) * stride + lo
+        docs_l.append(d.astype(np.int64))
+        scores_l.append(rng.random(len(d)) * 10.0)
+    return docs_l, scores_l
+
+
+@pytest.mark.parametrize("seed", range(20))
+def test_random_inputs_bit_identical(seed):
+    rng = np.random.default_rng(seed)
+    n_terms = int(rng.integers(1, 6))
+    n_docs = int(rng.integers(1, 3000))
+    lo = int(rng.integers(0, 1 << 40))
+    # strides up to 64 spread the ids past the dense guard on some seeds
+    stride = int(rng.integers(1, 65))
+    docs_l, scores_l = _term_lists(rng, n_terms, n_docs, lo, stride)
+    for k in (1, 10, 100):
+        _check(docs_l, scores_l, k)
+
+
+def test_all_equal_scores_ties_at_kth():
+    # every doc scores exactly the same: the doc_id tie-break alone decides,
+    # and the partition prefilter (n > 4k) must keep every tied candidate
+    rng = np.random.default_rng(1)
+    docs_l = [rng.permutation(5000).astype(np.int64), np.arange(0, 5000, 7)]
+    scores_l = [np.full(5000, 1.5), np.zeros(len(docs_l[1]))]
+    for k in (1, 10, 999):
+        _check(docs_l, scores_l, k)
+    d, _ = topk(*accumulate(docs_l, scores_l), 10)
+    assert d.tolist() == list(range(10))
+
+
+def test_k_larger_than_n():
+    rng = np.random.default_rng(2)
+    docs_l, scores_l = _term_lists(rng, 3, 20)
+    _check(docs_l, scores_l, 1000)
+
+
+def test_empty_inputs():
+    _check([], [], 10)
+    e_d, e_s = np.empty(0, np.int64), np.empty(0, np.float64)
+    _check([e_d], [e_s], 10)
+    _check([e_d, e_d], [e_s, e_s], 10)
+    d, s = topk(np.array([3, 1], np.int64), np.array([1.0, 2.0]), 0)
+    assert len(d) == 0 and len(s) == 0
+
+
+def test_single_list_returned_as_is():
+    d = np.array([4, 9, 17], np.int64)
+    s = np.array([0.5, 2.0, 1.0])
+    got_d, got_s = accumulate([d], [s])
+    assert got_d is d and got_s is s
+    _check([d], [s], 2)
+
+
+@pytest.mark.parametrize("extra", [0, 1])
+def test_dense_guard_both_branches(extra):
+    """n postings over a doc span of exactly max(8n, 4096) take the dense
+    bincount; one more doc of span takes the sort path. Both must match."""
+    n_half = 300  # n = 600 postings → guard = max(4800, 4096) = 4800
+    guard = max(8 * 2 * n_half, 4096)
+    lo = 10**9
+    rng = np.random.default_rng(3)
+    inner = np.sort(rng.choice(np.arange(1, guard - 1), 2 * n_half - 4, replace=False))
+    a = np.concatenate([[0], inner[: n_half - 2], [guard - 1 + extra]]) + lo
+    b = np.concatenate([[0], inner[n_half - 2 :], [guard - 1 + extra]]) + lo
+    docs_l = [a.astype(np.int64), b.astype(np.int64)]
+    scores_l = [rng.random(len(a)), rng.random(len(b))]
+    n = sum(map(len, docs_l))
+    assert n == 2 * n_half
+    assert int(docs_l[0].max() - docs_l[0].min()) + 1 == guard + extra
+    for k in (5, n):
+        _check(docs_l, scores_l, k)
+
+
+def test_zero_score_docs_kept():
+    # a dense accumulator must not mistake a zero sum for an absent doc
+    docs_l = [np.array([1, 2], np.int64), np.array([2, 3], np.int64)]
+    scores_l = [np.array([0.0, 1.0]), np.array([0.0, 0.0])]
+    _check(docs_l, scores_l, 10)
+    assert topk(*accumulate(docs_l, scores_l), 10)[0].tolist() == [2, 1, 3]

@@ -921,6 +921,25 @@ def test_kwic_fuzz_vs_python_oracle(spark, small_index):
 
 
 @pytest.mark.spark
+def test_postings_positions_prep_runs_no_job(spark, small_index):
+    """On a cached index the term id comes from the driver-side term map:
+    building the positions DataFrame (kwic's single-term path) submits
+    no Spark job; only executing it does."""
+    sc = spark.sparkContext
+    group = "postings-positions-prep"
+    sc.setJobGroup(group, "postings_positions prep")
+    try:
+        df = small_index.postings_positions("The")
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert df.count() > 0
+        # the group does see jobs that run under it
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.mark.spark
 def test_phrase_match_positions_consistent(spark, small_index):
     """with_positions=True returns the same doc set as the plain matcher
     and every anchor is a true phrase start (positions are sorted,
