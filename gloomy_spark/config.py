@@ -8,7 +8,7 @@ plus the new BM25/segment knobs mandated by BASELINE.json's north rule.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field, asdict
+from dataclasses import asdict, dataclass, field, fields
 
 
 @dataclass(frozen=True)
@@ -19,9 +19,6 @@ class BM25Config:
 
 @dataclass(frozen=True)
 class EngineConfig:
-    # n-gram formation (reference: gconf.go:73, index.go:30-34 MaxNgramSize=10)
-    ngram_sizes: tuple[int, ...] = (1, 2, 3)
-    max_ngram_size: int = 10
     # HAVING count >= min_ngram_freq (reference: conf-sample.json:11,
     # builder.go:199)
     min_ngram_freq: int = 4
@@ -34,8 +31,6 @@ class EngineConfig:
     # posting-segment block structure: docs per block; per-block max_score
     # powers block-max WAND skipping
     block_size: int = 128
-    # terms with df/N above this ratio get salted/str striped partitioning
-    salt_threshold_df: float = 0.05
     # store per-posting position lists in segments (needed for phrase
     # queries; BM25/WAND does not read them)
     store_positions: bool = True
@@ -43,17 +38,11 @@ class EngineConfig:
     # doc_bucket boundary so the query side can co-locate all query terms'
     # blocks for a doc range with a single groupBy(doc_bucket)
     doc_bucket_width: int = 1 << 20
-    # SPIMI spill-chunk analog (reference: conf-sample.json:13); in Spark this
-    # sizes Arrow batches / target rows per build partition
-    proc_chunk_size: int = 1_000_000
     # Arrow batch rows for the INVERTER stage only (doc rows in, heavy
     # numpy per batch). Small batches pipeline JVM tokenization with
     # python inversion and keep the sort keys cache-resident; measured at
     # 300k docs / 4 cores: 1M-row batches 32 s, 30k 18-23 s, 10k 13 s,
-    # 4k 10.3 s, 2k 10.4 s (knee ≈ 4k ≈ 1M tokens at avgdl 240). The
-    # WRITER stage keeps proc_chunk_size-row batches — its input is
-    # posting rows and its python work per batch is O(1), so there big
-    # batches win (the round-2 measurement that set 1M globally).
+    # 4k 10.3 s, 2k 10.4 s (knee ≈ 4k ≈ 1M tokens at avgdl 240).
     inverter_batch_rows: int = 4096
     # shuffle parallelism used by the build pipeline
     shuffle_partitions: int = 32
@@ -71,10 +60,13 @@ class EngineConfig:
 
     @staticmethod
     def from_json(s: str) -> "EngineConfig":
-        d = json.loads(s)
+        """Parse a saved config. Keys that are no longer fields (written
+        by an older version) are dropped, so old indexes still open."""
+        known = {f.name for f in fields(EngineConfig)}
+        d = {k: v for k, v in json.loads(s).items() if k in known}
         if "bm25" in d and isinstance(d["bm25"], dict):
             d["bm25"] = BM25Config(**d["bm25"])
-        for k in ("ngram_sizes", "stop_strings", "ignore_strings"):
+        for k in ("stop_strings", "ignore_strings"):
             if k in d:
                 d[k] = tuple(d[k])
         return EngineConfig(**d)

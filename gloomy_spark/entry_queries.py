@@ -250,23 +250,37 @@ def q_bm25_df(query: str, k: int):
     return fn, _bm25_sql(qterms, k)
 
 
-def _rounded_topk_rows(si, query: str, k: int) -> list:
-    """Exact top-k under (rounded score, doc_id) ordering: grow the exact-
-    score overfetch until the last fetched ROUNDED score strictly drops
-    below the k-th — only then can no unfetched doc enter via a rounded
-    tie + doc_id tie-break (a fixed overfetch is silently wrong when >m
-    docs tie at the rounded boundary)."""
+def _rounded_topk(fetch, k: int, group=lambda r: None) -> list:
+    """Exact top-k under (rounded score, doc_id) ordering, per ``group``
+    of the rows ``fetch(n)`` returns (top n by exact score, score rounded
+    to 4 places). The overfetch grows until every group's last fetched
+    ROUNDED score strictly drops below its k-th — only then can no
+    unfetched doc enter via a rounded tie + doc_id tie-break (a fixed
+    overfetch is silently wrong when >m docs tie at the rounded
+    boundary)."""
     m = 40
     while True:
-        rows = (
-            si.bm25_topk(query, k=k + m, use_blockmax=True)
-            .select("doc_id", F.round("score", 4).alias("score"))
-            .collect()
-        )
-        rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-        if len(rows) < k + m or (len(rows) >= k and rows[-1]["score"] < rows[k - 1]["score"]):
-            return rows[:k]
+        by_group: dict = {}
+        for r in fetch(k + m):
+            by_group.setdefault(group(r), []).append(r)
+        out = []
+        for rows in by_group.values():
+            rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
+            if len(rows) >= k + m and rows[-1]["score"] >= rows[k - 1]["score"]:
+                break
+            out.extend(rows[:k])
+        else:
+            return out
         m *= 4
+
+
+def _rounded_topk_rows(si, query: str, k: int) -> list:
+    return _rounded_topk(
+        lambda n: si.bm25_topk(query, k=n, use_blockmax=True)
+        .select("doc_id", F.round("score", 4).alias("score"))
+        .collect(),
+        k,
+    )
 
 
 def q_bm25_wand(query: str, k: int):
@@ -294,20 +308,13 @@ def q_bm25_filtered(query: str, k: int, attr: str, values: list[str]):
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         si = _index_for(spark, sf_dir)
-        # same rounded-tie overfetch contract as _rounded_topk_rows
-        m = 40
-        while True:
-            rows = (
-                si.bm25_topk_filtered(query, k + m, attr, values)
-                .select("doc_id", F.round("score", 4).alias("score"))
-                .collect()
-            )
-            rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-            if len(rows) < k + m or (
-                len(rows) >= k and rows[-1]["score"] < rows[k - 1]["score"]
-            ):
-                return spark.createDataFrame(rows[:k], "doc_id long, score double")
-            m *= 4
+        rows = _rounded_topk(
+            lambda n: si.bm25_topk_filtered(query, n, attr, values)
+            .select("doc_id", F.round("score", 4).alias("score"))
+            .collect(),
+            k,
+        )
+        return spark.createDataFrame(rows, "doc_id long, score double")
 
     terms_values = ", ".join(f"('{t}')" for t in qterms)
     sql = f"""WITH {TOKS_CTE},
@@ -343,29 +350,14 @@ def q_bm25_batch(queries: list[str], k: int):
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         si = _index_for(spark, sf_dir)
-        m = 40
-        while True:
-            got = (
-                si.bm25_topk_batch(queries, k=k + m)
-                .select("query_id", "doc_id", F.round("score", 4).alias("score"))
-                .collect()
-            )
-            by_q: dict[int, list] = {}
-            for r in got:
-                by_q.setdefault(r["query_id"], []).append(r)
-            ok = True
-            out = []
-            for qi in by_q:
-                rows = sorted(by_q[qi], key=lambda r: (-r["score"], r["doc_id"]))
-                if len(rows) >= k + m and rows[-1]["score"] >= rows[k - 1]["score"]:
-                    ok = False
-                    break
-                out.extend(rows[:k])
-            if ok:
-                return spark.createDataFrame(
-                    out, "query_id int, doc_id long, score double"
-                )
-            m *= 4
+        rows = _rounded_topk(
+            lambda n: si.bm25_topk_batch(queries, k=n)
+            .select("query_id", "doc_id", F.round("score", 4).alias("score"))
+            .collect(),
+            k,
+            group=lambda r: r["query_id"],
+        )
+        return spark.createDataFrame(rows, "query_id int, doc_id long, score double")
 
     subqueries = []
     for qi, q in enumerate(queries):

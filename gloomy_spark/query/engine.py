@@ -4,23 +4,26 @@ Reference parity (service/search.go:174-200 dispatch; index.go:291-306
 first-token lookup; README query dialect) re-expressed over columnar
 tables, plus the BM25/block-max layer mandated by BASELINE.json.
 
-Distributed scoring plan (bm25_topk):
+Distributed scoring plan (bm25_topk, bm25_topk_filtered, phrase_match):
     segments.where(term_id IN query terms)       ── parquet pushdown; idf
-                                                    attached in python
-      repartition(n, doc_bucket) | coalesce(1)   ── all of a bucket's blocks
+      [∪ tagged allowed-doc rows (facets)]          attached in python
+      repartition(n, doc_bucket) | coalesce(1)   ── all of a bucket's rows
                                                     in one task; n from the
                                                     query's posting volume
-      mapInArrow(_partition_scorer)              ── per bucket: block-max
-                                                    sweep, one python call
-                                                    per task
+      mapInArrow(_per_bucket_arrow)              ── per bucket: one bulk
+                                                    decode, block-max sweep;
+                                                    one python call per task
       orderBy(score desc, doc_id asc) LIMIT k    ── TakeOrderedAndProject
 
-The sweep is exact: piecewise-constant upper bounds come from block
-metadata only (first_doc/last_doc/max_score), and blocks are decoded in
-upper-bound order until the k-th best exact score exceeds the next
-segment's bound. The batch scorer (grouped applyInPandas over a persisted
-bucket-partitioned view), the facet scorer (cogroup with the allowed
-docs) and driver-local ``bm25_serve`` share the numerics in
+Every posting decode goes through ``decode_posting_blocks_bulk`` (one
+call per bucket or Arrow batch, never one per block). The sweep is
+exact: piecewise-constant upper bounds come from block metadata only
+(first_doc/last_doc/max_score), and blocks are scored in upper-bound
+order until the k-th best exact score exceeds the next segment's bound.
+Faceted search runs in the same shape, with the allowed docs unioned
+into the blocks' exchange. Only the batch scorer keeps a grouped pandas
+UDF (over a persisted bucket-partitioned view). Every BM25 scorer,
+driver-local ``bm25_serve`` included, shares the numerics in
 ``query/kernel.py``: per-doc accumulation and exact top-k.
 """
 
@@ -34,14 +37,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..codecs import (
-    decode_position_lists,
-    decode_posting_block,
-    decode_posting_blocks_bulk,
-)
+from ..codecs import decode_position_lists, decode_posting_blocks_bulk
 from ..config import EngineConfig
 from ..index_store import IndexStore, Manifest
 from ..textnorm import tokenize
@@ -49,6 +49,7 @@ from .kernel import accumulate, topk
 from .regexparser import regex_to_prefixes
 
 TOPK_SCHEMA = "doc_id long, score double"
+_TOPK_ARROW = pa.schema([("doc_id", pa.int64()), ("score", pa.float64())])
 
 # ---- driver-side replica of Spark's shuffle hash (Murmur3_x86_32) ----
 # Spark's hashpartitioning places a row at pmod(hash(cols, seed=42), n);
@@ -109,7 +110,7 @@ def _spark_hash_bs(b: int, s: int) -> int:
     is folded out of the cached partitioning expression, which then no
     longer satisfies the scorer's clustering requirement and re-inserts
     the very exchange the view exists to remove — verified empirically
-    on persisted repartition + applyInPandas)."""
+    on a persisted repartition under the grouped batch scorer)."""
     h = _spark_hash_long(b, 42)
     h = _spark_hash_int(s, h)
     return h - (1 << 32) if h >= (1 << 31) else h
@@ -164,129 +165,94 @@ def _score_arrays(tf: np.ndarray, dl: np.ndarray, idf: np.ndarray, p: _Bm25Param
     return idf * (tf * (p.k1 + 1.0)) / (tf + p.k1 * (1.0 - p.b + p.b * (dl / p.avgdl)))
 
 
-def _bucket_scorer(p: _Bm25Params):
-    """applyInPandas scorer for one doc_bucket: exact top-k with block-max
-    pruning. Input rows = posting blocks of every query term overlapping
-    this bucket, with per-term idf joined in."""
+def _decode_blocks(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Every posting block in ``pdf`` (rows in block order) decoded in one
+    bulk pass → (doc_ids, tfs, dls); block i is the slice
+    ``offsets[i]:offsets[i+1]`` with ``offsets = [0, cumsum(n_docs)]``.
+    One call per frame instead of one per block: a per-block decode pays
+    a fixed numpy dispatch cost that dominates blocks of a few postings."""
+    return decode_posting_blocks_bulk(
+        pdf["docs"].tolist(), pdf["tfs"].tolist(), pdf["dls"].tolist(),
+        pdf["n_docs"].to_numpy(np.int64),
+    )
 
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_blocks = len(pdf)
-        if n_blocks == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        first = pdf["first_doc"].to_numpy(np.int64)
-        last = pdf["last_doc"].to_numpy(np.int64)
-        bmax = pdf["max_score"].to_numpy(np.float64)
-        # column arrays once — pdf.iloc per block costs ~50µs of pandas
-        # machinery, which dominates the varint decode at many blocks
-        docs_a = pdf["docs"].to_numpy()
-        tfs_a = pdf["tfs"].to_numpy()
-        dls_a = pdf["dls"].to_numpy()
-        nd_a = pdf["n_docs"].to_numpy()
-        idf_a = pdf["idf"].to_numpy(np.float64)
 
-        def decode_block(i: int) -> tuple[np.ndarray, np.ndarray]:
-            d, tf, dl = decode_posting_block(
-                docs_a[i], tfs_a[i], dls_a[i], int(nd_a[i])
-            )
-            s = _score_arrays(
-                tf.astype(np.float64), dl.astype(np.float64),
-                np.float64(idf_a[i]), p,
-            )
-            return d, s
+def _bucket_scorer(p: _Bm25Params, idf_by_tid: dict[int, float]):
+    """Scorer for one doc_bucket: exact top-k over the bucket's posting
+    blocks (rows carrying term_id, first_doc, last_doc, max_score and the
+    block payload) → (doc_id, score) frame. ``allow``, an array of doc
+    ids, restricts the candidates (facets); block max_score stays a
+    valid upper bound under that restriction, so the sweep stays exact."""
 
+    def score(blocks: pd.DataFrame, allow: np.ndarray | None = None) -> pd.DataFrame:
+        n = blocks["n_docs"].to_numpy(np.int64)
+        d, tf, dl = _decode_blocks(blocks)
+        idf = np.repeat(blocks["term_id"].map(idf_by_tid).to_numpy(np.float64), n)
+        offsets = np.concatenate(([0], np.cumsum(n)))
+        if allow is not None:
+            # not assume_unique: d holds a doc once per query term
+            keep = np.isin(d, allow)
+            d, tf, dl, idf = d[keep], tf[keep], dl[keep], idf[keep]
+            offsets = np.concatenate(([0], np.cumsum(keep)))[offsets]
+        s = _score_arrays(tf.astype(np.float64), dl.astype(np.float64), idf, p)
+        # per-block slices, in block order, so every doc's postings are
+        # summed in the same order by both paths
+        cuts = offsets[1:-1]
+        docs_l, scores_l = np.split(d, cuts), np.split(s, cuts)
         if not p.use_blockmax:
-            return _exhaustive_topk(n_blocks, decode_block, p.k)
-        return _blockmax_sweep(first, last, bmax, decode_block, p)
+            return _exhaustive_topk(docs_l, scores_l, p.k)
+        return _blockmax_sweep(
+            blocks["first_doc"].to_numpy(np.int64),
+            blocks["last_doc"].to_numpy(np.int64),
+            blocks["max_score"].to_numpy(np.float64),
+            docs_l, scores_l, p,
+        )
 
     return score
 
 
 def _per_bucket_arrow(fn, arrow_schema):
-    """mapInArrow wrapper running a per-bucket pandas function over every
-    doc_bucket group in the task's partition (see _partition_scorer for
-    why: one python round trip per TASK, no Sort operator, vs one per
-    bucket under groupBy().applyInPandas)."""
+    """mapInArrow driver: one hash-partitioned task runs ``fn`` over
+    every doc_bucket group of its partition in a single python call. The
+    grouped pandas-UDF shape paid a Sort below its exchange plus one
+    grouped-protocol round trip per bucket (~100 buckets/query on the
+    bench index — measured ~0.7 s of a 0.85 s single-query job in that
+    stage); here the rows arrive as one Arrow stream per task and bucket
+    grouping is a pandas groupby, which keeps each bucket's rows in
+    arrival order. The output is cast to ``arrow_schema`` explicitly."""
 
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         bl = [b for b in batches if b.num_rows]
         if not bl:
             return
         pdf = pa.Table.from_batches(bl).to_pandas()
-        outs = []
-        for _, g in pdf.groupby("doc_bucket", sort=False):
-            r = fn(g)
-            if len(r):
-                outs.append(r)
-        if not outs:
-            return
-        out = pd.concat(outs, ignore_index=True)
-        yield pa.RecordBatch.from_pandas(
-            out, schema=arrow_schema, preserve_index=False
-        )
+        outs = [r for _, g in pdf.groupby("doc_bucket", sort=False) if len(r := fn(g))]
+        if outs:
+            yield pa.RecordBatch.from_pandas(
+                pd.concat(outs, ignore_index=True),
+                schema=arrow_schema, preserve_index=False,
+            )
 
     return run
 
 
-def _partition_scorer(p: _Bm25Params, idf_by_tid: dict[int, float] | None = None):
-    """mapInArrow scorer: one hash-partitioned task scores MANY doc
-    buckets in a single python call. The groupBy().applyInPandas shape
-    paid a Sort below its exchange plus one grouped-protocol round trip
-    per bucket (~100 buckets/query on the bench index — measured ~0.7 s
-    of a 0.85 s single-query job in that stage); here the same rows
-    arrive as one Arrow stream per task and bucket grouping is a pandas
-    groupby (guide §4.2). Per-bucket numerics are EXACTLY
-    _bucket_scorer's — same decode, same sweep, same heap — so scores
-    are bit-identical.
-
-    When ``idf_by_tid`` is given, rows arrive with ``term_id`` and the
-    per-term idf is attached HERE (same doubles, same scoring) instead
-    of as a literal map expression in the plan — per-query literals
-    force a fresh whole-stage-codegen compile for every query, a fixed
-    ~0.1 s/query the python-side map avoids (measured 4.8 → 3.9 s over
-    10 warm queries)."""
-    score = _bucket_scorer(p)
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        bl = [b for b in batches if b.num_rows]
-        if not bl:
-            return
-        pdf = pa.Table.from_batches(bl).to_pandas()
-        if idf_by_tid is not None:
-            pdf["idf"] = pdf["term_id"].map(idf_by_tid)
-        outs = []
-        for _, g in pdf.groupby("doc_bucket", sort=False):
-            r = score(g)
-            if len(r):
-                outs.append(r)
-        if not outs:
-            return
-        out = pd.concat(outs, ignore_index=True)
-        yield pa.RecordBatch.from_pandas(out, preserve_index=False)
-
-    return run
-
-
-def _exhaustive_topk(n_blocks: int, decode_block, k: int) -> pd.DataFrame:
-    """Brute-force DAAT: decode everything, accumulate, top-k."""
-    decoded = [decode_block(i) for i in range(n_blocks)]
-    d, s = topk(*accumulate([d for d, _ in decoded], [s for _, s in decoded]), k)
+def _exhaustive_topk(docs_l: list, scores_l: list, k: int) -> pd.DataFrame:
+    """Brute-force DAAT over per-block (doc_ids, scores): accumulate, top-k."""
+    d, s = topk(*accumulate(docs_l, scores_l), k)
     return pd.DataFrame({"doc_id": d, "score": s})
 
 
 def _blockmax_sweep(
-    first: np.ndarray, last: np.ndarray, bmax: np.ndarray, decode_block, p: _Bm25Params
+    first: np.ndarray, last: np.ndarray, bmax: np.ndarray,
+    docs_l: list, scores_l: list, p: _Bm25Params,
 ) -> pd.DataFrame:
     """Exact block-max top-k sweep over one bucket's posting blocks.
 
-    ``decode_block(i) -> (doc_ids, scores)`` may return FEWER docs than
-    the block holds (e.g. a facet allow-mask applied after decode): block
-    metadata bounds stay valid upper bounds because filtering only
-    removes candidates — it can never raise a true score above
-    max_score. The sweep stays rank-exact in that case."""
+    ``docs_l[i], scores_l[i]`` are block i's decoded (doc_ids, scores);
+    they may hold FEWER docs than the block (a facet allow-mask applied
+    after decode): block metadata bounds stay valid upper bounds because
+    filtering only removes candidates — it can never raise a true score
+    above max_score. The sweep stays rank-exact in that case."""
     n_blocks = len(first)
     # piecewise-constant upper bound over doc ranges from metadata only
     ev_pos = np.concatenate([first, last + 1])
@@ -317,7 +283,6 @@ def _blockmax_sweep(
     seg_starts, seg_ends, seg_ub = seg_starts[live], seg_ends[live], seg_ub[live]
     ub_order = np.argsort(-seg_ub, kind="stable")
 
-    decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
     heap: list[tuple[float, int]] = []  # min-heap of (score, -doc_id)
     theta = -np.inf
     scored_docs: set[int] = set()
@@ -330,15 +295,13 @@ def _blockmax_sweep(
         lo, hi = seg_starts[si], seg_ends[si]
         # all blocks overlapping [lo, hi)
         blk = np.nonzero((first < hi) & (last >= lo))[0]
-        docs_l, scores_l = [], []
+        seg_docs, seg_scores = [], []
         for i in blk:
-            if i not in decoded:
-                decoded[i] = decode_block(int(i))
-            d, s = decoded[i]
+            d, s = docs_l[i], scores_l[i]
             m = (d >= lo) & (d < hi)
-            docs_l.append(d[m])
-            scores_l.append(s[m])
-        uniq, tot = accumulate(docs_l, scores_l)
+            seg_docs.append(d[m])
+            seg_scores.append(s[m])
+        uniq, tot = accumulate(seg_docs, seg_scores)
         for d, s in zip(uniq.tolist(), tot.tolist()):
             if d in scored_docs:
                 continue
@@ -434,6 +397,29 @@ class SearchIndex:
                 1, min(cap, -(-est_postings // self._SCORER_MIN_POSTINGS))
             )
         return cap
+
+    def _per_bucket(
+        self, rows: DataFrame, est_postings: int | None, fn, arrow_schema, schema: str
+    ) -> DataFrame:
+        """The per-bucket plan shared by the distributed scorers:
+        hash-repartition ``rows`` by doc_bucket (every row of a bucket
+        lands in one task; no Sort) and run ``fn`` over each bucket
+        through one mapInArrow call per task (_per_bucket_arrow).
+        Partition count is DATA-derived (guide §2.2, _scorer_parts): tiny
+        queries run 1-2 python tasks while head queries fan out to the
+        full shuffle width — a fixed count of near-empty python tasks
+        cost ~0.45 s/query at 64 partitions vs ~0.25 s at the derived
+        width on the bench index. One partition trivially co-locates
+        every bucket, so a narrow coalesce replaces the exchange outright
+        (guide §2.4 "remove shuffles") — repartition(1) would still
+        shuffle-write and -read every row."""
+        n_parts = self._scorer_parts(est_postings)
+        rows = (
+            rows.coalesce(1)
+            if n_parts == 1
+            else rows.repartition(n_parts, "doc_bucket")
+        )
+        return rows.mapInArrow(_per_bucket_arrow(fn, arrow_schema), schema)
 
     def cache(self) -> "SearchIndex":
         self.terms.cache().count()
@@ -641,10 +627,10 @@ class SearchIndex:
     # -------------------------------------------------------- postings --
     def postings(self, term: str) -> DataFrame:
         """Decoded posting list of one term: (doc_id, tf, dl)."""
-        tid_rows = self.search_exact(term).select("term_id").collect()
-        if not tid_rows:
+        tids = self._term_ids([term.lower()])
+        if tids is None:
             return self.spark.createDataFrame([], "doc_id long, tf int, dl int")
-        tid = tid_rows[0]["term_id"]
+        (tid,) = tids.values()
         # prune to the block payload columns the decoder touches — the
         # scan must not read max_score/sum_tf/doc-range bytes it won't use
         segs = self.segments.where(F.col("term_id") == tid).select(
@@ -652,16 +638,11 @@ class SearchIndex:
         )
 
         def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # per-BLOCK loop (1/block_size of posting count); to_dict avoids
-            # iterrows' per-cell Series boxing
             for pdf in batches:
-                for row in pdf.to_dict("records"):
-                    d, tf, dl = decode_posting_block(
-                        row["docs"], row["tfs"], row["dls"], int(row["n_docs"])
-                    )
-                    yield pd.DataFrame(
-                        {"doc_id": d, "tf": tf.astype(np.int32), "dl": dl.astype(np.int32)}
-                    )
+                d, tf, dl = _decode_blocks(pdf)
+                yield pd.DataFrame(
+                    {"doc_id": d, "tf": tf.astype(np.int32), "dl": dl.astype(np.int32)}
+                )
 
         return segs.mapInPandas(decode, "doc_id long, tf int, dl int")
 
@@ -690,18 +671,19 @@ class SearchIndex:
 
         def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                for row in pdf.to_dict("records"):
-                    d, tf, dl = decode_posting_block(
-                        row["docs"], row["tfs"], row["dls"], int(row["n_docs"])
-                    )
-                    yield pd.DataFrame(
-                        {
-                            "term": term_of[int(row["term_id"])],
-                            "doc_id": d,
-                            "tf": tf.astype(np.int32),
-                            "dl": dl.astype(np.int32),
-                        }
-                    )
+                d, tf, dl = _decode_blocks(pdf)
+                term = np.repeat(
+                    pdf["term_id"].map(term_of).to_numpy(),
+                    pdf["n_docs"].to_numpy(np.int64),
+                )
+                yield pd.DataFrame(
+                    {
+                        "term": term,
+                        "doc_id": d,
+                        "tf": tf.astype(np.int32),
+                        "dl": dl.astype(np.int32),
+                    }
+                )
 
         return segs.mapInPandas(decode, "term string, doc_id long, tf int, dl int")
 
@@ -727,19 +709,15 @@ class SearchIndex:
 
         def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                for row in pdf.to_dict("records"):
-                    n = int(row["n_docs"])
-                    d, tf, _dl = decode_posting_block(
-                        row["docs"], row["tfs"], row["dls"], n
-                    )
-                    pos = decode_position_lists(row["pos_counts"], row["positions"], n)
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": d,
-                            "tf": tf.astype(np.int32),
-                            "positions": [p.astype(np.int32) for p in pos],
-                        }
-                    )
+                d, tf, _dl = _decode_blocks(pdf)
+                pos = [
+                    p.astype(np.int32)
+                    for c, b, n in zip(pdf["pos_counts"], pdf["positions"], pdf["n_docs"])
+                    for p in decode_position_lists(c, b, int(n))
+                ]
+                yield pd.DataFrame(
+                    {"doc_id": d, "tf": tf.astype(np.int32), "positions": pos}
+                )
 
         return segs.mapInPandas(decode, "doc_id long, tf int, positions array<int>")
 
@@ -862,14 +840,15 @@ class SearchIndex:
                 return empty  # a phrase term has no postings in this bucket
 
             # (a) doc-set intersection, rarest term first — positions
-            # unread; ONE bulk varint pass per term (see
-            # decode_posting_blocks_bulk), not one per 128-posting block
+            # unread; ONE bulk decode per term, whose doc ids (block j is
+            # offs[j]:offs[j+1]) step (b) reuses
             doc_sets: dict[int, np.ndarray] = {}
+            offs: dict[int, np.ndarray] = {}
             for tid, g in groups.items():
-                doc_sets[tid] = decode_posting_blocks_bulk(
-                    g["docs"].tolist(), g["tfs"].tolist(),
-                    g["dls"].tolist(), g["n_docs"].tolist(),
-                )[0]
+                doc_sets[tid] = _decode_blocks(g)[0]
+                offs[tid] = np.concatenate(
+                    ([0], np.cumsum(g["n_docs"].to_numpy(np.int64)))
+                )
             by_rarity = sorted(doc_sets, key=lambda t: len(doc_sets[t]))
             cand = doc_sets[by_rarity[0]]
             for tid in by_rarity[1:]:
@@ -882,17 +861,17 @@ class SearchIndex:
             lo_c, hi_c = int(cand[0]), int(cand[-1])
             for tid, g in groups.items():
                 docpos: dict[int, np.ndarray] = {}
-                for r in g.to_dict("records"):
+                o = offs[tid]
+                for j, r in enumerate(g.to_dict("records")):
                     if r["last_doc"] < lo_c or r["first_doc"] > hi_c:
                         continue
-                    n = int(r["n_docs"])
-                    d, _tf, _dl = decode_posting_block(
-                        r["docs"], r["tfs"], r["dls"], n
-                    )
+                    d = doc_sets[tid][o[j] : o[j + 1]]
                     hit = np.isin(d, cand, assume_unique=True)
                     if not hit.any():
                         continue
-                    pos = decode_position_lists(r["pos_counts"], r["positions"], n)
+                    pos = decode_position_lists(
+                        r["pos_counts"], r["positions"], int(r["n_docs"])
+                    )
                     for i in np.nonzero(hit)[0]:
                         docpos[int(d[i])] = pos[i].astype(np.int64)
                 pos_by_tid[tid] = docpos
@@ -928,12 +907,7 @@ class SearchIndex:
                 res["positions"] = pd.Series(out_pos, dtype=object)
             return res
 
-        # doc_buckets are disjoint doc ranges → no cross-bucket duplicates.
-        # Same repartition+mapInArrow shape as bm25_topk (no Sort, one
-        # python round trip per task, width derived from the phrase
-        # terms' dictionary-known posting volume).
-        import pyarrow as pa
-
+        # doc_buckets are disjoint doc ranges → no cross-bucket duplicates
         est = (
             sum(self._term_df.get(t, 0) for t in terms)
             if self._term_map is not None
@@ -942,15 +916,7 @@ class SearchIndex:
         fields = [pa.field("doc_id", pa.int64())]
         if with_positions:
             fields.append(pa.field("positions", pa.list_(pa.int32())))
-        n_parts = self._scorer_parts(est)
-        segs = (
-            segs.coalesce(1)  # one task holds every bucket — no exchange
-            if n_parts == 1
-            else segs.repartition(n_parts, "doc_bucket")
-        )
-        return segs.mapInArrow(
-            _per_bucket_arrow(match, pa.schema(fields)), schema
-        )
+        return self._per_bucket(segs, est, match, pa.schema(fields), schema)
 
     def kwic(self, query: str, docs: DataFrame, width: int = 3) -> DataFrame:
         """Keyword-in-context concordance: every occurrence of ``query``
@@ -1115,81 +1081,66 @@ class SearchIndex:
         )
 
     # ------------------------------------------------------------ BM25 --
-    def query_terms(self, query: str) -> DataFrame:
-        toks = list(dict.fromkeys(tokenize(query, self.cfg)))
-        return self.terms.where(F.col("term").isin(toks)).select("term_id", "idf")
-
-    def bm25_topk(self, query: str, k: int = 10, use_blockmax: bool = True) -> DataFrame:
-        """Top-k BM25: score desc, doc_id asc tie-break — rank-identical
-        with the exhaustive oracle."""
-        p = _Bm25Params(
+    def _bm25_params(self, k: int, use_blockmax: bool) -> _Bm25Params:
+        return _Bm25Params(
             k1=self.cfg.bm25.k1,
             b=self.cfg.bm25.b,
             avgdl=self.manifest.avgdl,
             k=k,
             use_blockmax=use_blockmax,
         )
-        est_postings: int | None = None
-        idf_by_tid: dict[int, float] | None = None
+
+    def _query_blocks(
+        self, query: str
+    ) -> tuple[DataFrame, dict[int, float], int] | None:
+        """Posting blocks of the query's indexed terms (term_id pushed
+        into the scan), idf by term_id and the query's posting volume
+        (Σ df, which sizes the scorer shuffle); None when no query term
+        is indexed. Terms resolve on the driver (the cached term map, or
+        one dictionary lookup). idf is attached inside the python scorer,
+        not as a literal map in the plan: per-query literals force a
+        fresh whole-stage-codegen compile for every query, a fixed
+        ~0.1 s/query the python-side map avoids (measured 4.8 → 3.9 s
+        over 10 warm queries)."""
+        toks = list(dict.fromkeys(tokenize(query, self.cfg)))
         if self._term_map is not None:
-            # cached-dictionary fast path: term lookup on the driver; idf
-            # attached inside the python scorer (no terms scan AND no
-            # per-query literal expressions in the plan — see
-            # _partition_scorer)
-            toks = [
-                t
-                for t in dict.fromkeys(tokenize(query, self.cfg))
+            hits = [
+                (*self._term_map[t], self._term_df.get(t, 0))
+                for t in toks
                 if t in self._term_map
             ]
-            if not toks:
-                return self.spark.createDataFrame([], TOPK_SCHEMA)
-            est_postings = sum(self._term_df.get(t, 0) for t in toks)
-            ids = [self._term_map[t][0] for t in toks]
-            idf_by_tid = {
-                int(self._term_map[t][0]): float(self._term_map[t][1])
-                for t in toks
-            }
-            # NOTE: the single-query path deliberately does NOT use the
-            # persisted serving view — measured SLOWER (0.45 s → 0.85 s at
-            # 10 buckets / local[4]): a lone query leaves most bucket
-            # partitions empty after the term filter, yet each still runs
-            # a grouped-python task (~90 ms protocol overhead apiece),
-            # while the pushed-down parquet scan reads only the query's
-            # term blocks and AQE coalesces the tiny shuffle to 1-2 tasks.
-            # The view wins exactly when most partitions carry real work —
-            # the many-query batch path below.
-            cand = self.segments.where(_in_longs("term_id", ids)).select(
-                "doc_bucket", "term_id", "first_doc", "last_doc", "n_docs",
-                "max_score", "docs", "tfs", "dls",
-            )
+        elif toks:
+            hits = self.terms.where(_in_strings("term", toks)).select(
+                "term_id", "idf", "df"
+            ).collect()
         else:
-            qterms = self.query_terms(query)
-            cand = self.segments.join(F.broadcast(qterms), "term_id").select(
-                "doc_bucket", "first_doc", "last_doc", "n_docs", "max_score",
-                "docs", "tfs", "dls", "idf",
-            )
-        # hash-repartition by doc_bucket + mapInArrow instead of
-        # groupBy().applyInPandas: same co-location guarantee (all of a
-        # bucket's blocks land in one task), no Sort operator, one python
-        # round trip per TASK instead of per bucket. Partition count is
-        # DATA-derived (guide §2.2): the dictionary states the query's
-        # posting volume up front, so tiny queries run 1-2 python tasks
-        # while head queries fan out to the full shuffle width — a fixed
-        # count of near-empty python tasks cost ~0.45 s/query at 64
-        # partitions vs ~0.25 s at the derived width on the bench index.
-        n_parts = self._scorer_parts(est_postings)
-        # n_parts == 1 trivially co-locates every bucket in the one task,
-        # so a narrow coalesce replaces the exchange outright (guide §2.4
-        # "remove shuffles") — repartition(1) would still shuffle-write
-        # and -read every candidate block.
-        cand = (
-            cand.coalesce(1)
-            if n_parts == 1
-            else cand.repartition(n_parts, "doc_bucket")
+            hits = []
+        if not hits:
+            return None
+        idf_by_tid = {int(tid): float(idf) for tid, idf, _ in hits}
+        blocks = self.segments.where(_in_longs("term_id", idf_by_tid)).select(
+            "doc_bucket", "term_id", "first_doc", "last_doc", "n_docs",
+            "max_score", "docs", "tfs", "dls",
         )
-        per_bucket = cand.mapInArrow(
-            _partition_scorer(p, idf_by_tid), TOPK_SCHEMA
-        )
+        return blocks, idf_by_tid, sum(int(df) for *_, df in hits)
+
+    def bm25_topk(self, query: str, k: int = 10, use_blockmax: bool = True) -> DataFrame:
+        """Top-k BM25: score desc, doc_id asc tie-break — rank-identical
+        with the exhaustive oracle.
+
+        The single-query path deliberately does NOT use the persisted
+        serving view — measured SLOWER (0.45 s → 0.85 s at 10 buckets /
+        local[4]): a lone query leaves most bucket partitions empty after
+        the term filter, yet each still runs a python task (~90 ms
+        protocol overhead apiece), while the pushed-down parquet scan
+        reads only the query's term blocks. The view wins exactly when
+        most partitions carry real work — the many-query batch path."""
+        found = self._query_blocks(query)
+        if found is None:
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
+        blocks, idf_by_tid, est = found
+        score = _bucket_scorer(self._bm25_params(k, use_blockmax), idf_by_tid)
+        per_bucket = self._per_bucket(blocks, est, score, _TOPK_ARROW, TOPK_SCHEMA)
         return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     # facet-aware block-max (r4 verdict next #4): inside a bucket the
@@ -1197,7 +1148,7 @@ class SearchIndex:
     # fill quickly (sparse facets leave θ at −inf while the sweep decodes
     # everything the exhaustive path would, plus sweep overhead) and
     # there are enough blocks for pruning to skip any. Density is
-    # |allowed ∩ bucket| / bucket_width, known exactly per cogroup.
+    # |allowed ∩ bucket| / bucket_width, known exactly per bucket.
     _FACET_SWEEP_MIN_DENSITY = 0.05
     _FACET_SWEEP_MIN_BLOCKS = 8
 
@@ -1211,19 +1162,19 @@ class SearchIndex:
         collection statistics (the conventional faceted-search contract;
         scores equal the unfiltered scores of the surviving docs).
 
-        Scale shape: the allowed doc set comes from ONE pushed-down
-        docs-dimension scan (a dictionary-encoded parquet column filter
-        — PushedFilters, no corpus scan), bucketed by the same
-        doc_bucket as the segments, and COGROUPED with the query's
-        posting blocks: one shuffle per side, and inside each bucket the
-        scorer restricts decoded postings to the allowed ids before
-        accumulation.
+        Scale shape: bm25_topk's plan with the allowed doc set riding
+        along. The allowed docs come from ONE pushed-down docs-dimension
+        scan (a dictionary-encoded parquet column filter — PushedFilters,
+        no corpus scan), bucketed by the same doc_bucket as the segments
+        and unioned, tagged, into the query blocks' doc_bucket exchange;
+        inside each bucket the scorer restricts decoded postings to the
+        allowed ids before accumulation.
 
         ``use_blockmax=None`` (default) picks PER BUCKET between the
         exhaustive DAAT pass and a facet-aware block-max sweep: block
         max_score stays a valid upper bound under filtering (removal only
         lowers true scores), so the sweep is rank-exact with the
-        allow-mask folded into block decode; it engages when the bucket's
+        allow-mask applied after decode; it engages when the bucket's
         allowed-doc density and block count clear the thresholds above.
         Pass True/False to force one path (the differential test does)."""
         # attr arrives unvalidated from /bm25?filter=attr:v1,… — reject
@@ -1235,79 +1186,43 @@ class SearchIndex:
                 f"unknown facet attribute {attr!r}; "
                 f"available: {sorted(self.docs.columns)}"
             )
-        p = _Bm25Params(
-            k1=self.cfg.bm25.k1,
-            b=self.cfg.bm25.b,
-            avgdl=self.manifest.avgdl,
-            k=k,
-            use_blockmax=bool(use_blockmax),
-        )
-        qterms = self.query_terms(query)
-        cand = self.segments.join(F.broadcast(qterms), "term_id").select(
-            "doc_bucket", "first_doc", "last_doc", "n_docs", "max_score",
-            "docs", "tfs", "dls", "idf",
-        )
+        found = self._query_blocks(query)
+        if found is None:
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
+        blocks, idf_by_tid, est = found
         w = int(self.cfg.doc_bucket_width)
-        # exact int64 floor division (numpy // semantics, toward −∞) —
-        # float floor() would lose precision past 2^53
-        bucket = F.expr(
-            f"(doc_id div {w}) - (CASE WHEN doc_id < 0 "
-            f"AND doc_id % {w} != 0 THEN 1 ELSE 0 END)"
+        # Allowed-doc rows carry their doc id in first_doc/last_doc and
+        # are tagged by n_docs = 0 (no posting block is empty). Every
+        # integer column is filled: a null would make pandas read it as
+        # float64, which rounds doc ids past 2^53. The bucket is exact
+        # int64 floor division (numpy // semantics, toward −∞).
+        allowed = self.docs.where(_in_strings(attr, list(values))).selectExpr(
+            f"(doc_id div {w}) - (CASE WHEN doc_id < 0 AND doc_id % {w} != 0 "
+            "THEN 1 ELSE 0 END) AS doc_bucket",
+            "doc_id AS first_doc", "doc_id AS last_doc",
+            "0 AS n_docs", "-1L AS term_id",
         )
-        allowed = (
-            self.docs.where(_in_strings(attr, list(values)))
-            .select("doc_id", bucket.alias("doc_bucket"))
+        sweep_score, full_score = (
+            _bucket_scorer(self._bm25_params(k, sweep), idf_by_tid)
+            for sweep in (True, False)
         )
-
-        force = use_blockmax
-        min_density = self._FACET_SWEEP_MIN_DENSITY
+        min_allowed = self._FACET_SWEEP_MIN_DENSITY * w
         min_blocks = self._FACET_SWEEP_MIN_BLOCKS
 
-        def score(cand_pdf: pd.DataFrame, allow_pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({"doc_id": [], "score": []})
-            n_blocks = len(cand_pdf)
-            if not n_blocks or not len(allow_pdf):
-                return empty
-            allow = np.sort(allow_pdf["doc_id"].to_numpy(np.int64))
-            first = cand_pdf["first_doc"].to_numpy(np.int64)
-            last = cand_pdf["last_doc"].to_numpy(np.int64)
-            bmax = cand_pdf["max_score"].to_numpy(np.float64)
-            docs_a = cand_pdf["docs"].to_numpy()
-            tfs_a = cand_pdf["tfs"].to_numpy()
-            dls_a = cand_pdf["dls"].to_numpy()
-            nd_a = cand_pdf["n_docs"].to_numpy()
-            idf_a = cand_pdf["idf"].to_numpy(np.float64)
-            eint = np.empty(0, np.int64)
-            efloat = np.empty(0, np.float64)
+        def score(g: pd.DataFrame) -> pd.DataFrame:
+            tagged = g["n_docs"].to_numpy() == 0
+            allow = g["first_doc"].to_numpy(np.int64)[tagged]
+            g = g[~tagged]
+            if not len(allow) or not len(g):
+                return g.iloc[:0]
+            sweep = use_blockmax
+            if sweep is None:
+                sweep = len(g) >= min_blocks and len(allow) >= min_allowed
+            return (sweep_score if sweep else full_score)(g, allow)
 
-            def decode_block(i: int) -> tuple[np.ndarray, np.ndarray]:
-                d, tf, dl = decode_posting_block(
-                    docs_a[i], tfs_a[i], dls_a[i], int(nd_a[i])
-                )
-                m = np.isin(d, allow, assume_unique=True)
-                if not m.any():
-                    return eint, efloat
-                s = _score_arrays(
-                    tf[m].astype(np.float64), dl[m].astype(np.float64),
-                    np.float64(idf_a[i]), p,
-                )
-                return d[m], s
-
-            if force is None:
-                sweep = (
-                    n_blocks >= min_blocks
-                    and len(allow) >= min_density * w
-                )
-            else:
-                sweep = force
-            if sweep:
-                return _blockmax_sweep(first, last, bmax, decode_block, p)
-            return _exhaustive_topk(n_blocks, decode_block, p.k)
-
-        per_bucket = (
-            cand.groupby("doc_bucket")
-            .cogroup(allowed.groupby("doc_bucket"))
-            .applyInPandas(score, TOPK_SCHEMA)
+        per_bucket = self._per_bucket(
+            blocks.unionByName(allowed, allowMissingColumns=True),
+            est, score, _TOPK_ARROW, TOPK_SCHEMA,
         )
         return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -1363,10 +1278,7 @@ class SearchIndex:
             )
             fetched: dict[int, tuple[np.ndarray, np.ndarray]] = {}
             for tid, g in pdf.groupby("term_id"):
-                d, tf, dl = decode_posting_blocks_bulk(
-                    g["docs"].tolist(), g["tfs"].tolist(),
-                    g["dls"].tolist(), g["n_docs"].tolist(),
-                )
+                d, tf, dl = _decode_blocks(g)
                 tf = tf.astype(np.float64)
                 dl = dl.astype(np.float64)
                 # cache tf-part of the score (idf applied at query time)
@@ -1426,13 +1338,9 @@ class SearchIndex:
         per-task overhead amortizes and hash balance is fine), or the
         greedy search exhausts its salt budget (never observed; kept as
         a loud-free fallback to the capped hash path)."""
-        import os
-
         nb = self._n_doc_buckets
         if not nb or nb * Q > 64:
             return None
-        if os.environ.get("GLOOMY_PERFECT_PARTITIONING", "1") == "0":
-            return None  # measurement escape hatch (bench A/B)
         cached = self._scorer_salt_cache.get(Q)
         if cached is not None:
             return cached or None  # False = previously gave up
@@ -1471,7 +1379,7 @@ class SearchIndex:
         when Q == 1 (the common regime: query-group salting only engages
         when cores > doc buckets), so the repartitioned block set can be
         persisted ONCE; each batch then runs a narrow in-memory filter on
-        term_id and the grouped scorer directly — applyInPandas's
+        term_id and the grouped scorer directly — the grouped UDF's
         ClusteredDistribution requirement is satisfied by the persisted
         hash partitioning, so the per-batch plan has NO exchange before
         scoring.
@@ -1702,13 +1610,7 @@ class SearchIndex:
                 }
             )
 
-        import os as _os
-
-        if (
-            Q == 1
-            and self._n_doc_buckets
-            and _os.environ.get("GLOOMY_SERVING_VIEW", "1") != "0"
-        ):
+        if Q == 1 and self._n_doc_buckets:
             # serving fast path: filter the persisted pre-partitioned view
             # (narrow — no scan, no shuffle; see _batch_serving_view)
             view, keys = self._batch_serving_view()

@@ -4,6 +4,7 @@ import pytest
 from gloomy_spark.codecs import (
     decode_position_lists,
     decode_posting_block,
+    decode_posting_blocks_bulk,
     delta_decode,
     delta_encode,
     encode_position_lists,
@@ -154,3 +155,32 @@ def test_varint_roundtrip_random_uint64_property():
         assert (out == v).all()
 
     roundtrip()
+
+
+@pytest.mark.parametrize("sizes", [(1,), (2,), (8,), (128,), (1, 2, 8, 128)])
+def test_bulk_decode_equals_per_block_decode(sizes):
+    """decode_posting_blocks_bulk over several terms' blocks (each term's
+    blocks contiguous, as on disk) equals concatenated per-block
+    decode_posting_block. Doc ids span the whole int64 range, negative
+    ones included (xxhash64-style ids); each term's ids sit in one
+    window so in-block deltas stay below 2^63."""
+    rng = np.random.default_rng(sum(sizes))
+    for _ in range(60):
+        blocks = []
+        for _term in range(int(rng.integers(1, 4))):
+            n = int(rng.integers(1, 400))
+            base = int(rng.integers(-(2**63), 2**63 - 2**41))
+            docs = base + np.unique(rng.integers(0, 2**40, size=n))
+            i = 0
+            while i < len(docs):
+                j = i + int(rng.choice(sizes))
+                d = docs[i:j]
+                tfs = rng.integers(1, 300, size=len(d))
+                dls = rng.integers(1, 2**20, size=len(d))
+                blocks.append((*encode_posting_block(d, tfs, dls), len(d)))
+                i = j
+        want = [decode_posting_block(*b) for b in blocks]
+        got = decode_posting_blocks_bulk(*zip(*blocks))
+        for g, w in zip(got, zip(*want)):
+            assert g.dtype == np.int64
+            assert np.array_equal(g, np.concatenate(w))

@@ -910,7 +910,7 @@ def test_kwic_fuzz_vs_python_oracle(spark, small_index):
         toks = tokenize(t, cfg)
         i = rng.randrange(max(1, len(toks) - 3))
         queries.append(" ".join(toks[i : i + rng.randint(1, 3)]))
-    queries += ["data", "zzz_absent", "data zzz_absent"]
+    queries += ["the", "data", "zzz_absent", "data zzz_absent"]
     for q in queries:
         width = rng.choice([1, 2, 3, 5])
         got = {

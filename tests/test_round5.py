@@ -309,6 +309,42 @@ def test_bm25_filtered_matches_unfiltered_on_full_facet(small_index):
         assert got == want, bm
 
 
+@pytest.mark.spark
+def test_bm25_filtered_plan_is_mapinarrow(small_index):
+    """Faceted search runs in bm25_topk's per-bucket shape: the allowed
+    docs are unioned into the blocks' doc_bucket exchange and scored by
+    one mapInArrow node, with no cogroup of the two sides."""
+    df = small_index.bm25_topk_filtered("a the data", 10, "lang", ["en"])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
+    assert "CoGroup" not in plan, plan
+
+
+@pytest.mark.spark
+def test_config_with_removed_keys_opens_and_round_trips(spark, small_index, tmp_path):
+    """An index whose config.json still holds keys of fields since
+    removed (salt_threshold_df, ngram_sizes, max_ngram_size,
+    proc_chunk_size) still opens with the same config, and the config
+    round-trips through to_json/from_json."""
+    import json
+    import shutil
+
+    from gloomy_spark.query.engine import SearchIndex
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(small_index.store.index_dir, idx)
+    with open(f"{idx}/config.json") as f:
+        d = json.load(f)
+    d.update(salt_threshold_df=0.05, ngram_sizes=[1, 2, 3],
+             max_ngram_size=10, proc_chunk_size=1_000_000)
+    with open(f"{idx}/config.json", "w") as f:
+        json.dump(d, f)
+    cfg = SearchIndex(spark, idx).cfg
+    assert cfg == small_index.cfg
+    assert EngineConfig.from_json(cfg.to_json()) == cfg
+    assert "proc_chunk_size" not in cfg.to_json()
+
+
 # ----------------------------------------------------- batch serving view --
 
 
@@ -329,34 +365,32 @@ def view_index(spark, tmp_path_factory):
 
 
 @pytest.mark.spark
-def test_batch_serving_view_rank_identical(view_index, monkeypatch):
+def test_batch_serving_view_rank_identical(view_index):
     """bm25_topk_batch through the persisted pre-partitioned view must be
-    rank-identical to the scan+shuffle path for every query."""
+    rank-identical to per-query exhaustive bm25_topk for every query."""
     si = view_index
     qs = ["the data merge", "scan filter", "a", "zzz_absent",
           "merge group table", "a the"]
 
-    def canon(df):
-        return sorted(
-            (int(r["query_id"]), int(r["doc_id"]), round(float(r["score"]), 9))
-            for r in df.collect()
-        )
-
-    monkeypatch.setenv("GLOOMY_SERVING_VIEW", "0")
-    off = canon(si.bm25_topk_batch(qs, 10))
-    monkeypatch.setenv("GLOOMY_SERVING_VIEW", "1")
-    on = canon(si.bm25_topk_batch(qs, 10))
-    assert on == off and len(on) > 0
+    on = sorted(
+        (int(r["query_id"]), int(r["doc_id"]), round(float(r["score"]), 9))
+        for r in si.bm25_topk_batch(qs, 10).collect()
+    )
+    per_query = sorted(
+        (qi, int(r["doc_id"]), round(float(r["score"]), 9))
+        for qi, q in enumerate(qs)
+        for r in si.bm25_topk(q, 10, use_blockmax=False).collect()
+    )
+    assert on == per_query and len(on) > 0
 
 
 @pytest.mark.spark
-def test_batch_serving_view_no_exchange(view_index, monkeypatch):
+def test_batch_serving_view_no_exchange(view_index):
     """The per-batch plan through the view must have NO exchange between
     the cached scan and the grouped scorer — that shuffle (plus the
     parquet scan below it) is the fixed per-batch cost the view removes.
     A constant qgrp column would silently re-insert it (constant-folded
     out of the cached partitioning), hence the 2-column layout pin."""
-    monkeypatch.setenv("GLOOMY_SERVING_VIEW", "1")
     df = view_index.bm25_topk_batch(["the data", "a merge"], 5)
     plan = df._jdf.queryExecution().executedPlan().toString()
     s = plan.find("FlatMapGroupsInPandas")
