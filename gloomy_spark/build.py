@@ -764,17 +764,14 @@ class IndexBuilder:
             row = stats_df.agg(*stat_aggs).collect()[0]
             return stats_df, row, round(time.time() - st, 2)
 
-        # stage-overlap pool: the docs stage always overlaps the
-        # dictionary aggregation (pool thread + main thread). Segment
-        # BUCKETS default to sequential: an interleaved A/B on the bench
+        # stage-overlap pool of ONE thread: the docs stage overlaps the
+        # dictionary aggregation (pool thread + main thread), and segment
+        # buckets run one at a time. An interleaved A/B on the bench
         # corpora measured 2-in-flight buckets a wash on the small build
         # and a consistent loss with heavy outliers on the 4M-posting one
         # (medians 15.1 s vs 8.5 s — two concurrent python-heavy writer
-        # jobs thrash the worker pool at local core counts). On a real
-        # cluster with long bucket tails, raise GLOOMY_BUILD_CONCURRENCY
-        # to overlap them (guide §2.6).
-        n_conc = max(1, int(os.environ.get("GLOOMY_BUILD_CONCURRENCY", "1")))
-        pool = ThreadPoolExecutor(max_workers=n_conc)
+        # jobs thrash the python worker pool at local core counts).
+        pool = ThreadPoolExecutor(max_workers=1)
         docs_future = pool.submit(_docs_stage)
 
         # ---------------------------------------------------------- terms/
@@ -1054,10 +1051,10 @@ class IndexBuilder:
             return m_np
 
         # buckets are independent jobs (disjoint term ranges, each
-        # committing its own dir + ledger line): run 2 in flight so one
-        # bucket's straggler/commit tail backfills the other's map stage
-        # (guide §2.6). The fail-injection test hook forces the
-        # sequential path so "only buckets ≤ k committed" stays exact.
+        # committing its own dir + ledger line) queued on the one-thread
+        # pool above, after the docs stage. The fail-injection test hook
+        # runs them on this thread so "only buckets ≤ k committed" stays
+        # exact.
         pending: list[tuple[int, object]] = []
         try:
             for k in range(n_buckets):

@@ -8,8 +8,6 @@ Where skew lives in this engine and what handles it:
 2. dictionary df/cf — groupBy(term) relies on map-side partial
    aggregation: every task emits at most |local vocab| rows per term, so
    "the" contributes one partial row per task, not one row per posting;
-   `salted_term_stats` below is the explicit two-phase form for engines
-   where partial agg is unavailable (e.g. collect_list-style payloads);
 3. segment writing — repartitionByRange(term_id, doc_id) splits a head
    term's postings across many range partitions (each a doc slice);
 4. LSH band buckets — boilerplate-heavy corpora create giant buckets
@@ -22,25 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def salted_term_stats(
-    postings: DataFrame, salt_factor: int = 32, term_col: str = "term"
-) -> DataFrame:
-    """Explicit two-phase (salted) aggregation: (term, salt) partials →
-    term totals. Equivalent to what partial aggregation does implicitly;
-    used when an agg lacks map-side combine or a single reducer key would
-    otherwise receive a head term's full posting list."""
-    salt = (F.crc32(F.col("doc_id").cast("string")) % salt_factor).alias("_salt")
-    partial = (
-        postings.select(term_col, "tf", salt)
-        .groupBy(term_col, "_salt")
-        .agg(F.count("*").alias("pdf"), F.sum("tf").alias("pcf"))
-    )
-    return partial.groupBy(term_col).agg(
-        F.sum("pdf").cast("long").alias("df"),
-        F.sum("pcf").cast("long").alias("cf"),
-    )
 
 
 _N_SALTS = 8

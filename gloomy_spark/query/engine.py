@@ -4,16 +4,20 @@ Reference parity (service/search.go:174-200 dispatch; index.go:291-306
 first-token lookup; README query dialect) re-expressed over columnar
 tables, plus the BM25/block-max layer mandated by BASELINE.json.
 
-Distributed scoring plan (bm25_topk, bm25_topk_filtered, phrase_match):
+Distributed scoring plan (bm25_topk, bm25_topk_filtered, phrase_match,
+bm25_topk_batch):
     segments.where(term_id IN query terms)       ── parquet pushdown; idf
       [∪ tagged allowed-doc rows (facets)]          attached in python
       repartition(n, doc_bucket) | coalesce(1)   ── all of a bucket's rows
                                                     in one task; n from the
                                                     query's posting volume
       mapInArrow(_per_bucket_arrow)              ── per bucket: one bulk
-                                                    decode, block-max sweep;
+                                                    decode, block-max sweep
+                                                    (batch: one top-k per
+                                                    distinct term set);
                                                     one python call per task
       orderBy(score desc, doc_id asc) LIMIT k    ── TakeOrderedAndProject
+      | row_number() per query_id <= k           ── batch: WindowGroupLimit
 
 Every posting decode goes through ``decode_posting_blocks_bulk`` (one
 call per bucket or Arrow batch, never one per block). The sweep is
@@ -21,10 +25,9 @@ exact: piecewise-constant upper bounds come from block metadata only
 (first_doc/last_doc/max_score), and blocks are scored in upper-bound
 order until the k-th best exact score exceeds the next segment's bound.
 Faceted search runs in the same shape, with the allowed docs unioned
-into the blocks' exchange. Only the batch scorer keeps a grouped pandas
-UDF (over a persisted bucket-partitioned view). Every BM25 scorer,
-driver-local ``bm25_serve`` included, shares the numerics in
-``query/kernel.py``: per-doc accumulation and exact top-k.
+into the blocks' exchange. Every BM25 scorer, driver-local
+``bm25_serve`` included, shares the numerics in ``query/kernel.py``:
+per-doc accumulation and exact top-k.
 """
 
 from __future__ import annotations
@@ -38,7 +41,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..codecs import decode_position_lists, decode_posting_blocks_bulk
@@ -50,70 +53,9 @@ from .regexparser import regex_to_prefixes
 
 TOPK_SCHEMA = "doc_id long, score double"
 _TOPK_ARROW = pa.schema([("doc_id", pa.int64()), ("score", pa.float64())])
-
-# ---- driver-side replica of Spark's shuffle hash (Murmur3_x86_32) ----
-# Spark's hashpartitioning places a row at pmod(hash(cols, seed=42), n);
-# `F.hash` chains the running hash through each column (the previous
-# value becomes the next seed), longs as two 32-bit words, ints as one.
-# Replicating it in python lets the perfect-partitioning salt search run
-# entirely on the driver — no createDataFrame job, no python-RDD
-# broadcast — while keeping the placement guarantee (parity with F.hash
-# is pinned by test_spark_hash_parity / the injectivity test).
-
-_M32 = 0xFFFFFFFF
-
-
-def _mm_mix_k1(k1: int) -> int:
-    k1 = (k1 * 0xCC9E2D51) & _M32
-    k1 = ((k1 << 15) | (k1 >> 17)) & _M32
-    return (k1 * 0x1B873593) & _M32
-
-
-def _mm_mix_h1(h1: int, k1: int) -> int:
-    h1 ^= k1
-    h1 = ((h1 << 13) | (h1 >> 19)) & _M32
-    return (h1 * 5 + 0xE6546B64) & _M32
-
-
-def _mm_fmix(h1: int, length: int) -> int:
-    h1 ^= length
-    h1 ^= h1 >> 16
-    h1 = (h1 * 0x85EBCA6B) & _M32
-    h1 ^= h1 >> 13
-    h1 = (h1 * 0xC2B2AE35) & _M32
-    h1 ^= h1 >> 16
-    return h1
-
-
-def _spark_hash_int(v: int, seed: int) -> int:
-    return _mm_fmix(_mm_mix_h1(seed & _M32, _mm_mix_k1(v & _M32)), 4)
-
-
-def _spark_hash_long(v: int, seed: int) -> int:
-    v &= 0xFFFFFFFFFFFFFFFF
-    h1 = _mm_mix_h1(seed & _M32, _mm_mix_k1(v & _M32))
-    h1 = _mm_mix_h1(h1, _mm_mix_k1(v >> 32))
-    return _mm_fmix(h1, 8)
-
-
-def _spark_hash_bqs(b: int, q: int, s: int) -> int:
-    """Signed-int32 value of F.hash(doc_bucket long, qgrp int, psalt int)."""
-    h = _spark_hash_long(b, 42)
-    h = _spark_hash_int(q, h)
-    h = _spark_hash_int(s, h)
-    return h - (1 << 32) if h >= (1 << 31) else h
-
-
-def _spark_hash_bs(b: int, s: int) -> int:
-    """Signed-int32 value of F.hash(doc_bucket long, psalt int) — the
-    serving view's 2-column layout (qgrp dropped: a CONSTANT key column
-    is folded out of the cached partitioning expression, which then no
-    longer satisfies the scorer's clustering requirement and re-inserts
-    the very exchange the view exists to remove — verified empirically
-    on a persisted repartition under the grouped batch scorer)."""
-    h = _spark_hash_long(b, 42)
-    h = _spark_hash_int(s, h)
-    return h - (1 << 32) if h >= (1 << 31) else h
+_BATCH_SCHEMA = "query_id int, " + TOPK_SCHEMA
+_BATCH_ARROW = pa.schema([("query_id", pa.int32()), *_TOPK_ARROW])
+_NO_POSTINGS = (np.empty(0, np.int64), np.empty(0, np.float64))
 
 
 def _in_longs(col: str, vals) -> "F.Column":
@@ -207,6 +149,50 @@ def _bucket_scorer(p: _Bm25Params, idf_by_tid: dict[int, float]):
             blocks["max_score"].to_numpy(np.float64),
             docs_l, scores_l, p,
         )
+
+    return score
+
+
+def _batch_bucket_scorer(
+    p: _Bm25Params, idf_by_tid: dict[int, float],
+    qids_by_tset: dict[tuple[int, ...], list[int]],
+):
+    """Batch scorer for one doc_bucket → (query_id, doc_id, score) frame
+    holding each query's exact top-k within the bucket. The bucket's
+    blocks are stable-sorted by term_id and bulk-decoded once, so every
+    term is one contiguous (doc, score) span; each distinct sorted term
+    set then sums its terms' spans in sorted-term order (absent terms as
+    empty spans) and takes one top-k shared by all its queries."""
+    groups = [(tset, np.asarray(qids, np.int32)) for tset, qids in qids_by_tset.items()]
+
+    def score(blocks: pd.DataFrame) -> pd.DataFrame:
+        tids = blocks["term_id"].to_numpy(np.int64)
+        order = np.argsort(tids, kind="stable")
+        blocks, tids = blocks.iloc[order], tids[order]
+        n = blocks["n_docs"].to_numpy(np.int64)
+        d, tf, dl = _decode_blocks(blocks)
+        idf = np.repeat(blocks["term_id"].map(idf_by_tid).to_numpy(np.float64), n)
+        s = _score_arrays(tf.astype(np.float64), dl.astype(np.float64), idf, p)
+        uniq, first = np.unique(tids, return_index=True)
+        cuts = np.concatenate(([0], np.cumsum(n)))[np.append(first, len(tids))].tolist()
+        spans = {
+            t: (d[a:b], s[a:b]) for t, a, b in zip(uniq.tolist(), cuts[:-1], cuts[1:])
+        }
+        out_q, out_d, out_s = [], [], []
+        for tset, qids in groups:
+            parts = [spans.get(t, _NO_POSTINGS) for t in tset]
+            td, ts = topk(*accumulate([x[0] for x in parts], [x[1] for x in parts]), p.k)
+            if len(td):
+                out_q.append(np.repeat(qids, len(td)))
+                out_d.append(np.tile(td, len(qids)))
+                out_s.append(np.tile(ts, len(qids)))
+        if not out_q:
+            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
+        return pd.DataFrame({
+            "query_id": np.concatenate(out_q),
+            "doc_id": np.concatenate(out_d),
+            "score": np.concatenate(out_s),
+        })
 
     return score
 
@@ -334,13 +320,6 @@ class SearchIndex:
         self._term_df: dict[str, int] = {}
         self._n_doc_buckets: int | None = None
         self._total_cf: int | None = None  # corpus token count (Σ cf)
-        # perfect scorer-partitioning state (see _perfect_scorer_partitioning)
-        self._bucket_values: list[int] | None = None
-        self._scorer_salt_cache: dict[int, object] = {}
-        # persisted pre-partitioned segments view for batch serving
-        # (see _batch_serving_view); built lazily on the first batch
-        self._serving_view: tuple[DataFrame, list[str]] | None = None
-        self._serving_view_lock = threading.Lock()
         # decoded-postings LRU for the driver-local serving fast path (the
         # analog of the reference preloading col0 into RAM, index.go:502-504).
         # Served from ThreadingHTTPServer threads, so all lookup/insert/
@@ -424,10 +403,9 @@ class SearchIndex:
     def cache(self) -> "SearchIndex":
         self.terms.cache().count()
         self.segments.cache().count()
-        # doc-bucket count feeds the batch scorer's parallelism policy
-        # (query-group salting when buckets < shuffle partitions); one
-        # tiny agg over block METADATA rows, amortized across the cached
-        # index's lifetime
+        # doc-bucket count caps the scorer shuffle width (_scorer_parts);
+        # one tiny agg over block METADATA rows, amortized across the
+        # cached index's lifetime
         self._n_doc_buckets = int(
             self.segments.select(
                 F.countDistinct("doc_bucket").alias("nb")
@@ -1091,54 +1069,47 @@ class SearchIndex:
         )
 
     def _query_blocks(
-        self, query: str
-    ) -> tuple[DataFrame, dict[int, float], int] | None:
-        """Posting blocks of the query's indexed terms (term_id pushed
-        into the scan), idf by term_id and the query's posting volume
-        (Σ df, which sizes the scorer shuffle); None when no query term
-        is indexed. Terms resolve on the driver (the cached term map, or
-        one dictionary lookup). idf is attached inside the python scorer,
-        not as a literal map in the plan: per-query literals force a
-        fresh whole-stage-codegen compile for every query, a fixed
-        ~0.1 s/query the python-side map avoids (measured 4.8 → 3.9 s
-        over 10 warm queries)."""
-        toks = list(dict.fromkeys(tokenize(query, self.cfg)))
+        self, toks: list[str]
+    ) -> tuple[DataFrame, dict[int, float], int, dict[str, int]] | None:
+        """Posting blocks of the indexed terms among ``toks`` (term_id
+        pushed into the scan), idf by term_id, their posting volume (Σ df,
+        which sizes the scorer shuffle) and term_id by term; None when no
+        token is indexed. Terms resolve on the driver (the cached term
+        map, or one dictionary lookup). idf is attached inside the python
+        scorer, not as a literal map in the plan: per-query literals
+        force a fresh whole-stage-codegen compile for every query, a
+        fixed ~0.1 s/query the python-side map avoids (measured 4.8 →
+        3.9 s over 10 warm queries)."""
+        toks = list(dict.fromkeys(toks))
         if self._term_map is not None:
             hits = [
-                (*self._term_map[t], self._term_df.get(t, 0))
+                (t, *self._term_map[t], self._term_df.get(t, 0))
                 for t in toks
                 if t in self._term_map
             ]
         elif toks:
             hits = self.terms.where(_in_strings("term", toks)).select(
-                "term_id", "idf", "df"
+                "term", "term_id", "idf", "df"
             ).collect()
         else:
             hits = []
         if not hits:
             return None
-        idf_by_tid = {int(tid): float(idf) for tid, idf, _ in hits}
+        idf_by_tid = {int(tid): float(idf) for _, tid, idf, _ in hits}
         blocks = self.segments.where(_in_longs("term_id", idf_by_tid)).select(
             "doc_bucket", "term_id", "first_doc", "last_doc", "n_docs",
             "max_score", "docs", "tfs", "dls",
         )
-        return blocks, idf_by_tid, sum(int(df) for *_, df in hits)
+        est = sum(int(df) for *_, df in hits)
+        return blocks, idf_by_tid, est, {t: int(tid) for t, tid, *_ in hits}
 
     def bm25_topk(self, query: str, k: int = 10, use_blockmax: bool = True) -> DataFrame:
         """Top-k BM25: score desc, doc_id asc tie-break — rank-identical
-        with the exhaustive oracle.
-
-        The single-query path deliberately does NOT use the persisted
-        serving view — measured SLOWER (0.45 s → 0.85 s at 10 buckets /
-        local[4]): a lone query leaves most bucket partitions empty after
-        the term filter, yet each still runs a python task (~90 ms
-        protocol overhead apiece), while the pushed-down parquet scan
-        reads only the query's term blocks. The view wins exactly when
-        most partitions carry real work — the many-query batch path."""
-        found = self._query_blocks(query)
+        with the exhaustive oracle."""
+        found = self._query_blocks(tokenize(query, self.cfg))
         if found is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        blocks, idf_by_tid, est = found
+        blocks, idf_by_tid, est, _ = found
         score = _bucket_scorer(self._bm25_params(k, use_blockmax), idf_by_tid)
         per_bucket = self._per_bucket(blocks, est, score, _TOPK_ARROW, TOPK_SCHEMA)
         return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -1186,10 +1157,10 @@ class SearchIndex:
                 f"unknown facet attribute {attr!r}; "
                 f"available: {sorted(self.docs.columns)}"
             )
-        found = self._query_blocks(query)
+        found = self._query_blocks(tokenize(query, self.cfg))
         if found is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        blocks, idf_by_tid, est = found
+        blocks, idf_by_tid, est, _ = found
         w = int(self.cfg.doc_bucket_width)
         # Allowed-doc rows carry their doc id in first_doc/last_doc and
         # are tagged by n_docs = 0 (no posting block is empty). Every
@@ -1318,403 +1289,40 @@ class SearchIndex:
         d, s = topk(*accumulate(docs_l, scores_l), k)
         return list(zip(d.tolist(), s.tolist()))
 
-    def _perfect_scorer_partitioning(self, Q: int):
-        """One shuffle partition per scoring group, exactly.
-
-        With hash partitioning, 2×groups partitions still double-pack
-        some group with ~99% probability at 19 groups (birthday bound:
-        P(no collision) ≈ e^(−g²/2n)) — a structural 2-wave straggler
-        the multi-core run pays every batch. The index is write-once and
-        its doc_bucket values are known, so for small group counts we
-        can do better than probabilistic placement: greedily pick a salt
-        per (doc_bucket, qgrp) such that Spark's own shuffle hash
-        (murmur3, seed 42 — exactly ``F.hash``) maps every group to a
-        DISTINCT partition mod g. The candidate hashes are evaluated
-        with the driver-side murmur3 replica above (no Spark job at
-        all); the result is cached per (index, Q) forever.
-
-        Returns (n_partitions, [(doc_bucket, qgrp, psalt), ...]) or None
-        when it doesn't apply: uncached index, nb×Q > 64 (at that width
-        per-task overhead amortizes and hash balance is fine), or the
-        greedy search exhausts its salt budget (never observed; kept as
-        a loud-free fallback to the capped hash path)."""
-        nb = self._n_doc_buckets
-        if not nb or nb * Q > 64:
-            return None
-        cached = self._scorer_salt_cache.get(Q)
-        if cached is not None:
-            return cached or None  # False = previously gave up
-        if self._bucket_values is None:
-            self._bucket_values = sorted(
-                int(r["doc_bucket"])
-                for r in self.segments.select("doc_bucket").distinct().collect()
-            )
-        groups = [(b, q) for b in self._bucket_values for q in range(Q)]
-        g = len(groups)
-        n_salts = 8 * g
-        used: set[int] = set()
-        salt_rows: list[tuple[int, int, int]] = []
-        for b, q in groups:
-            for s in range(n_salts):
-                slot = _spark_hash_bqs(b, q, s) % g
-                if slot not in used:
-                    used.add(slot)
-                    salt_rows.append((b, q, s))
-                    break
-            else:
-                self._scorer_salt_cache[Q] = False
-                return None
-        self._scorer_salt_cache[Q] = (g, salt_rows)
-        return self._scorer_salt_cache[Q]
-
-    def _batch_serving_view(self) -> tuple[DataFrame, list[str]] | None:
-        """Persisted segments view pre-partitioned in the batch scorer's
-        exact grouped layout (r4 verdict next #5: 'reuse what is reusable
-        across batches').
-
-        Every batch previously re-ran parquet scan → shuffle of the
-        queried posting blocks; for serving workloads (many batches over
-        one write-once index) that scan+shuffle is the dominant FIXED
-        per-batch cost. The index's bucket layout is batch-independent
-        when Q == 1 (the common regime: query-group salting only engages
-        when cores > doc buckets), so the repartitioned block set can be
-        persisted ONCE; each batch then runs a narrow in-memory filter on
-        term_id and the grouped scorer directly — the grouped UDF's
-        ClusteredDistribution requirement is satisfied by the persisted
-        hash partitioning, so the per-batch plan has NO exchange before
-        scoring.
-
-        Memory: comparable to the segments cache itself (MEMORY_AND_DISK,
-        spills gracefully). At 10^12 docs a serving shard persists only
-        its own buckets — exactly how the doc_bucket sharding splits the
-        index. Built lazily on the first batch; requires .cache()."""
-        with self._serving_view_lock:
-            if self._serving_view is not None:
-                return self._serving_view
-            # the view carries ONLY real data columns: a constant key
-            # column (qgrp≡0 at Q==1) is constant-folded out of the cached
-            # partitioning expression, after which the scorer's clustering
-            # requirement no longer matches and Spark re-inserts the
-            # exchange — see _spark_hash_bs
-            base = self.segments.select(
-                "doc_bucket", "term_id", "first_doc", "last_doc", "n_docs",
-                "docs", "tfs", "dls",
-            )
-            salts = self._view_salts()
-            if salts:
-                n_parts, salt_rows = salts
-                sentries = ", ".join(f"{b}L, {s}" for b, s in salt_rows)
-                psalt = F.expr(f"map({sentries})[doc_bucket]")
-                view = base.withColumn("psalt", psalt).repartition(
-                    n_parts, "doc_bucket", "psalt"
-                )
-                keys = ["doc_bucket", "psalt"]
-            else:
-                sp = int(self.cfg.shuffle_partitions)
-                nb = self._n_doc_buckets
-                sp_eff = min(sp, 2 * nb) if nb else sp
-                view = base.repartition(sp_eff, "doc_bucket")
-                keys = ["doc_bucket"]
-            view = view.persist()
-            view.count()  # materialize once, off the query path
-            self._serving_view = (view, keys)
-            return self._serving_view
-
-    def _view_salts(self) -> tuple[int, list[tuple[int, int]]] | None:
-        """Perfect (collision-free) bucket→partition placement for the
-        serving view's 2-column (doc_bucket, psalt) layout; same greedy
-        construction and applicability bounds as
-        _perfect_scorer_partitioning, with the 2-column murmur3 replica."""
-        nb = self._n_doc_buckets
-        if not nb or nb > 64:
-            return None
-        if self._bucket_values is None:
-            self._bucket_values = sorted(
-                int(r["doc_bucket"])
-                for r in self.segments.select("doc_bucket").distinct().collect()
-            )
-        g = len(self._bucket_values)
-        used: set[int] = set()
-        salt_rows: list[tuple[int, int]] = []
-        for b in self._bucket_values:
-            for s in range(8 * g):
-                slot = _spark_hash_bs(b, s) % g
-                if slot not in used:
-                    used.add(slot)
-                    salt_rows.append((b, s))
-                    break
-            else:
-                return None
-        return (g, salt_rows)
-
     def bm25_topk_batch(
         self, queries: list[str], k: int = 10, use_blockmax: bool = True
     ) -> DataFrame:
         """Score MANY queries in ONE Spark job → (query_id, doc_id, score).
 
         Serving-throughput path: per-query jobs pay Spark's scheduling
-        floor (~0.3-1s) each; batching amortizes it — ONE segments scan
-        over the union of all query terms, ONE shuffle of each block (no
+        floor (~0.3-1s) each; batching amortizes it. The plan is
+        bm25_topk's (_per_bucket): ONE segments scan over the union of
+        all query terms, ONE doc_bucket shuffle of each block (no
         per-query payload duplication: idf is a term property, so each
-        block is decoded and scored once per doc_bucket and every query
-        just gathers its terms' (doc, score) arrays), then a PARTITIONED
-        top-k window per query (never a global single-task sort).
-        query_id is the queries-list index; queries with no indexed terms
-        emit no rows. Exact scores (full DAAT per bucket — with many
-        queries sharing terms, block-max pruning would save nothing since
-        shared blocks must be decoded anyway; use_blockmax is accepted for
-        signature parity)."""
-        k1, b, avgdl = self.cfg.bm25.k1, self.cfg.bm25.b, self.manifest.avgdl
-        toks_by_q = {
-            qi: list(dict.fromkeys(tokenize(q, self.cfg))) for qi, q in enumerate(queries)
-        }
-        all_toks = list(dict.fromkeys(t for ts in toks_by_q.values() for t in ts))
-        if self._term_map is not None:
-            lookup = {t: self._term_map[t] for t in all_toks if t in self._term_map}
-        else:
-            lookup = {
-                r["term"]: (r["term_id"], r["idf"])
-                for r in self.terms.where(_in_strings("term", all_toks))
-                .select("term", "term_id", "idf")
-                .collect()
-            }
-        # query_id → [term_id]; idf is a TERM property (query-independent),
-        # so each block is shuffled and decoded+scored ONCE per bucket, and
-        # queries merely gather their terms' (doc, score) arrays — no
-        # per-query payload duplication in the shuffle
-        q_terms = {
-            qi: [int(lookup[t][0]) for t in ts if t in lookup]
-            for qi, ts in toks_by_q.items()
-        }
-        q_terms = {qi: ts for qi, ts in q_terms.items() if ts}
-        if not q_terms:
-            return self.spark.createDataFrame([], "query_id int, " + TOPK_SCHEMA)
-        idf_by_tid = {int(tid): float(idf) for tid, idf in lookup.values()}
-        ids = sorted(idf_by_tid)
-
-        # scoring-parallelism policy: at web scale an index has ~10^6 doc
-        # buckets and hash partitioning balances naturally, but a small
-        # index (or a coarse bucket_width) can have FEWER buckets than
-        # shuffle partitions — then per-bucket tasks are the parallelism
-        # ceiling. Salt the scoring key with a query group: each bucket's
-        # queries split into Q groups scored by separate tasks (blocks
-        # shared by groups are duplicated in the shuffle — the honest
-        # price of parallelism finer than the bucket grain).
-        sp = int(self.cfg.shuffle_partitions)
-        nb = self._n_doc_buckets
-        n_queries = len(q_terms)
-        # A/B on the 19-bucket bench regime: Q=3 salting tripled the
-        # shared-block decode (+45% single-core time) while the 4-core
-        # wall stayed flat — duplicated decode exactly offsets the finer
-        # tasks. Salt ONLY when buckets can't even fill the executor
-        # slots once (the truly-starved case: a handful of buckets on a
-        # wide cluster), never merely because buckets < partitions.
-        cores = self.spark.sparkContext.defaultParallelism
-        Q = max(1, min(8, cores // nb, n_queries)) if nb else 1
-
-        def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            if Q > 1:
-                grp = int(pdf["qgrp"].iloc[0])
-                my_q_terms = {
-                    qi: ts for qi, ts in q_terms.items() if qi % Q == grp
-                }
-            else:
-                my_q_terms = q_terms
-            tids = pdf["term_id"].to_numpy(np.int64)
-            # column arrays ONCE: pdf.iloc per block costs ~50µs of pandas
-            # machinery each — at 10⁴-10⁵ blocks per task that dwarfs the
-            # actual varint decode work
-            docs_a = pdf["docs"].to_numpy()
-            tfs_a = pdf["tfs"].to_numpy()
-            dls_a = pdf["dls"].to_numpy()
-            nd_a = pdf["n_docs"].to_numpy()
-            by_term: dict[int, list[int]] = {}
-            for i, t in enumerate(tids.tolist()):
-                by_term.setdefault(t, []).append(i)
-
-            # ONE bulk decode for ALL of this task's needed terms (each
-            # block stores its first docID absolute, so the segmented
-            # delta reconstruction is per-block and term boundaries need
-            # no special handling), then ONE vectorized BM25 pass with
-            # the per-term idf repeated across term spans. Per-TERM
-            # decode was numpy-call-dispatch bound: ~100k varint_decode
-            # calls / 8.3 s for 1000 Zipf queries × 19 buckets, most on
-            # tail terms far below vectorization break-even (profiled —
-            # BENCH/BASELINE.md).
-            needed = sorted(
-                {t for ts in my_q_terms.values() for t in ts} & by_term.keys()
-            )
-            bufs_d: list = []
-            bufs_t: list = []
-            bufs_l: list = []
-            cnts: list[int] = []
-            spans: dict[int, tuple[int, int]] = {}
-            p = 0
-            for t in needed:
-                rows = by_term[t]
-                bufs_d += [docs_a[i] for i in rows]
-                bufs_t += [tfs_a[i] for i in rows]
-                bufs_l += [dls_a[i] for i in rows]
-                c = [int(nd_a[i]) for i in rows]
-                cnts += c
-                n = sum(c)
-                spans[t] = (p, p + n)
-                p += n
-            if needed:
-                D, TF, DL = decode_posting_blocks_bulk(bufs_d, bufs_t, bufs_l, cnts)
-                idf_rep = np.repeat(
-                    np.array([idf_by_tid[t] for t in needed]),
-                    np.array([spans[t][1] - spans[t][0] for t in needed]),
-                )
-                S = idf_rep * (TF * (k1 + 1.0)) / (
-                    TF + k1 * (1.0 - b + b * (DL / avgdl))
-                )
-            _empty = (np.array([], np.int64), np.array([], np.float64))
-
-            def term_postings(tid: int):
-                span = spans.get(tid)
-                if span is None:  # absent term → empty
-                    return _empty
-                return D[span[0]:span[1]], S[span[0]:span[1]]
-
-            # queries normalizing to the SAME indexed term-set share one
-            # scoring pass (frequent in serving workloads)
-            tset_groups: dict[tuple, list[int]] = {}
-            for qi, terms in my_q_terms.items():
-                tset_groups.setdefault(tuple(sorted(set(terms))), []).append(qi)
-
-            out_qid: list[np.ndarray] = []
-            out_doc: list[np.ndarray] = []
-            out_score: list[np.ndarray] = []
-            for tset, qis in tset_groups.items():
-                parts = [term_postings(t) for t in tset]
-                # numpy only — ONE pandas frame per task at the end (a
-                # frame per group × per query measured 7.5 s of a 23 s
-                # scoring pass at 1000 queries × 19 buckets)
-                td, ts_ = topk(
-                    *accumulate([p[0] for p in parts], [p[1] for p in parts]), k
-                )
-                for qi in qis:
-                    out_qid.append(np.full(len(td), qi, np.int32))
-                    out_doc.append(td)
-                    out_score.append(ts_)
-            if not out_qid:
-                return pd.DataFrame(
-                    {"query_id": [], "doc_id": [], "score": []}
-                )
-            return pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_qid),
-                    "doc_id": np.concatenate(out_doc),
-                    "score": np.concatenate(out_score),
-                }
-            )
-
-        if Q == 1 and self._n_doc_buckets:
-            # serving fast path: filter the persisted pre-partitioned view
-            # (narrow — no scan, no shuffle; see _batch_serving_view)
-            view, keys = self._batch_serving_view()
-            per = (
-                view.where(_in_longs("term_id", ids))
-                .groupBy(*keys)
-                .applyInPandas(score_bucket, "query_id int, " + TOPK_SCHEMA)
-            )
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("query_id").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
-            return (
-                per.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") <= k)
-                .drop("_rn")
-            )
-
-        cand = self.segments.where(_in_longs("term_id", ids)).select(
-            "doc_bucket", "term_id", "first_doc", "last_doc", "n_docs",
-            "docs", "tfs", "dls",
+        block is decoded and scored once per bucket and every query just
+        gathers its terms' (doc, score) spans), then a PARTITIONED top-k
+        window per query (map-side WindowGroupLimit, never a global
+        single-task sort). query_id is the queries-list index; queries
+        with no indexed terms emit no rows. Exact scores (full DAAT per
+        bucket — with many queries sharing terms, block-max pruning would
+        save nothing since shared blocks must be decoded anyway;
+        use_blockmax is accepted for signature parity)."""
+        toks_by_q = [tokenize(q, self.cfg) for q in queries]
+        found = self._query_blocks([t for ts in toks_by_q for t in ts])
+        if found is None:
+            return self.spark.createDataFrame([], _BATCH_SCHEMA)
+        blocks, idf_by_tid, est, tid_by_term = found
+        # queries normalizing to the SAME indexed term set share one
+        # scoring pass (frequent in serving workloads)
+        qids_by_tset: dict[tuple[int, ...], list[int]] = {}
+        for qi, ts in enumerate(toks_by_q):
+            tset = tuple(sorted({tid_by_term[t] for t in ts if t in tid_by_term}))
+            if tset:
+                qids_by_tset.setdefault(tset, []).append(qi)
+        score = _batch_bucket_scorer(
+            self._bm25_params(k, False), idf_by_tid, qids_by_tset
         )
-        if Q > 1:
-            by_tid: dict[int, list[int]] = {}
-            for qi, ts in q_terms.items():
-                grp = qi % Q
-                for tid in ts:
-                    gs = by_tid.setdefault(tid, [])
-                    if grp not in gs:
-                        gs.append(grp)
-            n_pairs = sum(len(gs) for gs in by_tid.values())
-            if n_pairs <= 2048:
-                # literal map term_id → array(qgrps), exploded: pure JVM
-                # expressions. A createDataFrame dim here is a python-RDD
-                # broadcast — one extra job with python-worker startup per
-                # batch (~0.3-0.5 s), measured 2× the whole warm batch
-                # wall at 40 queries / local[32] (BENCH/BASELINE.md r4
-                # A/B). Large batches keep the broadcast join: a literal
-                # map with tens of thousands of nodes slows analysis, and
-                # 1000-query batches amortize the job anyway.
-                # ONE py4j call: building the same map from F.lit/F.array
-                # columns costs a py4j round-trip per literal (~0.3-0.5 s
-                # of driver prep at 40 queries — measured), the SQL string
-                # parses JVM-side in microseconds
-                entries = ", ".join(
-                    f"{tid}L, array({', '.join(str(g) for g in sorted(by_tid[tid]))})"
-                    for tid in sorted(by_tid)
-                )
-                cand = cand.withColumn(
-                    "qgrp", F.explode(F.expr(f"map({entries})[term_id]"))
-                )
-            else:
-                pairs = sorted(
-                    (tid, grp) for tid, gs in by_tid.items() for grp in gs
-                )
-                qdim = self.spark.createDataFrame(pairs, "term_id long, qgrp int")
-                cand = cand.join(F.broadcast(qdim), "term_id")
-        else:
-            cand = cand.withColumn("qgrp", F.lit(0))
-        # EXPLICIT repartition before the grouped scorer: AQE coalesces
-        # shuffle partitions by BYTE size, but this stage's cost is
-        # python scoring work ∝ buckets × queries, not bytes — byte-based
-        # coalescing packs the scoring groups into a handful of tasks and
-        # manufactures a straggler. A user repartition with an explicit
-        # partition count is exempt from AQE coalescing, and the groupBy
-        # reuses its hash partitioning (no extra exchange in the plan).
-        # grouped-map python tasks are not free: ~90 ms/partition of
-        # arrow/worker protocol overhead each, measured at local[1] (a
-        # 1-query warm batch: 6.6 s at 64 partitions vs 2.1 s at 8 —
-        # BENCH/BASELINE.md). Small bucket counts therefore get PERFECT
-        # partitioning (one partition per scoring group via precomputed
-        # salts — no empty partitions AND no double-packed straggler);
-        # otherwise cap at 2× the scoring groups: partitions beyond nb×Q
-        # are empty BY CONSTRUCTION (nothing else hashes there), so they
-        # buy no parallelism, only protocol overhead. At web scale
-        # (~10^6 buckets) neither path binds and the configured
-        # shuffle_partitions wins.
-        perfect = self._perfect_scorer_partitioning(Q)
-        if perfect:
-            n_parts, salt_rows = perfect
-            # psalt via a literal map keyed by doc_bucket·Q + qgrp (≤64
-            # entries by construction) — attaching it with a
-            # createDataFrame dim costs a python-RDD broadcast job per
-            # batch; a map literal is free. Placement is unchanged: the
-            # repartition hashes the same three columns.
-            sentries = ", ".join(f"{b * Q + q}L, {s}" for b, q, s in salt_rows)
-            psalt_expr = F.expr(
-                f"map({sentries})[doc_bucket * {Q}L + CAST(qgrp AS BIGINT)]"
-            )
-            per = (
-                cand.withColumn("psalt", psalt_expr)
-                .repartition(n_parts, "doc_bucket", "qgrp", "psalt")
-                .groupBy("doc_bucket", "qgrp", "psalt")
-                .applyInPandas(score_bucket, "query_id int, " + TOPK_SCHEMA)
-            )
-        else:
-            sp_eff = min(sp, 2 * nb * Q) if nb else sp
-            per = (
-                cand.repartition(sp_eff, "doc_bucket", "qgrp")
-                .groupBy("doc_bucket", "qgrp")
-                .applyInPandas(score_bucket, "query_id int, " + TOPK_SCHEMA)
-            )
-
+        per = self._per_bucket(blocks, est, score, _BATCH_ARROW, _BATCH_SCHEMA)
         # A driver-side final merge (takeOrdered pattern: Arrow toPandas of
         # the ≤ buckets×queries×k per-bucket top-k rows + numpy lexsort)
         # was A/B-measured here and REJECTED: warm-session walls were
@@ -1722,8 +1330,6 @@ class SearchIndex:
         # 1000 queries) — the window below is already map-side limited
         # (WindowGroupLimit) and its exchange moves only top-k rows, so
         # there is nothing to save.
-        from pyspark.sql import Window
-
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
             per.withColumn("_rn", F.row_number().over(w))

@@ -342,11 +342,9 @@ class SearchService:
     # ------------------------------------------------------------- http --
     def warmup(self) -> None:
         """One tiny distributed batch per corpus, off the request path:
-        the first grouped-python job of a session pays python-worker
-        spawn + codegen compile + the one-time build of the persisted
-        batch serving view (engine._batch_serving_view). A serving
-        process should pay that at startup, not on the first client's
-        request (r4 verdict next #8)."""
+        the first python job of a session pays python-worker spawn +
+        codegen compile. A serving process should pay that at startup,
+        not on the first client's request (r4 verdict next #8)."""
         for name, si in self.indexes.items():
             term = next(iter(si._term_map), None) if si._term_map else None
             if term is not None:

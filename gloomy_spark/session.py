@@ -9,7 +9,9 @@ driver's working directory is.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -18,24 +20,32 @@ from pyspark.sql import SparkSession
 _SHIPPED: set[int] = set()
 
 
-def ship_package(spark: SparkSession) -> None:
-    """Idempotently add gloomy_spark as a py-file to the running session."""
-    sc = spark.sparkContext
-    key = id(sc)
-    if key in _SHIPPED:
-        return
+def _write_zip(zpath: str) -> str:
+    """Zip this package's .py files (as ``gloomy_spark/...``) to zpath."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.gettempdir(), "gloomy_spark_pyfiles.zip")
     with zipfile.ZipFile(zpath, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in files:
                 if fn.endswith(".py"):
                     full = os.path.join(root, fn)
-                    rel = os.path.join(
-                        "gloomy_spark", os.path.relpath(full, pkg_dir)
-                    )
+                    rel = os.path.join("gloomy_spark", os.path.relpath(full, pkg_dir))
                     zf.write(full, rel)
-    sc.addPyFile(zpath)
+    return zpath
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Idempotently add gloomy_spark as a py-file to the running session.
+    The zip goes to a directory of its own: a fixed temp path would be
+    shared by every process on the machine, so two checkouts running at
+    once would overwrite each other's zip and executors could load the
+    other checkout's code."""
+    sc = spark.sparkContext
+    key = id(sc)
+    if key in _SHIPPED:
+        return
+    zdir = tempfile.mkdtemp(prefix="gloomy_spark_")
+    atexit.register(shutil.rmtree, zdir, True)
+    sc.addPyFile(_write_zip(os.path.join(zdir, "gloomy_spark_pyfiles.zip")))
     _SHIPPED.add(key)
 
 
@@ -56,15 +66,7 @@ def ensure_min_partitions(df):
 def build_zip() -> str:
     """Write gloomy_spark.zip for external `spark-submit --py-files` use."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(os.path.dirname(pkg_dir), "gloomy_spark.zip")
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    rel = os.path.join("gloomy_spark", os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
-    return zpath
+    return _write_zip(os.path.join(os.path.dirname(pkg_dir), "gloomy_spark.zip"))
 
 
 def get_spark(

@@ -120,17 +120,16 @@ def test_zero_score_docs_kept():
 # -------------------------------------------- engine's per-bucket scorer --
 
 
-def _two_term_bucket(rng, ties, stride):
-    """One bucket's posting blocks for two terms, hand-encoded: mixed
-    block sizes, doc ranges overlapping across the terms, rows shuffled
-    so the terms' blocks interleave. Doc ids are ``lo + stride * i`` for
-    i < 300. Returns (blocks frame, idf by term_id, lo)."""
+def _encoded_bucket(rng, ties, stride, idf_by_tid):
+    """One bucket's posting blocks for the terms of ``idf_by_tid``,
+    hand-encoded: mixed block sizes, doc ranges overlapping across the
+    terms, rows shuffled so the terms' blocks interleave. Doc ids are
+    ``lo + stride * i`` for i < 300. Returns (blocks frame, lo)."""
     import pandas as pd
 
     from gloomy_spark.codecs import encode_posting_block
     from gloomy_spark.query.engine import _Bm25Params, _score_arrays
 
-    idf_by_tid = {3: 1.7, 9: 0.4}
     p = _Bm25Params(k1=1.2, b=0.75, avgdl=50.0, k=1, use_blockmax=False)
     lo = int(rng.integers(-(2**62), 2**62))
     rows = []
@@ -152,7 +151,7 @@ def _two_term_bucket(rng, ties, stride):
     cols = ["term_id", "first_doc", "last_doc", "n_docs", "max_score", "docs", "tfs", "dls"]
     blocks = pd.DataFrame(rows, columns=cols)
     blocks.insert(0, "doc_bucket", 0)
-    return blocks, idf_by_tid, lo
+    return blocks, lo
 
 
 def _brute_force(blocks, idf_by_tid, allow, p):
@@ -184,7 +183,8 @@ def test_bucket_scorer_matches_brute_force(seed, use_blockmax):
 
     rng = np.random.default_rng(seed)
     stride = 1 if seed % 2 else 1009
-    blocks, idf_by_tid, lo = _two_term_bucket(rng, ties=seed % 3 == 0, stride=stride)
+    idf_by_tid = {3: 1.7, 9: 0.4}
+    blocks, lo = _encoded_bucket(rng, seed % 3 == 0, stride, idf_by_tid)
     for k in (1, 3, 10, 1000):
         p = _Bm25Params(k1=1.2, b=0.75, avgdl=50.0, k=k, use_blockmax=use_blockmax)
         score = _bucket_scorer(p, idf_by_tid)
@@ -197,3 +197,52 @@ def test_bucket_scorer_matches_brute_force(seed, use_blockmax):
             assert [x.hex() for x in got["score"].to_numpy()[order]] == [
                 x.hex() for x in want_s
             ]
+
+
+# ------------------------------------------------ engine's batch scorer --
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_batch_bucket_scorer_matches_per_term(seed):
+    """engine._batch_bucket_scorer (blocks of three terms arriving
+    interleaved, one bulk decode per bucket, one top-k per distinct term
+    set) against a per-term decode + _score_arrays + accumulate + topk in
+    sorted-term order: same rows, same float bits. Covers queries sharing
+    one term set, a query repeating a term, a query whose terms are all
+    absent from the bucket, and k above the candidate count."""
+    from gloomy_spark.query.engine import (
+        _batch_bucket_scorer, _Bm25Params, _decode_blocks, _score_arrays,
+    )
+
+    rng = np.random.default_rng(seed)
+    idf_by_tid = {-7: 2.3, 3: 1.7, 9: 0.4}
+    stride = 1 if seed % 2 else 1009
+    blocks, _ = _encoded_bucket(rng, seed % 3 == 0, stride, idf_by_tid)
+    absent = {41: 0.9, 77: 3.1}  # batch terms with no block in this bucket
+    queries = [[3, 9], [9, 3], [-7, 9, -7], [41, 77], [9], [3, -7, 9, 41], [3, 3]]
+    qids_by_tset = {}
+    for qi, q in enumerate(queries):
+        qids_by_tset.setdefault(tuple(sorted(set(q))), []).append(qi)
+    for k in (1, 5, 10_000):
+        p = _Bm25Params(k1=1.2, b=0.75, avgdl=50.0, k=k, use_blockmax=False)
+        got = _batch_bucket_scorer(p, {**idf_by_tid, **absent}, qids_by_tset)(blocks)
+        assert not (got["query_id"] == 3).any()
+        for qi, q in enumerate(queries):
+            docs_l, scores_l = [], []
+            for t in sorted(set(q)):
+                rows = blocks[blocks["term_id"] == t]
+                d, tf, dl = _decode_blocks(rows)
+                tf, dl = tf.astype(np.float64), dl.astype(np.float64)
+                idf = np.repeat(rows["term_id"].map(idf_by_tid).to_numpy(np.float64), rows["n_docs"])
+                docs_l.append(d)
+                scores_l.append(_score_arrays(tf, dl, idf, p))
+            want_d, want_s = topk(*accumulate(docs_l, scores_l), k)
+            mine = got[got["query_id"] == qi]
+            order = np.lexsort((mine["doc_id"].to_numpy(), -mine["score"].to_numpy()))
+            assert mine["doc_id"].to_numpy()[order].tolist() == want_d.tolist()
+            assert [x.hex() for x in mine["score"].to_numpy()[order]] == [
+                x.hex() for x in want_s
+            ]
+        if k == 10_000:  # every candidate of query [9] comes back
+            n9 = int(blocks.loc[blocks["term_id"] == 9, "n_docs"].sum())
+            assert int((got["query_id"] == 4).sum()) == n9

@@ -123,8 +123,9 @@ def test_pairwise_above_finds_planted_near_dups(spark):
 @pytest.mark.spark
 def test_bm25_batch_plan_shape(small_index):
     """The batched-serving plan must be: ONE parquet scan with the query
-    terms' ids pushed down, ONE doc_bucket shuffle of compressed blocks
-    (no per-query payload duplication), the pandas scorer, and a
+    terms' ids pushed down, at most ONE doc_bucket shuffle of compressed
+    blocks (none when one task scores every bucket), the shared
+    per-bucket mapInArrow scorer (no grouped pandas UDF), and a
     partitioned per-query top-k (map-side WindowGroupLimit, never a
     single-task global sort)."""
     import re
@@ -149,8 +150,9 @@ def test_bm25_batch_plan_shape(small_index):
         else per_batch.find("FileScan")
     )
     assert "term_id" in per_batch[scan_at : scan_at + 400], plan
-    assert len(re.findall(r"Exchange hashpartitioning", per_batch)) == 2, plan
-    assert "FlatMapGroupsInPandas" in per_batch
+    assert len(re.findall(r"Exchange hashpartitioning\(doc_bucket", per_batch)) <= 1, plan
+    assert "MapInArrow" in per_batch, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
     assert "WindowGroupLimit" in per_batch  # per-query top-k pushed map-side
 
 

@@ -680,12 +680,13 @@ def test_ann_gate_catches_broken_scores(spark):
 
 @pytest.mark.spark
 def test_batch_scorer_partition_cap(small_index, spark):
-    """The scorer's explicit repartition is capped at max(2×groups,
-    2×cores): grouped-map python tasks cost ~90 ms each even when empty,
-    so scheduling shuffle.partitions-many tasks for a handful of scoring
-    groups multiplies fixed latency (BENCH/BASELINE.md r4). With a small
-    bucket count the plan's scorer exchange must use the capped count,
-    not the session's shuffle.partitions."""
+    """The batch scorer's doc_bucket exchange is capped at
+    min(cfg.shuffle_partitions, doc buckets) (_scorer_parts): python
+    tasks cost ~90 ms each even when empty, so scheduling
+    shuffle.partitions-many tasks for a handful of buckets multiplies
+    fixed latency (BENCH/BASELINE.md r4). The session's
+    shuffle.partitions must not leak into it; a plan with no such
+    exchange (coalesce(1), one task) passes trivially."""
     import re
 
     si = small_index
@@ -703,12 +704,8 @@ def test_batch_scorer_partition_cap(small_index, spark):
                 r"Exchange hashpartitioning\(doc_bucket[^)]*, (\d+)\)", plan
             )
         ]
-        assert counts, plan
-        cores = spark.sparkContext.defaultParallelism
-        nb = si._n_doc_buckets
-        cap = max(2 * nb * 8, 2 * cores)  # Q ≤ 8 upper bound
+        cap = min(int(si.cfg.shuffle_partitions), si._n_doc_buckets)
         assert all(c <= cap for c in counts), (counts, cap, plan)
-        assert all(c < 200 for c in counts), (counts, plan)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
@@ -746,51 +743,6 @@ def test_microbatcher_survives_batch_failure(small_index):
     mb.close()
     with pytest.raises(RuntimeError, match="closed"):
         mb.query("x", 1)
-
-
-@pytest.mark.spark
-def test_perfect_scorer_partitioning_is_injective(small_index, spark):
-    """For small group counts the batch scorer places each scoring group
-    in its OWN shuffle partition: the salt search must return one row per
-    (doc_bucket, qgrp) whose spark-hash mod n_partitions is a bijection,
-    and the batch result must be unchanged."""
-    si = small_index
-    for Q in (1, 2):
-        got = si._perfect_scorer_partitioning(Q)
-        assert got, f"perfect partitioning should engage at nb={si._n_doc_buckets}, Q={Q}"
-        n_parts, salt_rows = got
-        assert n_parts == si._n_doc_buckets * Q == len(salt_rows)
-        df = spark.createDataFrame(
-            salt_rows, "doc_bucket long, qgrp int, psalt int"
-        ).withColumn("h", F.hash("doc_bucket", "qgrp", "psalt"))
-        slots = [int(r["h"]) % n_parts for r in df.collect()]
-        assert len(set(slots)) == n_parts, "slot collision — not a bijection"
-    # cached second call returns the identical object
-    assert si._perfect_scorer_partitioning(1) is si._perfect_scorer_partitioning(1)
-
-
-@pytest.mark.spark
-def test_spark_hash_parity(spark):
-    """The driver-side murmur3 replica must agree with F.hash for the
-    (long, int, int) column chain the perfect-partitioning salt search
-    places by — including negative doc_buckets (xxhash64 ids) and the
-    full int64 range."""
-    import random
-
-    from gloomy_spark.query.engine import _spark_hash_bqs
-
-    rng = random.Random(1234)
-    rows = [
-        (rng.randint(-(2 ** 63), 2 ** 63 - 1), rng.randint(0, 7), rng.randint(0, 511))
-        for _ in range(200)
-    ] + [(0, 0, 0), (-1, 0, 1), (2 ** 63 - 1, 7, 511), (-(2 ** 63), 3, 17)]
-    df = spark.createDataFrame(
-        rows, "doc_bucket long, qgrp int, psalt int"
-    ).withColumn("h", F.hash("doc_bucket", "qgrp", "psalt"))
-    for r in df.collect():
-        assert _spark_hash_bqs(
-            int(r["doc_bucket"]), int(r["qgrp"]), int(r["psalt"])
-        ) == int(r["h"]), (r["doc_bucket"], r["qgrp"], r["psalt"])
 
 
 # ------------------------------------------------------ boolean search --

@@ -345,14 +345,46 @@ def test_config_with_removed_keys_opens_and_round_trips(spark, small_index, tmp_
     assert "proc_chunk_size" not in cfg.to_json()
 
 
+# ------------------------------------------------------- package shipping --
+
+
+@pytest.mark.spark
+def test_ship_package_zip_path_is_per_process(spark, monkeypatch):
+    """ship_package must not write the shared fixed temp path (two
+    checkouts running at once would overwrite each other's zip), and the
+    zip it registers must hold the package's .py files."""
+    import os
+    import tempfile
+    import zipfile
+
+    from gloomy_spark import session
+
+    sc = spark.sparkContext
+    added = []
+    monkeypatch.setattr(session, "_SHIPPED", set())
+    monkeypatch.setattr(sc, "addPyFile", added.append)
+    session.ship_package(spark)
+    assert len(added) == 1
+    zpath = added[0]
+    assert zpath != os.path.join(tempfile.gettempdir(), "gloomy_spark_pyfiles.zip")
+    assert zpath.endswith(".zip")
+    names = set(zipfile.ZipFile(zpath).namelist())
+    pkg = os.path.dirname(session.__file__)
+    want = {
+        os.path.join("gloomy_spark", os.path.relpath(os.path.join(r, f), pkg))
+        for r, _, fs in os.walk(pkg) for f in fs if f.endswith(".py")
+    }
+    assert "gloomy_spark/query/engine.py" in names and names == want
+
+
 # ----------------------------------------------------- batch serving view --
 
 
 @pytest.fixture(scope="module")
 def view_index(spark, tmp_path_factory):
-    """Index with MORE doc buckets than cores so the batch scorer's
-    query-group salting stays off (Q == 1) and the serving view engages
-    — the regime of real corpora (buckets >> executors)."""
+    """Index with MORE doc buckets than cores — the regime of real
+    corpora (buckets >> executors), where the batch scorer's exchange
+    spreads buckets over several tasks."""
     from gloomy_spark.build import IndexBuilder
     from gloomy_spark.corpus import pages_df
     from gloomy_spark.query.engine import SearchIndex
@@ -382,47 +414,3 @@ def test_batch_serving_view_rank_identical(view_index):
         for r in si.bm25_topk(q, 10, use_blockmax=False).collect()
     )
     assert on == per_query and len(on) > 0
-
-
-@pytest.mark.spark
-def test_batch_serving_view_no_exchange(view_index):
-    """The per-batch plan through the view must have NO exchange between
-    the cached scan and the grouped scorer — that shuffle (plus the
-    parquet scan below it) is the fixed per-batch cost the view removes.
-    A constant qgrp column would silently re-insert it (constant-folded
-    out of the cached partitioning), hence the 2-column layout pin."""
-    df = view_index.bm25_topk_batch(["the data", "a merge"], 5)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    s = plan.find("FlatMapGroupsInPandas")
-    e = plan.find("InMemoryRelation", s)
-    assert s != -1 and e != -1
-    assert plan[s:e].count("Exchange ") == 0, plan[s:e]
-
-
-@pytest.mark.spark
-def test_view_salts_collision_free(view_index):
-    """The 2-column murmur3 replica must place every doc_bucket in a
-    distinct partition (that is the whole point of the perfect layout)."""
-    from gloomy_spark.query.engine import _spark_hash_bs
-
-    salts = view_index._view_salts()
-    assert salts is not None
-    g, rows = salts
-    slots = [_spark_hash_bs(b, s) % g for b, s in rows]
-    assert len(set(slots)) == len(rows) == g
-
-
-@pytest.mark.spark
-def test_spark_hash_bs_parity(spark):
-    """Driver murmur3 replica == F.hash(bigint, int) for the 2-column
-    serving-view layout, across sign/width edges."""
-    from gloomy_spark.query.engine import _spark_hash_bs
-
-    cases = [(0, 0), (1, 7), (-1, 3), (2**40, 63), (-(2**40), 1),
-             (2**62, 5), (17, 0), (123456789, 42)]
-    df = spark.createDataFrame(cases, "b long, s int").select(
-        F.hash(F.col("b"), F.col("s")).alias("h")
-    )
-    got = [int(r["h"]) for r in df.collect()]
-    want = [_spark_hash_bs(b, s) for b, s in cases]
-    assert got == want

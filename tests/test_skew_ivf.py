@@ -7,28 +7,9 @@ from pyspark.sql import functions as F
 
 from gloomy_spark.ops.dedup import minhash_lsh_pairs
 from gloomy_spark.ops.simsearch import cosine_topk, ivf_topk
-from gloomy_spark.ops.skew import cap_buckets, salted_term_stats
+from gloomy_spark.ops.skew import cap_buckets
 
 SF = "/root/testdata/sf0.01"
-
-
-@pytest.mark.spark
-def test_salted_term_stats_equals_direct(spark):
-    docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
-    from gloomy_spark.functions.text import tokens_col
-
-    toks = docs.select(
-        "doc_id", F.explode(tokens_col(F.col("text"))).alias("term")
-    )
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    direct = {
-        (r.term): (r.df, r.cf)
-        for r in postings.groupBy("term")
-        .agg(F.count("*").cast("long").alias("df"), F.sum("tf").cast("long").alias("cf"))
-        .collect()
-    }
-    salted = {r.term: (r.df, r.cf) for r in salted_term_stats(postings).collect()}
-    assert salted == direct
 
 
 @pytest.mark.spark
