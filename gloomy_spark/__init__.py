@@ -5,7 +5,7 @@ reference n-gram database (tomachalek/gloomy, Go), re-designed Spark-first:
 
 - DataFrame/SQL logical plans, Catalyst/Tungsten physical execution;
 - vectorized Arrow/pandas UDFs only where built-ins can't express the
-  semantics (varint block codecs, block-max WAND);
+  semantics (varint block codecs, the per-bucket BM25 kernel);
 - explicit partitioning strategy for 100 TB scale: salted two-phase
   aggregation for head-term skew, repartitionByRange(term_id, doc_id) for
   globally docID-sorted posting runs, broadcast term dictionaries.
@@ -18,7 +18,7 @@ Layout:
     corpus        deterministic Common-Crawl-style `pages` corpus generator
     build         index build pipeline (postings, dictionary, segments)
     index_store   on-disk index layout, manifest, lineage, resume
-    query         regex→prefix compiler + BM25/WAND query engine
+    query         regex→prefix compiler + BM25 query engine
     oracle        slow, obviously-correct pure-Python oracle for tests
     ops           large-scale training-data ops (dedup, ANN, text stats)
 """

@@ -15,7 +15,7 @@ Dataflow (each stage is a resumable checkpoint, per SURVEY.md §3.1):
                                 hash shuffle (no sampling pass, no JVM
                                 sort operator) → vectorized block writer
                                 (numpy radix partition sort, delta+varint,
-                                per-block max_score for block-max WAND)
+                                per-block max_score: BM25 upper bound)
 
 Scale notes (designed for 10^12 docs / 1000 executors, tested on local[32]):
 - groupBy(term, doc_id) keys are high-cardinality → no skew;
@@ -57,6 +57,8 @@ from .config import DEFAULT_CONFIG, EngineConfig
 from .corpus import extract_text
 from .functions.text import tokens_col
 from .index_store import BucketRecord, IndexStore, Manifest
+from .query.kernel import bm25_scores
+from .session import ensure_min_partitions
 
 # below this row count, dictionary id assignment happens driver-side (one
 # collect) instead of the 3-job distributed zipWithIndex pattern
@@ -436,7 +438,7 @@ def _segment_writer(cfg: EngineConfig, avgdl: float):
             offs = np.concatenate(([0], np.cumsum(sel))).astype(np.int64)
 
         doc_bucket = doc_id // bucket_width
-        score = idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * (dl / avgdl)))
+        score = bm25_scores(tf, dl, idf, k1, b, avgdl)
 
         # ---- block boundaries: new (term_id, doc_bucket) group, or a
         # multiple of `block` postings within a group (all vectorized)
@@ -696,22 +698,14 @@ class IndexBuilder:
             _bprev = self.spark.conf.get(_bk)
             self.spark.conf.set(_bk, str(int(cfg.inverter_batch_rows)))
             try:
-                # degenerate-input parallelism guard (guide §2.5 "input
-                # skew: one huge unsplittable file"): a corpus stored as a
-                # single parquet row group (or one gzip file) yields ONE
-                # scan partition, serializing tokenize+invert on one core
-                # — measured 7.96 s → the whole stage single-task at
-                # local[32] on the sf1.0 fixture. When the scan has fewer
-                # partitions than the cluster's slots, redistribute the
-                # raw (doc_id, text) rows first: a tiny shuffle of input
-                # bytes unlocks every core AND gives postings_raw enough
-                # files for the downstream dict/segment scans to
-                # parallelize. At scale, input splits >> slots and this
-                # never triggers.
-                src = base.select("doc_id", "text")
-                par = self.spark.sparkContext.defaultParallelism
-                if src.rdd.getNumPartitions() < par:
-                    src = src.repartition(par)
+                # degenerate-input parallelism guard: a corpus stored as
+                # a single parquet row group yields ONE scan partition,
+                # serializing tokenize+invert on one core (measured 7.96 s
+                # → the whole stage single-task at local[32] on the sf1.0
+                # fixture). Redistributing the raw (doc_id, text) rows
+                # also gives postings_raw enough files for the downstream
+                # dict/segment scans to parallelize.
+                src = ensure_min_partitions(base.select("doc_id", "text"))
                 (
                     src.select(F.col("doc_id"), term_expr.alias("tokens"))
                     .mapInArrow(_partition_inverter(cfg), schema)

@@ -1,7 +1,7 @@
 """Vectorized delta + varint (LEB128) codecs for posting blocks.
 
 Pure numpy — no per-element Python loops — so the segment-writer and the
-WAND scorer stay Arrow-speed inside pandas UDFs. This replaces the
+BM25 scorers stay Arrow-speed inside Python UDFs. This replaces the
 reference's fixed-width little-endian column files (behavioral analog of
 index/column/column.go:77-97 serialization) with the standard
 block-compressed posting layout: sorted docIDs are delta-encoded then

@@ -29,10 +29,10 @@ class EngineConfig:
     # BM25 scoring (new capability per BASELINE.json:6)
     bm25: BM25Config = field(default_factory=BM25Config)
     # posting-segment block structure: docs per block; per-block max_score
-    # powers block-max WAND skipping
+    # is the block's BM25 upper bound (for pruning blocks at the scan)
     block_size: int = 128
     # store per-posting position lists in segments (needed for phrase
-    # queries; BM25/WAND does not read them)
+    # queries; BM25 does not read them)
     store_positions: bool = True
     # fixed doc-range width for posting blocks: blocks never cross a
     # doc_bucket boundary so the query side can co-locate all query terms'

@@ -276,7 +276,7 @@ def _rounded_topk(fetch, k: int, group=lambda r: None) -> list:
 
 def _rounded_topk_rows(si, query: str, k: int) -> list:
     return _rounded_topk(
-        lambda n: si.bm25_topk(query, k=n, use_blockmax=True)
+        lambda n: si.bm25_topk(query, k=n)
         .select("doc_id", F.round("score", 4).alias("score"))
         .collect(),
         k,
@@ -284,7 +284,8 @@ def _rounded_topk_rows(si, query: str, k: int) -> list:
 
 
 def q_bm25_wand(query: str, k: int):
-    """Index-backed BM25 through the full segment/WAND path."""
+    """Index-backed BM25 through the segment path: bm25_topk's per-bucket
+    kernel over the query terms' posting blocks."""
     from .textnorm import tokenize
 
     qterms = list(dict.fromkeys(tokenize(query, CFG)))

@@ -12,27 +12,27 @@ bm25_topk_batch):
                                                     in one task; n from the
                                                     query's posting volume
       mapInArrow(_per_bucket_arrow)              ── per bucket: one bulk
-                                                    decode, block-max sweep
-                                                    (batch: one top-k per
-                                                    distinct term set);
+                                                    decode; BM25: one top-k
+                                                    per distinct term set;
                                                     one python call per task
       orderBy(score desc, doc_id asc) LIMIT k    ── TakeOrderedAndProject
       | row_number() per query_id <= k           ── batch: WindowGroupLimit
 
 Every posting decode goes through ``decode_posting_blocks_bulk`` (one
-call per bucket or Arrow batch, never one per block). The sweep is
-exact: piecewise-constant upper bounds come from block metadata only
-(first_doc/last_doc/max_score), and blocks are scored in upper-bound
-order until the k-th best exact score exceeds the next segment's bound.
-Faceted search runs in the same shape, with the allowed docs unioned
-into the blocks' exchange. Every BM25 scorer, driver-local
-``bm25_serve`` included, shares the numerics in ``query/kernel.py``:
-per-doc accumulation and exact top-k.
+call per bucket or Arrow batch, never one per block). The three BM25
+operators share one bucket kernel, ``_bucket_scorer``: it decodes and
+scores every shipped block of the bucket, drops non-allowed docs for
+faceted search (the allowed docs ride in the blocks' exchange), and sums
+each doc's term scores in sorted term_id order, so a query gets the same
+score bits from all three. The kernel is exhaustive over the blocks it
+receives; block ``max_score`` stays in the index for pruning blocks at
+the scan. Every BM25 scorer, driver-local ``bm25_serve`` included,
+shares the numerics in ``query/kernel.py``: the term score, per-doc
+accumulation and exact top-k.
 """
 
 from __future__ import annotations
 
-import heapq
 import threading
 from collections import OrderedDict
 from dataclasses import dataclass
@@ -48,13 +48,14 @@ from ..codecs import decode_position_lists, decode_posting_blocks_bulk
 from ..config import EngineConfig
 from ..index_store import IndexStore, Manifest
 from ..textnorm import tokenize
-from .kernel import accumulate, topk
+from .kernel import accumulate, bm25_scores, topk
 from .regexparser import regex_to_prefixes
 
 TOPK_SCHEMA = "doc_id long, score double"
-_TOPK_ARROW = pa.schema([("doc_id", pa.int64()), ("score", pa.float64())])
-_BATCH_SCHEMA = "query_id int, " + TOPK_SCHEMA
-_BATCH_ARROW = pa.schema([("query_id", pa.int32()), *_TOPK_ARROW])
+_SCORED_SCHEMA = "query_id int, " + TOPK_SCHEMA
+_SCORED_ARROW = pa.schema(
+    [("query_id", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float64())]
+)
 _NO_POSTINGS = (np.empty(0, np.int64), np.empty(0, np.float64))
 
 
@@ -100,11 +101,6 @@ class _Bm25Params:
     b: float
     avgdl: float
     k: int
-    use_blockmax: bool
-
-
-def _score_arrays(tf: np.ndarray, dl: np.ndarray, idf: np.ndarray, p: _Bm25Params) -> np.ndarray:
-    return idf * (tf * (p.k1 + 1.0)) / (tf + p.k1 * (1.0 - p.b + p.b * (dl / p.avgdl)))
 
 
 def _decode_blocks(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -119,62 +115,47 @@ def _decode_blocks(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarra
     )
 
 
-def _bucket_scorer(p: _Bm25Params, idf_by_tid: dict[int, float]):
-    """Scorer for one doc_bucket: exact top-k over the bucket's posting
-    blocks (rows carrying term_id, first_doc, last_doc, max_score and the
-    block payload) → (doc_id, score) frame. ``allow``, an array of doc
-    ids, restricts the candidates (facets); block max_score stays a
-    valid upper bound under that restriction, so the sweep stays exact."""
-
-    def score(blocks: pd.DataFrame, allow: np.ndarray | None = None) -> pd.DataFrame:
-        n = blocks["n_docs"].to_numpy(np.int64)
-        d, tf, dl = _decode_blocks(blocks)
-        idf = np.repeat(blocks["term_id"].map(idf_by_tid).to_numpy(np.float64), n)
-        offsets = np.concatenate(([0], np.cumsum(n)))
-        if allow is not None:
-            # not assume_unique: d holds a doc once per query term
-            keep = np.isin(d, allow)
-            d, tf, dl, idf = d[keep], tf[keep], dl[keep], idf[keep]
-            offsets = np.concatenate(([0], np.cumsum(keep)))[offsets]
-        s = _score_arrays(tf.astype(np.float64), dl.astype(np.float64), idf, p)
-        # per-block slices, in block order, so every doc's postings are
-        # summed in the same order by both paths
-        cuts = offsets[1:-1]
-        docs_l, scores_l = np.split(d, cuts), np.split(s, cuts)
-        if not p.use_blockmax:
-            return _exhaustive_topk(docs_l, scores_l, p.k)
-        return _blockmax_sweep(
-            blocks["first_doc"].to_numpy(np.int64),
-            blocks["last_doc"].to_numpy(np.int64),
-            blocks["max_score"].to_numpy(np.float64),
-            docs_l, scores_l, p,
-        )
-
-    return score
-
-
-def _batch_bucket_scorer(
+def _bucket_scorer(
     p: _Bm25Params, idf_by_tid: dict[int, float],
-    qids_by_tset: dict[tuple[int, ...], list[int]],
+    qids_by_tset: dict[tuple[int, ...], list[int]], facet: bool = False,
 ):
-    """Batch scorer for one doc_bucket → (query_id, doc_id, score) frame
-    holding each query's exact top-k within the bucket. The bucket's
-    blocks are stable-sorted by term_id and bulk-decoded once, so every
-    term is one contiguous (doc, score) span; each distinct sorted term
-    set then sums its terms' spans in sorted-term order (absent terms as
-    empty spans) and takes one top-k shared by all its queries."""
+    """The BM25 kernel for one doc_bucket, shared by bm25_topk,
+    bm25_topk_filtered and bm25_topk_batch → (query_id, doc_id, score)
+    frame holding each query's exact top-k within the bucket.
+
+    The bucket's blocks are stable-sorted by term_id, bulk-decoded and
+    scored once, so every term is one contiguous (doc, score) span. With
+    ``facet``, rows tagged ``n_docs = 0`` carry the allowed doc ids (in
+    first_doc), and postings of any other doc are dropped after decode.
+    Each distinct sorted term set then sums its terms' spans in
+    sorted-term order (absent terms as empty spans) and takes one top-k
+    shared by all its queries. Every shipped block is decoded; block
+    max_score bounds can only prune blocks before they are shipped."""
     groups = [(tset, np.asarray(qids, np.int32)) for tset, qids in qids_by_tset.items()]
+    empty = pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
 
     def score(blocks: pd.DataFrame) -> pd.DataFrame:
+        if facet:
+            tagged = blocks["n_docs"].to_numpy() == 0
+            allow = blocks["first_doc"].to_numpy(np.int64)[tagged]
+            blocks = blocks[~tagged]
+            if not len(allow) or not len(blocks):
+                return empty
         tids = blocks["term_id"].to_numpy(np.int64)
         order = np.argsort(tids, kind="stable")
         blocks, tids = blocks.iloc[order], tids[order]
         n = blocks["n_docs"].to_numpy(np.int64)
         d, tf, dl = _decode_blocks(blocks)
         idf = np.repeat(blocks["term_id"].map(idf_by_tid).to_numpy(np.float64), n)
-        s = _score_arrays(tf.astype(np.float64), dl.astype(np.float64), idf, p)
+        s = bm25_scores(tf, dl, idf, p.k1, p.b, p.avgdl)
         uniq, first = np.unique(tids, return_index=True)
-        cuts = np.concatenate(([0], np.cumsum(n)))[np.append(first, len(tids))].tolist()
+        cuts = np.concatenate(([0], np.cumsum(n)))[np.append(first, len(tids))]
+        if facet:
+            # not assume_unique: d holds a doc once per query term
+            keep = np.isin(d, allow)
+            d, s = d[keep], s[keep]
+            cuts = np.concatenate(([0], np.cumsum(keep)))[cuts]
+        cuts = cuts.tolist()
         spans = {
             t: (d[a:b], s[a:b]) for t, a, b in zip(uniq.tolist(), cuts[:-1], cuts[1:])
         }
@@ -187,7 +168,7 @@ def _batch_bucket_scorer(
                 out_d.append(np.tile(td, len(qids)))
                 out_s.append(np.tile(ts, len(qids)))
         if not out_q:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
+            return empty
         return pd.DataFrame({
             "query_id": np.concatenate(out_q),
             "doc_id": np.concatenate(out_d),
@@ -222,89 +203,10 @@ def _per_bucket_arrow(fn, arrow_schema):
     return run
 
 
-def _exhaustive_topk(docs_l: list, scores_l: list, k: int) -> pd.DataFrame:
-    """Brute-force DAAT over per-block (doc_ids, scores): accumulate, top-k."""
-    d, s = topk(*accumulate(docs_l, scores_l), k)
-    return pd.DataFrame({"doc_id": d, "score": s})
-
-
-def _blockmax_sweep(
-    first: np.ndarray, last: np.ndarray, bmax: np.ndarray,
-    docs_l: list, scores_l: list, p: _Bm25Params,
-) -> pd.DataFrame:
-    """Exact block-max top-k sweep over one bucket's posting blocks.
-
-    ``docs_l[i], scores_l[i]`` are block i's decoded (doc_ids, scores);
-    they may hold FEWER docs than the block (a facet allow-mask applied
-    after decode): block metadata bounds stay valid upper bounds because
-    filtering only removes candidates — it can never raise a true score
-    above max_score. The sweep stays rank-exact in that case."""
-    n_blocks = len(first)
-    # piecewise-constant upper bound over doc ranges from metadata only
-    ev_pos = np.concatenate([first, last + 1])
-    ev_val = np.concatenate([bmax, -bmax])
-    ev_cnt = np.concatenate(
-        [np.ones(n_blocks, np.int64), -np.ones(n_blocks, np.int64)]
-    )
-    order = np.argsort(ev_pos, kind="stable")
-    ev_pos, ev_val, ev_cnt = ev_pos[order], ev_val[order], ev_cnt[order]
-    # merge events at equal positions
-    bounds, idx = np.unique(ev_pos, return_index=True)
-    seg_ub = np.add.reduceat(ev_val, idx).cumsum()
-    # open-block count tells us exactly where the +x/−x cumsum should
-    # cancel to zero: no magnitude epsilon, so legitimately tiny
-    # max_scores (idf→0 at df≈N) are never dropped. Where blocks ARE
-    # open, inflate the bound by one relative ulp-scale step so float
-    # cancellation error can only weaken pruning, never skip a block.
-    seg_open = np.add.reduceat(ev_cnt, idx).cumsum()
-    # segment i covers [bounds[i], bounds[i+1]); last event closes all
-    seg_starts = bounds[:-1]
-    seg_ends = bounds[1:]
-    seg_ub = seg_ub[:-1]
-    seg_open = seg_open[:-1]
-    pad = 1e-9 * float(np.abs(bmax).max()) if n_blocks else 0.0
-    seg_ub = np.where(seg_open > 0, seg_ub + pad, 0.0)
-
-    live = seg_open > 0
-    seg_starts, seg_ends, seg_ub = seg_starts[live], seg_ends[live], seg_ub[live]
-    ub_order = np.argsort(-seg_ub, kind="stable")
-
-    heap: list[tuple[float, int]] = []  # min-heap of (score, -doc_id)
-    theta = -np.inf
-    scored_docs: set[int] = set()
-
-    for si in ub_order:
-        # strict '<' so an exact tie with θ is still examined (the
-        # smaller doc_id must win the tie-break deterministically)
-        if len(heap) >= p.k and seg_ub[si] < theta:
-            break
-        lo, hi = seg_starts[si], seg_ends[si]
-        # all blocks overlapping [lo, hi)
-        blk = np.nonzero((first < hi) & (last >= lo))[0]
-        seg_docs, seg_scores = [], []
-        for i in blk:
-            d, s = docs_l[i], scores_l[i]
-            m = (d >= lo) & (d < hi)
-            seg_docs.append(d[m])
-            seg_scores.append(s[m])
-        uniq, tot = accumulate(seg_docs, seg_scores)
-        for d, s in zip(uniq.tolist(), tot.tolist()):
-            if d in scored_docs:
-                continue
-            scored_docs.add(d)
-            item = (s, -d)  # tie-break: higher doc_id evicted first
-            if len(heap) < p.k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-        if len(heap) >= p.k:
-            theta = heap[0][0]
-
-    if not heap:
-        return pd.DataFrame({"doc_id": [], "score": []})
-    out_docs = np.array([-d for _, d in heap], dtype=np.int64)
-    out_scores = np.array([s for s, _ in heap])
-    return pd.DataFrame({"doc_id": out_docs, "score": out_scores})
+def _merge_topk(per_bucket: DataFrame, k: int) -> DataFrame:
+    """A single query's global top-k from its per-bucket rows (query_id
+    is always 0): score desc, doc_id asc, as one TakeOrderedAndProject."""
+    return per_bucket.drop("query_id").orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 class SearchIndex:
@@ -1059,13 +961,9 @@ class SearchIndex:
         )
 
     # ------------------------------------------------------------ BM25 --
-    def _bm25_params(self, k: int, use_blockmax: bool) -> _Bm25Params:
+    def _bm25_params(self, k: int) -> _Bm25Params:
         return _Bm25Params(
-            k1=self.cfg.bm25.k1,
-            b=self.cfg.bm25.b,
-            avgdl=self.manifest.avgdl,
-            k=k,
-            use_blockmax=use_blockmax,
+            k1=self.cfg.bm25.k1, b=self.cfg.bm25.b, avgdl=self.manifest.avgdl, k=k
         )
 
     def _query_blocks(
@@ -1103,29 +1001,21 @@ class SearchIndex:
         est = sum(int(df) for *_, df in hits)
         return blocks, idf_by_tid, est, {t: int(tid) for t, tid, *_ in hits}
 
-    def bm25_topk(self, query: str, k: int = 10, use_blockmax: bool = True) -> DataFrame:
+    def bm25_topk(self, query: str, k: int = 10) -> DataFrame:
         """Top-k BM25: score desc, doc_id asc tie-break — rank-identical
         with the exhaustive oracle."""
         found = self._query_blocks(tokenize(query, self.cfg))
         if found is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
         blocks, idf_by_tid, est, _ = found
-        score = _bucket_scorer(self._bm25_params(k, use_blockmax), idf_by_tid)
-        per_bucket = self._per_bucket(blocks, est, score, _TOPK_ARROW, TOPK_SCHEMA)
-        return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    # facet-aware block-max (r4 verdict next #4): inside a bucket the
-    # sweep only pays off when the allow set is dense enough for θ to
-    # fill quickly (sparse facets leave θ at −inf while the sweep decodes
-    # everything the exhaustive path would, plus sweep overhead) and
-    # there are enough blocks for pruning to skip any. Density is
-    # |allowed ∩ bucket| / bucket_width, known exactly per bucket.
-    _FACET_SWEEP_MIN_DENSITY = 0.05
-    _FACET_SWEEP_MIN_BLOCKS = 8
+        score = _bucket_scorer(
+            self._bm25_params(k), idf_by_tid, {tuple(sorted(idf_by_tid)): [0]}
+        )
+        per_bucket = self._per_bucket(blocks, est, score, _SCORED_ARROW, _SCORED_SCHEMA)
+        return _merge_topk(per_bucket, k)
 
     def bm25_topk_filtered(
-        self, query: str, k: int, attr: str, values: list[str],
-        use_blockmax: bool | None = None,
+        self, query: str, k: int, attr: str, values: list[str]
     ) -> DataFrame:
         """Faceted top-k BM25: rank only docs whose dimension attribute
         ``attr`` is in ``values`` (e.g. lang='en'). IDF/avgdl stay
@@ -1138,16 +1028,8 @@ class SearchIndex:
         scan (a dictionary-encoded parquet column filter — PushedFilters,
         no corpus scan), bucketed by the same doc_bucket as the segments
         and unioned, tagged, into the query blocks' doc_bucket exchange;
-        inside each bucket the scorer restricts decoded postings to the
-        allowed ids before accumulation.
-
-        ``use_blockmax=None`` (default) picks PER BUCKET between the
-        exhaustive DAAT pass and a facet-aware block-max sweep: block
-        max_score stays a valid upper bound under filtering (removal only
-        lowers true scores), so the sweep is rank-exact with the
-        allow-mask applied after decode; it engages when the bucket's
-        allowed-doc density and block count clear the thresholds above.
-        Pass True/False to force one path (the differential test does)."""
+        inside each bucket the kernel drops the postings of docs outside
+        the allowed ids after decode, before accumulation."""
         # attr arrives unvalidated from /bm25?filter=attr:v1,… — reject
         # anything that is not an actual docs-dimension column BEFORE it
         # reaches an expression builder (defense in depth on top of the
@@ -1173,29 +1055,15 @@ class SearchIndex:
             "doc_id AS first_doc", "doc_id AS last_doc",
             "0 AS n_docs", "-1L AS term_id",
         )
-        sweep_score, full_score = (
-            _bucket_scorer(self._bm25_params(k, sweep), idf_by_tid)
-            for sweep in (True, False)
+        score = _bucket_scorer(
+            self._bm25_params(k), idf_by_tid, {tuple(sorted(idf_by_tid)): [0]},
+            facet=True,
         )
-        min_allowed = self._FACET_SWEEP_MIN_DENSITY * w
-        min_blocks = self._FACET_SWEEP_MIN_BLOCKS
-
-        def score(g: pd.DataFrame) -> pd.DataFrame:
-            tagged = g["n_docs"].to_numpy() == 0
-            allow = g["first_doc"].to_numpy(np.int64)[tagged]
-            g = g[~tagged]
-            if not len(allow) or not len(g):
-                return g.iloc[:0]
-            sweep = use_blockmax
-            if sweep is None:
-                sweep = len(g) >= min_blocks and len(allow) >= min_allowed
-            return (sweep_score if sweep else full_score)(g, allow)
-
         per_bucket = self._per_bucket(
             blocks.unionByName(allowed, allowMissingColumns=True),
-            est, score, _TOPK_ARROW, TOPK_SCHEMA,
+            est, score, _SCORED_ARROW, _SCORED_SCHEMA,
         )
-        return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _merge_topk(per_bucket, k)
 
     # driver-local serving fast path: total postings across the query's
     # terms must fit comfortably on the driver; heavier queries fall back
@@ -1209,7 +1077,7 @@ class SearchIndex:
         index.go:502-504 — this is the posting-list analog). Terms missing
         from the cache are fetched with one pushed-down segments scan;
         repeat terms cost no Spark job at all. Falls back to the
-        distributed block-max scorer when the query's total df exceeds
+        distributed scorer (bm25_topk) when the query's total df exceeds
         the driver budget — at 10¹² docs a head-term query MUST stay
         distributed. Returns [(doc_id, score)] (already exact-ordered,
         score desc / doc_id asc). Requires .cache()."""
@@ -1250,10 +1118,8 @@ class SearchIndex:
             fetched: dict[int, tuple[np.ndarray, np.ndarray]] = {}
             for tid, g in pdf.groupby("term_id"):
                 d, tf, dl = _decode_blocks(g)
-                tf = tf.astype(np.float64)
-                dl = dl.astype(np.float64)
-                # cache tf-part of the score (idf applied at query time)
-                part = (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * (dl / avgdl)))
+                # cache the tf part of the score (idf applied at query time)
+                part = bm25_scores(tf, dl, 1.0, k1, b, avgdl)
                 fetched[int(tid)] = (d, part)
             # score from the locally-fetched arrays DIRECTLY — the cache
             # is an optimization, never the source of truth, so a
@@ -1303,14 +1169,14 @@ class SearchIndex:
         gathers its terms' (doc, score) spans), then a PARTITIONED top-k
         window per query (map-side WindowGroupLimit, never a global
         single-task sort). query_id is the queries-list index; queries
-        with no indexed terms emit no rows. Exact scores (full DAAT per
-        bucket — with many queries sharing terms, block-max pruning would
-        save nothing since shared blocks must be decoded anyway;
-        use_blockmax is accepted for signature parity)."""
+        with no indexed terms emit no rows. Scores are bit-identical to
+        bm25_topk's for the same query (the same bucket kernel).
+        ``use_blockmax`` is ignored; it stays for callers that pass it
+        positionally."""
         toks_by_q = [tokenize(q, self.cfg) for q in queries]
         found = self._query_blocks([t for ts in toks_by_q for t in ts])
         if found is None:
-            return self.spark.createDataFrame([], _BATCH_SCHEMA)
+            return self.spark.createDataFrame([], _SCORED_SCHEMA)
         blocks, idf_by_tid, est, tid_by_term = found
         # queries normalizing to the SAME indexed term set share one
         # scoring pass (frequent in serving workloads)
@@ -1319,10 +1185,8 @@ class SearchIndex:
             tset = tuple(sorted({tid_by_term[t] for t in ts if t in tid_by_term}))
             if tset:
                 qids_by_tset.setdefault(tset, []).append(qi)
-        score = _batch_bucket_scorer(
-            self._bm25_params(k, False), idf_by_tid, qids_by_tset
-        )
-        per = self._per_bucket(blocks, est, score, _BATCH_ARROW, _BATCH_SCHEMA)
+        score = _bucket_scorer(self._bm25_params(k), idf_by_tid, qids_by_tset)
+        per = self._per_bucket(blocks, est, score, _SCORED_ARROW, _SCORED_SCHEMA)
         # A driver-side final merge (takeOrdered pattern: Arrow toPandas of
         # the ≤ buckets×queries×k per-bucket top-k rows + numpy lexsort)
         # was A/B-measured here and REJECTED: warm-session walls were

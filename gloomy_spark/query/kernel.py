@@ -1,11 +1,15 @@
-"""Shared scoring numerics: per-doc score accumulation and exact top-k.
+"""Shared scoring numerics: the BM25 term score, per-doc score
+accumulation and exact top-k.
 
-Every BM25 scorer in ``engine.py`` (the distributed per-bucket sweep and
-exhaustive pass, the batch scorer, driver-local serving) sums per-term
-(doc_id, score) arrays and ranks the sums by score desc, doc_id asc.
-Both steps live here so they have one implementation. Sums are added in
-input order (``np.bincount`` walks its input front to back), so scores
-are bit-identical to summing each doc's postings list by list.
+Every BM25 scorer (the distributed per-bucket kernel behind
+``bm25_topk``, ``bm25_topk_filtered`` and ``bm25_topk_batch``, and
+driver-local ``bm25_serve``) scores postings with :func:`bm25_scores`,
+sums per-term (doc_id, score) arrays and ranks the sums by score desc,
+doc_id asc; the segment writer computes each block's ``max_score`` with
+the same :func:`bm25_scores`. Each step lives here so it has one
+implementation. Sums are added in input order (``np.bincount`` walks its
+input front to back), so scores are bit-identical to summing each doc's
+postings list by list.
 """
 
 from __future__ import annotations
@@ -14,6 +18,14 @@ import numpy as np
 
 _EMPTY_DOCS = np.empty(0, np.int64)
 _EMPTY_SCORES = np.empty(0, np.float64)
+
+
+def bm25_scores(tf, dl, idf, k1: float, b: float, avgdl: float) -> np.ndarray:
+    """BM25 score of each posting: ``idf * tf * (k1 + 1) / (tf + k1 *
+    (1 - b + b * dl / avgdl))``, elementwise over arrays (integer tf/dl
+    are promoted to float64 exactly). ``idf=1.0`` gives the tf part alone
+    (``1.0 * x == x``), which callers may scale by idf later."""
+    return idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * (dl / avgdl)))
 
 
 def accumulate(

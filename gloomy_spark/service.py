@@ -33,6 +33,7 @@ Response: {"size": N, "rows": [...], "searchTime": sec}
 from __future__ import annotations
 
 import json
+import logging
 import threading
 import time
 from collections import OrderedDict
@@ -359,6 +360,14 @@ class SearchService:
             def log_message(self, *a):  # quiet
                 pass
 
+            def reply(self, code: int, out) -> None:
+                body = json.dumps(out).encode()
+                self.send_response(code)
+                self.send_header("Content-Type", "application/json")
+                self.send_header("Content-Length", str(len(body)))
+                self.end_headers()
+                self.wfile.write(body)
+
             def do_GET(self):
                 u = urlparse(self.path)
                 qs = parse_qs(u.query)
@@ -371,17 +380,11 @@ class SearchService:
                         # reference actionInfo (server.go:146-151,155-156)
                         from . import __version__
 
-                        out = {
+                        self.reply(200, {
                             "name": "gloomy-spark - the n-gram database",
                             "version": __version__,
                             "corpora": sorted(svc.indexes),
-                        }
-                        body = json.dumps(out).encode()
-                        self.send_response(200)
-                        self.send_header("Content-Type", "application/json")
-                        self.send_header("Content-Length", str(len(body)))
-                        self.end_headers()
-                        self.wfile.write(body)
+                        })
                         return
                     corpus = p("corpus")
                     if corpus not in svc.indexes:
@@ -422,19 +425,15 @@ class SearchService:
                     else:
                         self.send_error(404)
                         return
-                    body = json.dumps(out).encode()
-                    self.send_response(200)
-                    self.send_header("Content-Type", "application/json")
-                    self.send_header("Content-Length", str(len(body)))
-                    self.end_headers()
-                    self.wfile.write(body)
+                    self.reply(200, out)
+                except (KeyError, ValueError) as ex:
+                    # the request is at fault: unknown corpus or facet
+                    # attr, a non-integer number, a bad regex
+                    # (RegexPrefixError), filter= with nrt=1
+                    self.reply(400, {"error": str(ex)})
                 except Exception as ex:  # noqa: BLE001 — service boundary
-                    body = json.dumps({"error": str(ex)}).encode()
-                    self.send_response(400)
-                    self.send_header("Content-Type", "application/json")
-                    self.send_header("Content-Length", str(len(body)))
-                    self.end_headers()
-                    self.wfile.write(body)
+                    logging.getLogger(__name__).exception("%s failed", u.path)
+                    self.reply(500, {"error": str(ex)})
 
         self._server = ThreadingHTTPServer(("127.0.0.1", port), Handler)
         threading.Thread(target=self._server.serve_forever, daemon=True).start()

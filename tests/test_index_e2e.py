@@ -91,11 +91,10 @@ def test_segments_globally_doc_sorted(built):
 
 
 @pytest.mark.parametrize("query", QUERIES)
-@pytest.mark.parametrize("use_blockmax", [True, False])
-def test_bm25_rank_identical(built, query, use_blockmax):
+def test_bm25_rank_identical(built, query):
     index, oracle, _ = built
     expected = oracle.bm25_topk(query, k=10)
-    got = index.bm25_topk(query, k=10, use_blockmax=use_blockmax).collect()
+    got = index.bm25_topk(query, k=10).collect()
     assert [r["doc_id"] for r in got] == [d for d, _ in expected], query
     for r, (_, s) in zip(got, expected):
         assert r["score"] == pytest.approx(s, abs=1e-9), query

@@ -117,7 +117,7 @@ def test_zero_score_docs_kept():
     assert topk(*accumulate(docs_l, scores_l), 10)[0].tolist() == [2, 1, 3]
 
 
-# -------------------------------------------- engine's per-bucket scorer --
+# ------------------------------------------------ engine's bucket kernel --
 
 
 def _encoded_bucket(rng, ties, stride, idf_by_tid):
@@ -128,9 +128,8 @@ def _encoded_bucket(rng, ties, stride, idf_by_tid):
     import pandas as pd
 
     from gloomy_spark.codecs import encode_posting_block
-    from gloomy_spark.query.engine import _Bm25Params, _score_arrays
+    from gloomy_spark.query.kernel import bm25_scores
 
-    p = _Bm25Params(k1=1.2, b=0.75, avgdl=50.0, k=1, use_blockmax=False)
     lo = int(rng.integers(-(2**62), 2**62))
     rows = []
     for tid, idf in idf_by_tid.items():
@@ -143,7 +142,7 @@ def _encoded_bucket(rng, ties, stride, idf_by_tid):
             else:
                 tf = rng.integers(1, 20, size=len(d))
                 dl = rng.integers(1, 200, size=len(d))
-            s = _score_arrays(tf.astype(np.float64), dl.astype(np.float64), idf, p)
+            s = bm25_scores(tf, dl, idf, 1.2, 0.75, 50.0)
             payload = encode_posting_block(d, tf, dl)
             rows.append((tid, int(d[0]), int(d[-1]), len(d), float(s.max()), *payload))
             i += len(d)
@@ -154,95 +153,72 @@ def _encoded_bucket(rng, ties, stride, idf_by_tid):
     return blocks, lo
 
 
-def _brute_force(blocks, idf_by_tid, allow, p):
-    from gloomy_spark.codecs import decode_posting_block
-    from gloomy_spark.query.engine import _score_arrays
+def _with_allowed(rng, blocks, allow):
+    """``blocks`` plus bm25_topk_filtered's allowed-doc rows (term_id -1,
+    n_docs 0, the doc id in first_doc/last_doc, null payload), shuffled
+    in among the blocks as they may arrive from the exchange."""
+    import pandas as pd
 
-    docs_l, scores_l = [], []
-    for r in blocks.itertuples():
-        d, tf, dl = decode_posting_block(r.docs, r.tfs, r.dls, r.n_docs)
-        s = _score_arrays(
-            tf.astype(np.float64), dl.astype(np.float64), idf_by_tid[r.term_id], p
-        )
-        m = np.ones(len(d), bool) if allow is None else np.isin(d, allow)
-        docs_l.append(d[m])
-        scores_l.append(s[m])
-    return topk(*accumulate(docs_l, scores_l), p.k)
-
-
-@pytest.mark.parametrize("seed", range(12))
-@pytest.mark.parametrize("use_blockmax", [False, True])
-def test_bucket_scorer_matches_brute_force(seed, use_blockmax):
-    """engine._bucket_scorer (one bulk decode, per-block slices, optional
-    allow set) against per-block decode + _score_arrays + accumulate +
-    topk: same docs, same float bits, with and without an allow set. A
-    doc holding both terms appears twice in the bucket's decoded ids; a
-    sparse id grid (stride 1009) keeps np.isin off its lookup-table
-    method, so the allow set is applied by sorting, as on real ids."""
-    from gloomy_spark.query.engine import _Bm25Params, _bucket_scorer
-
-    rng = np.random.default_rng(seed)
-    stride = 1 if seed % 2 else 1009
-    idf_by_tid = {3: 1.7, 9: 0.4}
-    blocks, lo = _encoded_bucket(rng, seed % 3 == 0, stride, idf_by_tid)
-    for k in (1, 3, 10, 1000):
-        p = _Bm25Params(k1=1.2, b=0.75, avgdl=50.0, k=k, use_blockmax=use_blockmax)
-        score = _bucket_scorer(p, idf_by_tid)
-        some = lo + stride * np.unique(rng.integers(0, 300, size=90))
-        for allow in (None, some, lo + np.arange(0)):
-            got = score(blocks, allow)
-            order = np.lexsort((got["doc_id"].to_numpy(), -got["score"].to_numpy()))
-            want_d, want_s = _brute_force(blocks, idf_by_tid, allow, p)
-            assert np.array_equal(got["doc_id"].to_numpy()[order], want_d)
-            assert [x.hex() for x in got["score"].to_numpy()[order]] == [
-                x.hex() for x in want_s
-            ]
-
-
-# ------------------------------------------------ engine's batch scorer --
+    tagged = pd.DataFrame({
+        "doc_bucket": 0, "term_id": -1, "first_doc": allow, "last_doc": allow,
+        "n_docs": 0, "max_score": np.nan, "docs": None, "tfs": None, "dls": None,
+    })
+    rows = pd.concat([blocks, tagged], ignore_index=True)
+    return rows.iloc[rng.permutation(len(rows))]
 
 
 @pytest.mark.parametrize("seed", range(8))
 def test_batch_bucket_scorer_matches_per_term(seed):
-    """engine._batch_bucket_scorer (blocks of three terms arriving
-    interleaved, one bulk decode per bucket, one top-k per distinct term
-    set) against a per-term decode + _score_arrays + accumulate + topk in
-    sorted-term order: same rows, same float bits. Covers queries sharing
-    one term set, a query repeating a term, a query whose terms are all
-    absent from the bucket, and k above the candidate count."""
-    from gloomy_spark.query.engine import (
-        _batch_bucket_scorer, _Bm25Params, _decode_blocks, _score_arrays,
-    )
+    """engine._bucket_scorer, the one kernel of bm25_topk,
+    bm25_topk_filtered and bm25_topk_batch (blocks of three terms
+    arriving interleaved, one bulk decode per bucket, one top-k per
+    distinct term set, an optional facet allow set) against a per-term
+    decode + bm25_scores (+ np.isin) + accumulate + topk in sorted-term
+    order: same rows, same float bits. Covers queries sharing one term
+    set, a query repeating a term, a query whose terms are all absent
+    from the bucket, k above the candidate count, and allow sets that
+    are a subset, empty, and (stride 1009) a sparse id grid that keeps
+    np.isin off its lookup-table method, as on real ids."""
+    from gloomy_spark.query.engine import _bucket_scorer, _Bm25Params, _decode_blocks
+    from gloomy_spark.query.kernel import bm25_scores
 
     rng = np.random.default_rng(seed)
     idf_by_tid = {-7: 2.3, 3: 1.7, 9: 0.4}
     stride = 1 if seed % 2 else 1009
-    blocks, _ = _encoded_bucket(rng, seed % 3 == 0, stride, idf_by_tid)
+    blocks, lo = _encoded_bucket(rng, seed % 3 == 0, stride, idf_by_tid)
     absent = {41: 0.9, 77: 3.1}  # batch terms with no block in this bucket
     queries = [[3, 9], [9, 3], [-7, 9, -7], [41, 77], [9], [3, -7, 9, 41], [3, 3]]
     qids_by_tset = {}
     for qi, q in enumerate(queries):
         qids_by_tset.setdefault(tuple(sorted(set(q))), []).append(qi)
+    some = lo + stride * np.unique(rng.integers(0, 300, size=90))
     for k in (1, 5, 10_000):
-        p = _Bm25Params(k1=1.2, b=0.75, avgdl=50.0, k=k, use_blockmax=False)
-        got = _batch_bucket_scorer(p, {**idf_by_tid, **absent}, qids_by_tset)(blocks)
-        assert not (got["query_id"] == 3).any()
-        for qi, q in enumerate(queries):
-            docs_l, scores_l = [], []
-            for t in sorted(set(q)):
-                rows = blocks[blocks["term_id"] == t]
-                d, tf, dl = _decode_blocks(rows)
-                tf, dl = tf.astype(np.float64), dl.astype(np.float64)
-                idf = np.repeat(rows["term_id"].map(idf_by_tid).to_numpy(np.float64), rows["n_docs"])
-                docs_l.append(d)
-                scores_l.append(_score_arrays(tf, dl, idf, p))
-            want_d, want_s = topk(*accumulate(docs_l, scores_l), k)
-            mine = got[got["query_id"] == qi]
-            order = np.lexsort((mine["doc_id"].to_numpy(), -mine["score"].to_numpy()))
-            assert mine["doc_id"].to_numpy()[order].tolist() == want_d.tolist()
-            assert [x.hex() for x in mine["score"].to_numpy()[order]] == [
-                x.hex() for x in want_s
-            ]
-        if k == 10_000:  # every candidate of query [9] comes back
-            n9 = int(blocks.loc[blocks["term_id"] == 9, "n_docs"].sum())
-            assert int((got["query_id"] == 4).sum()) == n9
+        p = _Bm25Params(k1=1.2, b=0.75, avgdl=50.0, k=k)
+        for allow in (None, some, lo + np.arange(0)):
+            score = _bucket_scorer(
+                p, {**idf_by_tid, **absent}, qids_by_tset, facet=allow is not None
+            )
+            got = score(blocks if allow is None else _with_allowed(rng, blocks, allow))
+            assert not (got["query_id"] == 3).any()
+            for qi, q in enumerate(queries):
+                docs_l, scores_l = [], []
+                for t in sorted(set(q)):
+                    rows = blocks[blocks["term_id"] == t]
+                    d, tf, dl = _decode_blocks(rows)
+                    idf = np.repeat(rows["term_id"].map(idf_by_tid).to_numpy(np.float64), rows["n_docs"])
+                    s = bm25_scores(tf.astype(np.float64), dl.astype(np.float64), idf, 1.2, 0.75, 50.0)
+                    m = np.ones(len(d), bool) if allow is None else np.isin(d, allow)
+                    docs_l.append(d[m])
+                    scores_l.append(s[m])
+                want_d, want_s = topk(*accumulate(docs_l, scores_l), k)
+                mine = got[got["query_id"] == qi]
+                order = np.lexsort((mine["doc_id"].to_numpy(), -mine["score"].to_numpy()))
+                assert mine["doc_id"].to_numpy()[order].tolist() == want_d.tolist()
+                assert [x.hex() for x in mine["score"].to_numpy()[order]] == [
+                    x.hex() for x in want_s
+                ]
+            if k == 10_000 and allow is None:  # every candidate of query [9]
+                n9 = int(blocks.loc[blocks["term_id"] == 9, "n_docs"].sum())
+                assert int((got["query_id"] == 4).sum()) == n9
+            if allow is not None and not len(allow):
+                assert got.empty

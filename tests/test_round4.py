@@ -1148,7 +1148,7 @@ def test_bm25_filtered_differential(spark, tmp_path):
         for r in si.docs.where(F.col("lang").isin(allowed_langs)).collect()
     }
     # exhaustive reference: all scores, keep allowed, top-10
-    full = si.bm25_topk(q, k=10**6, use_blockmax=False).collect()
+    full = si.bm25_topk(q, k=10**6).collect()
     want = [
         (r["doc_id"], round(r["score"], 6))
         for r in full

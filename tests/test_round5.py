@@ -260,38 +260,12 @@ def test_term_attr_counts_shuffle_fallback(small_index, monkeypatch, tmp_path):
     assert len(want) > 0
 
 
-# ------------------------------------------------ facet-aware block-max --
-
-
-@pytest.mark.spark
-def test_bm25_filtered_sweep_differential(small_index):
-    """The facet-aware block-max sweep must be rank-identical to the
-    exhaustive filtered pass (block bounds stay valid upper bounds under
-    the allow-mask) across facet selectivities, including a facet that
-    matches everything and one that matches nothing."""
-    si = small_index
-    langs = [r["lang"] for r in si.docs.select("lang").distinct().collect()]
-    cases = [
-        ("a the data", 10, "lang", langs),        # everything allowed
-        ("a the data", 10, "lang", langs[:1]),    # one language
-        ("merge join scan", 5, "lang", langs[1:2] if len(langs) > 1 else langs),
-        ("a", 3, "lang", ["zz_absent"]),          # nothing allowed
-    ]
-    for q, k, attr, vals in cases:
-        def canon(df):
-            return [
-                (r["doc_id"], round(r["score"], 9)) for r in df.collect()
-            ]
-        exhaustive = canon(si.bm25_topk_filtered(q, k, attr, vals, use_blockmax=False))
-        sweep = canon(si.bm25_topk_filtered(q, k, attr, vals, use_blockmax=True))
-        auto = canon(si.bm25_topk_filtered(q, k, attr, vals))
-        assert sweep == exhaustive, (q, vals)
-        assert auto == exhaustive, (q, vals)
+# ------------------------------------------------------- faceted BM25 --
 
 
 @pytest.mark.spark
 def test_bm25_filtered_matches_unfiltered_on_full_facet(small_index):
-    """With every doc allowed, both filtered paths must equal plain
+    """With every doc allowed, faceted search must equal plain
     bm25_topk scores exactly (corpus-wide stats contract)."""
     si = small_index
     langs = [r["lang"] for r in si.docs.select("lang").distinct().collect()]
@@ -299,14 +273,57 @@ def test_bm25_filtered_matches_unfiltered_on_full_facet(small_index):
         (r["doc_id"], round(r["score"], 9))
         for r in si.bm25_topk("scan filter window the", 10).collect()
     ]
-    for bm in (False, True):
-        got = [
-            (r["doc_id"], round(r["score"], 9))
-            for r in si.bm25_topk_filtered(
-                "scan filter window the", 10, "lang", langs, use_blockmax=bm
-            ).collect()
-        ]
-        assert got == want, bm
+    got = [
+        (r["doc_id"], round(r["score"], 9))
+        for r in si.bm25_topk_filtered(
+            "scan filter window the", 10, "lang", langs
+        ).collect()
+    ]
+    assert got == want
+
+
+@pytest.mark.spark
+def test_bm25_operators_share_score_bits(small_index):
+    """bm25_topk, bm25_topk_filtered over every language and
+    bm25_topk_batch run one bucket kernel, so each query gets the same
+    docs with the same float bits from all three, also for docs holding
+    three or four query terms (summed in sorted term_id order by all)."""
+    import numpy as np
+
+    si = small_index
+    langs = [r["lang"] for r in si.docs.select("lang").distinct().collect()]
+    by_df = [r["term"] for r in si.terms.orderBy(F.desc("df"), "term").collect()]
+    head, tail = by_df[:12], by_df[-40:]
+    rng = np.random.default_rng(11)
+    qs = [
+        f"{head[0]} {head[0]} {head[1]}",  # a repeated term
+        f"zzz_absent {head[2]}",  # an absent term
+        "zzz_absent",
+        tail[0],
+    ]
+    while len(qs) < 24:
+        n = int(rng.integers(1, 5))
+        picks = list(rng.choice(head, size=n, replace=False))
+        if rng.random() < 0.3:
+            picks[-1] = tail[int(rng.integers(len(tail)))]
+        qs.append(" ".join(picks))
+    assert sum(len(q.split()) >= 3 for q in qs) >= 6
+
+    def hexed(rows):
+        return [(r["doc_id"], float(r["score"]).hex()) for r in rows]
+
+    k = 10
+    batch: dict[int, list] = {}
+    for r in si.bm25_topk_batch(qs, k).collect():
+        batch.setdefault(r["query_id"], []).append(r)
+    for qi, q in enumerate(qs):
+        single = hexed(si.bm25_topk(q, k).collect())
+        faceted = hexed(si.bm25_topk_filtered(q, k, "lang", langs).collect())
+        batched = hexed(
+            sorted(batch.get(qi, []), key=lambda r: (-r["score"], r["doc_id"]))
+        )
+        assert single == faceted == batched, q
+        assert bool(single) == (q != "zzz_absent"), q
 
 
 @pytest.mark.spark
@@ -411,6 +428,6 @@ def test_batch_serving_view_rank_identical(view_index):
     per_query = sorted(
         (qi, int(r["doc_id"]), round(float(r["score"]), 9))
         for qi, q in enumerate(qs)
-        for r in si.bm25_topk(q, 10, use_blockmax=False).collect()
+        for r in si.bm25_topk(q, 10).collect()
     )
     assert on == per_query and len(on) > 0

@@ -185,5 +185,21 @@ def test_http_service(spark, tmp_path):
         except urllib.error.HTTPError as e:
             assert e.code == 400
             assert "unknown corpus" in json.loads(e.read())["error"]
+        try:  # a non-integer k is the request's fault too
+            get("/bm25?corpus=main&q=the&k=ten")
+            raise AssertionError("expected 400")
+        except urllib.error.HTTPError as e:
+            assert e.code == 400
+        # a fault of the service, not of the request → 500, same JSON body
+        def broken(*a, **kw):
+            raise RuntimeError("scorer died")
+
+        svc.bm25 = broken
+        try:
+            get("/bm25?corpus=main&q=the")
+            raise AssertionError("expected 500")
+        except urllib.error.HTTPError as e:
+            assert e.code == 500
+            assert json.loads(e.read())["error"] == "scorer died"
     finally:
         svc.stop()
