@@ -91,10 +91,18 @@ def test_segments_globally_doc_sorted(built):
 
 
 @pytest.mark.parametrize("query", QUERIES)
-def test_bm25_rank_identical(built, query):
+@pytest.mark.parametrize("batch", [True, False])
+def test_bm25_rank_identical(built, query, batch):
+    """bm25_topk (batch=False) and bm25_topk_batch on a one-query batch
+    (batch=True) against the oracle's top-10."""
     index, oracle, _ = built
     expected = oracle.bm25_topk(query, k=10)
-    got = index.bm25_topk(query, k=10).collect()
+    if batch:
+        rows = index.bm25_topk_batch([query], k=10).collect()
+        assert all(r["query_id"] == 0 for r in rows), query
+        got = sorted(rows, key=lambda r: (-r["score"], r["doc_id"]))
+    else:
+        got = index.bm25_topk(query, k=10).collect()
     assert [r["doc_id"] for r in got] == [d for d, _ in expected], query
     for r, (_, s) in zip(got, expected):
         assert r["score"] == pytest.approx(s, abs=1e-9), query
