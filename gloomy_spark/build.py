@@ -386,12 +386,6 @@ def _segment_writer(cfg: EngineConfig, avgdl: float):
                 pos_col = batch.column("positions")
                 if isinstance(pos_col, pa.ChunkedArray):
                     pos_col = pos_col.combine_chunks()
-                if not pa.types.is_binary(pos_col.type):
-                    # legacy array<int> input → the per-posting binary
-                    # form (byte-identical; see _encode_positions_binary)
-                    lo = pos_col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-                    lv = pos_col.values.to_numpy(zero_copy_only=False).astype(np.int64)
-                    pos_col = _encode_positions_binary(lo - lo[0], lv[lo[0] : lo[-1]])
                 offs = np.frombuffer(pos_col.buffers()[1], dtype=np.int32)[
                     pos_col.offset : pos_col.offset + len(pos_col) + 1
                 ].astype(np.int64)

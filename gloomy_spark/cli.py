@@ -145,7 +145,9 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     args = _build_parser().parse_args(argv)
 
     if args.command == "stats":  # pure file reads — no SparkSession needed
-        from .index_store import Manifest
+        from dataclasses import asdict
+
+        from .index_store import IndexStore, Manifest
 
         m = Manifest.load(args.index)
         _emit(
@@ -158,10 +160,8 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 "stages": m.stages,
             }
         )
-        ledger = os.path.join(args.index, "ledger.jsonl")
-        if os.path.exists(ledger):
-            for line in open(ledger):
-                _emit(json.loads(line))
+        for rec in IndexStore(args.index).completed_buckets().values():
+            _emit(asdict(rec))
         return 0
 
     spark = spark or _session(args)
@@ -215,27 +215,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         from .query.engine import SearchIndex
 
         si = SearchIndex(spark, args.index)
-        if args.qtype == "regexp":
-            pats = args.query.split(" ")
-            res = (
-                si.search_ngram_regexp(pats)
-                if len(pats) > 1
-                else si.search_regexp(args.query)
-            )
-        elif args.qtype == "prefix" or args.query.endswith("*"):
-            res = si.search_prefix(args.query)
-        else:
-            res = si.search_exact(args.query)
-        rows = [r.asDict() for r in si.slice(res, args.offset, args.limit).collect()]
         attrs = [a for a in args.attrs.split(",") if a]
-        if attrs and rows:
-            by_term: dict = {}
-            for r in si.term_attr_counts([row["term"] for row in rows], attrs).collect():
-                d = r.asDict()
-                by_term.setdefault(d.pop("term"), []).append(d)
-            for row in rows:
-                row["args"] = by_term.get(row["term"], [])
-        for row in rows:
+        for row in si.term_search(
+            args.query, args.qtype, args.offset, args.limit, attrs
+        ):
             _emit(row)
         return 0
 
@@ -276,11 +259,9 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         from pyspark.sql import functions as F
 
         from .query.engine import SearchIndex
-        from .sources.pages import pages_to_docs, read_pages
+        from .sources.pages import read_docs
 
-        docs = read_pages(spark, args.docs)
-        if "doc_id" not in docs.columns:
-            docs = pages_to_docs(docs)
+        docs = read_docs(spark, args.docs)
         si = SearchIndex(spark, args.index)
         res = si.kwic(args.query, docs, width=args.width)
         for r in res.orderBy(F.asc("doc_id"), F.asc("pos")).limit(
@@ -293,11 +274,9 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         from pyspark.sql import functions as F
 
         from .query.engine import SearchIndex
-        from .sources.pages import pages_to_docs, read_pages
+        from .sources.pages import read_docs
 
-        docs = read_pages(spark, args.docs)
-        if "doc_id" not in docs.columns:
-            docs = pages_to_docs(docs)
+        docs = read_docs(spark, args.docs)
         si = SearchIndex(spark, args.index)
         res = si.collocations(
             args.node, docs, window=args.window, min_freq=args.min_freq

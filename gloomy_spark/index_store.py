@@ -87,20 +87,42 @@ class IndexStore:
 
     # ------------------------------------------------------------- ledger
     def completed_buckets(self) -> dict[int, BucketRecord]:
+        """Committed buckets by id (a later line for a bucket wins). An
+        unparsable LAST line is a crash mid-append: its bucket never
+        committed, so it is skipped and the resume rebuilds it. A bad
+        line anywhere else is corruption and raises."""
         out: dict[int, BucketRecord] = {}
-        if os.path.exists(self.ledger_path):
-            with open(self.ledger_path) as f:
-                for line in f:
-                    if line.strip():
-                        rec = BucketRecord(**json.loads(line))
-                        out[rec.bucket] = rec
+        if not os.path.exists(self.ledger_path):
+            return out
+        with open(self.ledger_path) as f:
+            lines = [line for line in f if line.strip()]
+        for i, line in enumerate(lines):
+            try:
+                rec = BucketRecord(**json.loads(line))
+            except json.JSONDecodeError:
+                if i == len(lines) - 1:
+                    break
+                raise
+            out[rec.bucket] = rec
         return out
 
     def append_bucket(self, rec: BucketRecord) -> None:
         # append-only ledger: a bucket line is written only after its
-        # segment files are fully committed → crash-safe resume point
-        with open(self.ledger_path, "a") as f:
-            f.write(json.dumps(asdict(rec)) + "\n")
+        # segment files are fully committed → crash-safe resume point.
+        # A crash mid-append leaves a last line with no newline: cut it if
+        # it does not parse (completed_buckets skipped it), else end it,
+        # so it never turns into a bad line mid-file.
+        with open(self.ledger_path, "a+b") as f:
+            f.seek(0)
+            data = f.read()
+            cut = data.rfind(b"\n") + 1
+            if cut < len(data):
+                try:
+                    json.loads(data[cut:])
+                    f.write(b"\n")
+                except json.JSONDecodeError:
+                    f.truncate(cut)
+            f.write((json.dumps(asdict(rec)) + "\n").encode())
 
     def bucket_dir(self, bucket: int) -> str:
         return os.path.join(self.segments_path, f"bucket={bucket}")

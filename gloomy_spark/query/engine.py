@@ -103,6 +103,11 @@ class _Bm25Params:
     k: int
 
 
+def _term_entry(r) -> tuple[int, float, int, int]:
+    """One dictionary row as the (term_id, idf, df, cf) tuple of the term map."""
+    return int(r["term_id"]), float(r["idf"]), int(r["df"]), int(r["cf"])
+
+
 def _decode_blocks(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Every posting block in ``pdf`` (rows in block order) decoded in one
     bulk pass → (doc_ids, tfs, dls); block i is the slice
@@ -212,14 +217,19 @@ def _merge_topk(per_bucket: DataFrame, k: int) -> DataFrame:
 class SearchIndex:
     """Open, query-ready index. Long-lived (unlike the reference, which
     reloads per request — service/search.go:176-181): segments and terms
-    DataFrames are cached in the session."""
+    DataFrames are cached in the session.
+
+    Every operator resolves its terms through ``_lookup`` (term →
+    term_id, idf, df, cf). After ``cache()`` that reads the driver-resident
+    term map, so resolution runs no Spark job; on an uncached index it is
+    one dictionary collect per call."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         from ..session import ship_package
 
         ship_package(spark)
-        self._term_map: dict[str, tuple[int, float]] | None = None
-        self._term_df: dict[str, int] = {}
+        # term → (term_id, idf, df, cf), loaded by cache(); read only by _lookup
+        self._term_map: dict[str, tuple[int, float, int, int]] | None = None
         self._n_doc_buckets: int | None = None
         self._total_cf: int | None = None  # corpus token count (Σ cf)
         # decoded-postings LRU for the driver-local serving fast path (the
@@ -265,22 +275,18 @@ class SearchIndex:
     # a fixed partition count (see bm25_topk)
     _SCORER_MIN_POSTINGS = 16384
 
-    def _scorer_parts(self, est_postings: int | None) -> int:
+    def _scorer_parts(self, est_postings: int) -> int:
         """Partition count for a per-bucket python scorer shuffle:
-        data-derived from the query's posting volume when the dictionary
-        is driver-resident (guide §2.2 — near-empty python tasks cost
-        ~90 ms each), capped by bucket count and shuffle width."""
+        data-derived from the query's posting volume, Σ df of its terms
+        (guide §2.2 — near-empty python tasks cost ~90 ms each), capped
+        by bucket count and shuffle width."""
         nb = self._n_doc_buckets
         sp = int(self.cfg.shuffle_partitions)
         cap = max(1, min(sp, nb)) if nb else sp
-        if est_postings:
-            return max(
-                1, min(cap, -(-est_postings // self._SCORER_MIN_POSTINGS))
-            )
-        return cap
+        return max(1, min(cap, -(-est_postings // self._SCORER_MIN_POSTINGS)))
 
     def _per_bucket(
-        self, rows: DataFrame, est_postings: int | None, fn, arrow_schema, schema: str
+        self, rows: DataFrame, est_postings: int, fn, arrow_schema, schema: str
     ) -> DataFrame:
         """The per-bucket plan shared by the distributed scorers:
         hash-repartition ``rows`` by doc_bucket (every row of a bucket
@@ -314,10 +320,24 @@ class SearchIndex:
             ).collect()[0]["nb"]
         )
         if self.manifest.n_terms <= self._TERM_MAP_LIMIT:
-            rows = self.terms.collect()
-            self._term_map = {r["term"]: (r["term_id"], r["idf"]) for r in rows}
-            self._term_df = {r["term"]: int(r["df"]) for r in rows}
+            self._term_map = {r["term"]: _term_entry(r) for r in self.terms.collect()}
+            self._total_cf = sum(e[3] for e in self._term_map.values())
         return self
+
+    def _lookup(self, terms) -> dict[str, tuple[int, float, int, int]]:
+        """The read path's one term resolution: term → (term_id, idf, df,
+        cf) for the indexed terms among ``terms``, in input order (absent
+        terms are left out). Reads the driver-resident term map of a
+        cached index, so it runs no Spark job; otherwise one pushed-down
+        dictionary collect."""
+        uniq = list(dict.fromkeys(terms))
+        tm = self._term_map
+        if tm is None:
+            if not uniq:
+                return {}
+            rows = self.terms.where(_in_strings("term", uniq)).collect()
+            tm = {r["term"]: _term_entry(r) for r in rows}
+        return {t: tm[t] for t in uniq if t in tm}
 
     # ------------------------------------------------------ term search --
     def search_exact(self, term: str) -> DataFrame:
@@ -466,18 +486,7 @@ class SearchIndex:
         # term in the requested page (no rollup covering it) can carry
         # O(corpus) postings, which must NOT be broadcast. df is free from
         # the dictionary, so guard on it and fall back to a shuffle join.
-        # Served from the driver-resident term map when loaded (r5 ADVICE:
-        # the guard was a blocking terms-scan collect on EVERY no-rollup
-        # request, even tail-term pages); the Spark job is the fallback.
-        if self._term_map is not None:
-            total_df = sum(self._term_df.get(t, 0) for t in lowered)
-        else:
-            total_df = sum(
-                int(r["df"])
-                for r in self.terms.where(_in_strings("term", lowered))
-                .select("df")
-                .collect()
-            )
+        total_df = sum(df for _, _, df, _ in self._lookup(lowered).values())
         if total_df <= self._ATTR_COUNT_BROADCAST_MAX_DF:
             posts = F.broadcast(posts)
         return (
@@ -504,27 +513,43 @@ class SearchIndex:
         never materializes a global sort."""
         return df.orderBy("term").offset(offset).limit(limit)
 
+    def term_search(
+        self, q: str, qtype: str, offset: int, limit: int, attrs: list[str]
+    ) -> list[dict]:
+        """The term-search query dialect (reference service/search.go:174-200
+        dispatch) → one page of dictionary rows sorted by term. ``qtype``
+        "regexp" takes one anchored pattern, or with spaces one pattern
+        PER n-gram position (searchByRegexp, search.go:137-158); "prefix"
+        or a trailing ``*`` is a prefix search; anything else is exact.
+        With ``attrs`` each row carries ``args``, its per-attr-values
+        occurrence counts (search-result Args, search.go:72-83), computed
+        for the returned page only, so the postings side stays small."""
+        if qtype == "regexp":
+            pats = q.split(" ")
+            res = (
+                self.search_ngram_regexp(pats)
+                if len(pats) > 1
+                else self.search_regexp(q)
+            )
+        elif qtype == "prefix" or q.endswith("*"):
+            res = self.search_prefix(q)
+        else:
+            res = self.search_exact(q)
+        rows = [r.asDict() for r in self.slice(res, offset, limit).collect()]
+        if attrs and rows:
+            by_term: dict[str, list] = {}
+            counts = self.term_attr_counts([row["term"] for row in rows], attrs)
+            for r in counts.collect():
+                d = r.asDict()
+                by_term.setdefault(d.pop("term"), []).append(d)
+            for row in rows:
+                row["args"] = by_term.get(row["term"], [])
+        return rows
+
     # -------------------------------------------------------- postings --
     def postings(self, term: str) -> DataFrame:
         """Decoded posting list of one term: (doc_id, tf, dl)."""
-        tids = self._term_ids([term.lower()])
-        if tids is None:
-            return self.spark.createDataFrame([], "doc_id long, tf int, dl int")
-        (tid,) = tids.values()
-        # prune to the block payload columns the decoder touches — the
-        # scan must not read max_score/sum_tf/doc-range bytes it won't use
-        segs = self.segments.where(F.col("term_id") == tid).select(
-            "n_docs", "docs", "tfs", "dls"
-        )
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                d, tf, dl = _decode_blocks(pdf)
-                yield pd.DataFrame(
-                    {"doc_id": d, "tf": tf.astype(np.int32), "dl": dl.astype(np.int32)}
-                )
-
-        return segs.mapInPandas(decode, "doc_id long, tf int, dl int")
+        return self.postings_multi([term.lower()]).select("doc_id", "tf", "dl")
 
     def postings_multi(self, terms: list[str]) -> DataFrame:
         """Decoded postings of MANY terms in one pushed-down scan:
@@ -532,21 +557,13 @@ class SearchIndex:
         rows (they may still live in uncompacted streaming runs — the NRT
         merger unions those in). One Spark scan total, vs one scan + one
         driver round-trip PER TERM with repeated `postings()` calls."""
-        uniq = list(dict.fromkeys(terms))
-        if self._term_map is not None:
-            found = {t: int(self._term_map[t][0]) for t in uniq if t in self._term_map}
-        else:
-            rows = self.terms.where(F.col("term").isin(uniq)).select(
-                "term", "term_id"
-            ).collect()
-            found = {r["term"]: int(r["term_id"]) for r in rows}
-        if not found:
+        term_of = {e[0]: t for t, e in self._lookup(terms).items()}
+        if not term_of:
             return self.spark.createDataFrame(
                 [], "term string, doc_id long, tf int, dl int"
             )
-        term_of = {tid: t for t, tid in found.items()}
         segs = self.segments.where(
-            _in_longs("term_id", found.values())
+            _in_longs("term_id", term_of)
         ).select("term_id", "n_docs", "docs", "tfs", "dls")
 
         def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -577,13 +594,13 @@ class SearchIndex:
                 "positions retrieval (kwic/collocations/term_positions) "
                 "requires an index built with store_positions=True"
             )
-        tids = self._term_ids([term.lower()])
-        if tids is None:
+        term = term.lower()
+        found = self._lookup([term])
+        if not found:
             return self.spark.createDataFrame(
                 [], "doc_id long, tf int, positions array<int>"
             )
-        (tid,) = tids.values()
-        segs = self.segments.where(F.col("term_id") == tid).select(
+        segs = self.segments.where(F.col("term_id") == found[term][0]).select(
             "n_docs", "docs", "tfs", "dls", "pos_counts", "positions"
         )
 
@@ -629,7 +646,7 @@ class SearchIndex:
         if not must and not should:
             raise ValueError("boolean_search needs at least one must/should term")
         empty = self.spark.createDataFrame([], "doc_id long, tf int")
-        if must and self._term_ids(must) is None:
+        if len(self._lookup(must)) < len(must):
             return empty  # an unindexed must term can match nothing
         p = self.postings_multi(must + should + must_not)
         is_must = _in_strings("term", must) if must else F.lit(False)
@@ -652,19 +669,6 @@ class SearchIndex:
         if should:
             cond = cond & (F.col("_hs") == 1)
         return agg.where(cond).select("doc_id", "tf")
-
-    def _term_ids(self, terms: list[str]) -> dict[str, int] | None:
-        """term → term_id for the given terms; None if ANY term is absent
-        (a phrase containing an unindexed token can match nothing)."""
-        uniq = list(dict.fromkeys(terms))
-        if self._term_map is not None:
-            found = {t: self._term_map[t][0] for t in uniq if t in self._term_map}
-        else:
-            rows = self.terms.where(F.col("term").isin(uniq)).select(
-                "term", "term_id"
-            ).collect()
-            found = {r["term"]: r["term_id"] for r in rows}
-        return found if len(found) == len(uniq) else None
 
     def phrase_match(self, phrase: str, with_positions: bool = False) -> DataFrame:
         """Docs containing the exact token phrase (adjacent positions).
@@ -692,13 +696,13 @@ class SearchIndex:
         terms = tokenize(phrase, self.cfg)
         if not terms:
             return self.spark.createDataFrame([], schema)
-        tids = self._term_ids(terms)
-        if tids is None:
+        found = self._lookup(terms)
+        if len(found) < len(set(terms)):
             return self.spark.createDataFrame([], schema)
         # term_id → phrase offsets (a repeated token occupies several slots)
         slot_map: dict[int, list[int]] = {}
         for slot, t in enumerate(terms):
-            slot_map.setdefault(int(tids[t]), []).append(slot)
+            slot_map.setdefault(found[t][0], []).append(slot)
         n_terms_distinct = len(slot_map)
 
         segs = self.segments.where(
@@ -788,11 +792,7 @@ class SearchIndex:
             return res
 
         # doc_buckets are disjoint doc ranges → no cross-bucket duplicates
-        est = (
-            sum(self._term_df.get(t, 0) for t in terms)
-            if self._term_map is not None
-            else None
-        )
+        est = sum(found[t][2] for t in terms)
         fields = [pa.field("doc_id", pa.int64())]
         if with_positions:
             fields.append(pa.field("positions", pa.list_(pa.int32())))
@@ -889,7 +889,8 @@ class SearchIndex:
         store); window tokens sliced and exploded in JVM expressions;
         one groupBy(collocate) partial agg; marginals attached by ONE
         join against the term dictionary (f_xy side is vocabulary-
-        bounded). f_x and N are driver scalars (dictionary lookups)."""
+        bounded). f_x (``_lookup``) and N (Σ cf) are driver scalars; on a
+        cached index neither runs a Spark job."""
         out_schema = (
             "collocate string, f_xy long, f_y long, "
             "log_dice double, mi double, t_score double"
@@ -898,13 +899,14 @@ class SearchIndex:
         if len(toks) != 1:
             raise ValueError("collocations takes a single node token")
         node_term = toks[0]
-        row = self.search_exact(node_term).collect()
-        if not row:
+        found = self._lookup([node_term])
+        if not found:
             return self.spark.createDataFrame([], out_schema)
-        f_x = int(row[0]["cf"])
+        f_x = found[node_term][3]
         if self._total_cf is None:
-            # one tiny dictionary agg, amortized across the index's life
-            # (the dictionary is write-once, so the total never changes)
+            # uncached index: one tiny dictionary agg, amortized across the
+            # index's life (the dictionary is write-once, so the total
+            # never changes); cache() sets it from the term map
             self._total_cf = int(
                 self.terms.agg(F.sum("cf").alias("n")).collect()[0]["n"]
             )
@@ -972,34 +974,22 @@ class SearchIndex:
         """Posting blocks of the indexed terms among ``toks`` (term_id
         pushed into the scan), idf by term_id, their posting volume (Σ df,
         which sizes the scorer shuffle) and term_id by term; None when no
-        token is indexed. Terms resolve on the driver (the cached term
-        map, or one dictionary lookup). idf is attached inside the python
-        scorer, not as a literal map in the plan: per-query literals
+        token is indexed. Terms resolve through ``_lookup``. idf is
+        attached inside the python scorer, not as a literal map in the
+        plan: per-query literals
         force a fresh whole-stage-codegen compile for every query, a
         fixed ~0.1 s/query the python-side map avoids (measured 4.8 →
         3.9 s over 10 warm queries)."""
-        toks = list(dict.fromkeys(toks))
-        if self._term_map is not None:
-            hits = [
-                (t, *self._term_map[t], self._term_df.get(t, 0))
-                for t in toks
-                if t in self._term_map
-            ]
-        elif toks:
-            hits = self.terms.where(_in_strings("term", toks)).select(
-                "term", "term_id", "idf", "df"
-            ).collect()
-        else:
-            hits = []
+        hits = self._lookup(toks)
         if not hits:
             return None
-        idf_by_tid = {int(tid): float(idf) for _, tid, idf, _ in hits}
+        idf_by_tid = {tid: idf for tid, idf, _, _ in hits.values()}
         blocks = self.segments.where(_in_longs("term_id", idf_by_tid)).select(
             "doc_bucket", "term_id", "first_doc", "last_doc", "n_docs",
             "max_score", "docs", "tfs", "dls",
         )
-        est = sum(int(df) for *_, df in hits)
-        return blocks, idf_by_tid, est, {t: int(tid) for t, tid, *_ in hits}
+        est = sum(df for _, _, df, _ in hits.values())
+        return blocks, idf_by_tid, est, {t: e[0] for t, e in hits.items()}
 
     def bm25_topk(self, query: str, k: int = 10) -> DataFrame:
         """Top-k BM25: score desc, doc_id asc tie-break — rank-identical
@@ -1084,19 +1074,17 @@ class SearchIndex:
         if self._term_map is None:
             raise ValueError("bm25_serve requires a cached index (.cache())")
         k1, b, avgdl = self.cfg.bm25.k1, self.cfg.bm25.b, self.manifest.avgdl
-        toks = [
-            t for t in dict.fromkeys(tokenize(query, self.cfg)) if t in self._term_map
-        ]
-        if not toks:
+        found = self._lookup(tokenize(query, self.cfg))
+        if not found:
             return []
-        if sum(self._term_df.get(t, 0) for t in toks) > self._LOCAL_MAX_POSTINGS:
+        if sum(df for _, _, df, _ in found.values()) > self._LOCAL_MAX_POSTINGS:
             rows = self.bm25_topk(query, k).collect()  # distributed fallback
             return [(r["doc_id"], r["score"]) for r in rows]
 
         # grab references for cached terms UNDER the lock; entries are
         # immutable (np arrays) so holding a reference keeps them valid
         # even if another thread evicts the dict slot a microsecond later
-        tids = [int(self._term_map[t][0]) for t in toks]
+        tids = [tid for tid, *_ in found.values()]
         with self._posting_cache_lock:
             entries = {}
             for tid in tids:
@@ -1143,15 +1131,14 @@ class SearchIndex:
                     del self._posting_cache[old_tid]
 
         docs_l, scores_l = [], []
-        for t in toks:
-            tid, idf = self._term_map[t]
-            ent = entries.get(int(tid))
+        for tid, idf, _, _ in found.values():
+            ent = entries.get(tid)
             if ent is None:
                 # term indexed but zero blocks fetched (can only happen on
                 # an empty postings anomaly) — skip it, contributes nothing
                 continue
             docs_l.append(ent[0])
-            scores_l.append(ent[1] * float(idf))
+            scores_l.append(ent[1] * idf)
         d, s = topk(*accumulate(docs_l, scores_l), k)
         return list(zip(d.tolist(), s.tolist()))
 

@@ -10,7 +10,9 @@ Endpoints (mirroring server.go:115-158 query params):
         &offset=0&limit=10&attrs=url&attrs=lang
         (qtype=regexp + a space-separated query = one anchored pattern
         per n-gram position, reference searchByRegexp semantics;
-        attrs=… attaches per-(term, attr-values) occurrence counts)
+        attrs=… attaches per-(term, attr-values) occurrence counts;
+        every page, the first included, is sorted by term —
+        SearchIndex.term_search, the same as the CLI search command)
     GET /bm25?corpus=<name>&q=<terms>&k=10[&nrt=1][&filter=lang:en,de]
         (filter=attr:v1,v2 — faceted top-k restricted to matching docs,
         corpus-wide idf/avgdl; not combinable with nrt=1)
@@ -43,6 +45,23 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import SparkSession
 
 from .query.engine import SearchIndex
+
+
+def _reply(rows: list, hit: bool, t0: float) -> dict:
+    """The JSON body every query endpoint returns."""
+    return {"size": len(rows), "rows": rows, "cached": hit,
+            "searchTime": round(time.time() - t0, 4)}
+
+
+def _with_attrs(si: SearchIndex, rows: list[dict], attrs: list[str]) -> list[dict]:
+    """``rows`` (each with a doc_id) extended by the requested per-doc
+    metadata from the doc-attr LRU: one pushed-down docs scan on cold
+    ids, no join job. A doc with no docs-dimension row (one that so far
+    lives only in uncompacted runs) gets no attrs."""
+    if not attrs or not rows:
+        return rows
+    amap = si.doc_attrs([r["doc_id"] for r in rows], attrs)
+    return [{**r, **amap.get(r["doc_id"], {})} for r in rows]
 
 
 class SearchService:
@@ -129,12 +148,9 @@ class SearchService:
         if corpus not in self.docs_sources:
             raise KeyError(f"corpus {corpus!r} has no forward store configured")
         if corpus not in self._docs_cache:
-            from .sources.pages import pages_to_docs, read_pages
+            from .sources.pages import read_docs
 
-            d = read_pages(self.spark, self.docs_sources[corpus])
-            if "doc_id" not in d.columns:
-                d = pages_to_docs(d)
-            self._docs_cache[corpus] = d
+            self._docs_cache[corpus] = read_docs(self.spark, self.docs_sources[corpus])
         return self._docs_cache[corpus]
 
     def boolean(self, corpus: str, must: list[str], should: list[str],
@@ -160,8 +176,7 @@ class SearchService:
              limit),
             compute,
         )
-        return {"size": len(rows), "rows": rows, "cached": hit,
-                "searchTime": round(time.time() - t0, 4)}
+        return _reply(rows, hit, t0)
 
     def kwic(self, corpus: str, q: str, width: int, offset: int,
              limit: int, attrs: list[str] | None = None) -> dict:
@@ -181,17 +196,12 @@ class SearchService:
             # offset+limit push down to the sort (TakeOrdered) — same
             # no-global-sort shape as SearchIndex.slice
             res = res.offset(offset).limit(limit) if offset else res.limit(limit)
-            rows = [r.asDict() for r in res.collect()]
-            if attrs and rows:
-                amap = si.doc_attrs([r["doc_id"] for r in rows], attrs)
-                rows = [{**r, **amap.get(r["doc_id"], {})} for r in rows]
-            return rows
+            return _with_attrs(si, [r.asDict() for r in res.collect()], attrs)
 
         rows, hit = self._cached(
             ("kwic", corpus, q, width, offset, limit, tuple(attrs)), compute
         )
-        return {"size": len(rows), "rows": rows, "cached": hit,
-                "searchTime": round(time.time() - t0, 4)}
+        return _reply(rows, hit, t0)
 
     def collocations(self, corpus: str, node: str, window: int,
                      min_freq: int, limit: int) -> dict:
@@ -215,8 +225,7 @@ class SearchService:
         rows, hit = self._cached(
             ("collocations", corpus, node, window, min_freq, limit), compute
         )
-        return {"size": len(rows), "rows": rows, "cached": hit,
-                "searchTime": round(time.time() - t0, 4)}
+        return _reply(rows, hit, t0)
 
     # ------------------------------------------------------------ logic --
     def search(self, corpus: str, q: str, qtype: str, offset: int, limit: int,
@@ -225,42 +234,12 @@ class SearchService:
         si = self.indexes[corpus]
 
         def compute() -> list:
-            if qtype == "regexp":
-                # reference parity (service/search.go:137-158): a space-
-                # separated regexp phrase applies one anchored pattern PER
-                # n-gram position; a single pattern searches unigram terms
-                pats = q.split(" ")
-                res = (
-                    si.search_ngram_regexp(pats)
-                    if len(pats) > 1
-                    else si.search_regexp(q)
-                )
-            elif qtype == "prefix" or q.endswith("*"):
-                res = si.search_prefix(q)
-            else:
-                res = si.search_exact(q)
-            res = si.slice(res, offset, limit) if offset else res.limit(limit)
-            rows = [r.asDict() for r in res.collect()]
-            if attrs and rows:
-                # reference search-result Args (service/search.go:72-83):
-                # each returned term row carries its per-attr-values
-                # occurrence counts; computed only for the PAGE of rows
-                # being returned, so the postings side stays broadcast-small
-                by_term: dict[str, list] = {}
-                for r in si.term_attr_counts(
-                    [row["term"] for row in rows], attrs
-                ).collect():
-                    d = r.asDict()
-                    by_term.setdefault(d.pop("term"), []).append(d)
-                for row in rows:
-                    row["args"] = by_term.get(row["term"], [])
-            return rows
+            return si.term_search(q, qtype, offset, limit, attrs)
 
         rows, hit = self._cached(
             ("search", corpus, qtype, q, offset, limit, tuple(attrs)), compute
         )
-        return {"size": len(rows), "rows": rows, "cached": hit,
-                "searchTime": round(time.time() - t0, 4)}
+        return _reply(rows, hit, t0)
 
     def bm25(self, corpus: str, q: str, k: int, attrs: list[str],
              nrt: bool = False,
@@ -279,17 +258,13 @@ class SearchService:
             def compute_filtered() -> list:
                 top = si.bm25_topk_filtered(q, k, f_attr, list(f_vals)).collect()
                 rows = [{"doc_id": r["doc_id"], "score": r["score"]} for r in top]
-                if attrs and rows:
-                    amap = si.doc_attrs([r["doc_id"] for r in rows], attrs)
-                    rows = [{**r, **amap.get(r["doc_id"], {})} for r in rows]
-                return rows
+                return _with_attrs(si, rows, attrs)
 
             rows, hit = self._cached(
                 ("bm25-f", corpus, q, k, tuple(attrs), f_attr, f_vals),
                 compute_filtered,
             )
-            return {"size": len(rows), "rows": rows, "cached": hit,
-                    "searchTime": round(time.time() - t0, 4)}
+            return _reply(rows, hit, t0)
 
         if nrt:
             if corpus not in self.runs_dirs:
@@ -300,45 +275,26 @@ class SearchService:
 
                 top = nrt_bm25_topk(si, self.runs_dirs[corpus], q, k).collect()
                 rows = [{"doc_id": r["doc_id"], "score": r["score"]} for r in top]
-                if attrs and rows:
-                    # docs that exist only in uncompacted runs have no base
-                    # docs-dimension row yet → their attrs resolve {}
-                    amap = si.doc_attrs([r["doc_id"] for r in rows], attrs)
-                    rows = [{**r, **amap.get(r["doc_id"], {})} for r in rows]
-                return rows
+                return _with_attrs(si, rows, attrs)
 
             key = ("bm25-nrt", corpus, q, k, tuple(attrs),
                    self._runs_version(corpus))
             rows, hit = self._cached(key, compute_nrt)
-            return {"size": len(rows), "rows": rows, "cached": hit,
-                    "searchTime": round(time.time() - t0, 4)}
+            return _reply(rows, hit, t0)
 
         def compute() -> list:
             if si._term_map is not None:
-                # driver-local fast path (decoded-postings cache); attrs
-                # are resolved per-doc from the doc-attr LRU — one
-                # pushed-down docs scan on cold ids, no full Spark job
+                # driver-local fast path (decoded-postings cache)
                 top = si.bm25_serve(q, k)
-                if not attrs:
-                    return [{"doc_id": d, "score": s} for d, s in top]
-                amap = si.doc_attrs([d for d, _ in top], attrs)
-                return [
-                    {"doc_id": d, "score": s, **amap.get(d, {})} for d, s in top
-                ]
-            # distributed path: micro-batched — concurrent requests in the
-            # same window coalesce into one bm25_topk_batch job
-            # (rank-identical to bm25_topk, tested)
-            top = self._batcher(corpus).query(q, k)
-            if not attrs:
-                return [{"doc_id": d, "score": s} for d, s in top]
-            amap = si.doc_attrs([d for d, _ in top], attrs)
-            return [
-                {"doc_id": d, "score": s, **amap.get(d, {})} for d, s in top
-            ]
+            else:
+                # distributed path: micro-batched — concurrent requests in
+                # the same window coalesce into one bm25_topk_batch job
+                # (rank-identical to bm25_topk, tested)
+                top = self._batcher(corpus).query(q, k)
+            return _with_attrs(si, [{"doc_id": d, "score": s} for d, s in top], attrs)
 
         rows, hit = self._cached(("bm25", corpus, q, k, tuple(attrs)), compute)
-        return {"size": len(rows), "rows": rows, "cached": hit,
-                "searchTime": round(time.time() - t0, 4)}
+        return _reply(rows, hit, t0)
 
     # ------------------------------------------------------------- http --
     def warmup(self) -> None:

@@ -65,6 +65,14 @@ def read_pages(spark: SparkSession, source: str) -> DataFrame:
     return spark.read.table(source)
 
 
+def read_docs(spark: SparkSession, source: str) -> DataFrame:
+    """A forward store (kwic/collocations) from ``source``: the table as
+    read when it already carries ``doc_id``, else a pages corpus
+    projected through :func:`pages_to_docs`."""
+    docs = read_pages(spark, source)
+    return docs if "doc_id" in docs.columns else pages_to_docs(docs)
+
+
 def pages_to_docs(pages: DataFrame) -> DataFrame:
     """Project the pages shape to the builder's (doc_id, text, url, lang)
     — doc_id is the 64-bit url hash (urls are the corpus's primary key),

@@ -32,6 +32,19 @@ from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions.text import tokens_col
 
 
+def latest_runs(spark: SparkSession, runs_dir: str) -> DataFrame:
+    """Every run's postings with LAST-RUN-WINS per doc: a doc_id in
+    several runs was re-ingested, and only its newest run's postings
+    survive, so dl, tf and positions stay mutually consistent (summing tf
+    across runs would double-count dl and overlap position lists)."""
+    runs = (
+        spark.read.option("basePath", runs_dir)
+        .parquet(os.path.join(runs_dir, "run=*"))
+    )
+    latest = runs.groupBy("doc_id").agg(F.max("run").alias("run"))
+    return runs.join(latest, ["doc_id", "run"], "inner").drop("run")
+
+
 class IncrementalIndexer:
     def __init__(
         self,
@@ -116,72 +129,29 @@ class IncrementalIndexer:
 
         A doc_id appearing in MULTIPLE runs means the document was
         re-ingested (checkpointing already guarantees each input file is
-        processed once) — resolved LAST-RUN-WINS: only the newest run's
-        postings for that doc survive, so dl, tf and positions stay
-        mutually consistent (summing tf across runs would double-count dl
-        and produce overlapping position lists)."""
+        processed once); ``latest_runs`` keeps its newest run only."""
         from ..build import IndexBuilder
 
-        runs = (
-            self.spark.read.option("basePath", self.runs_dir)
-            .parquet(os.path.join(self.runs_dir, "run=*"))
-        )
+        merged = latest_runs(self.spark, self.runs_dir)
         cfg = self.cfg
-        latest = runs.groupBy("doc_id").agg(F.max("run").alias("run"))
-        merged = runs.join(latest, ["doc_id", "run"], "inner").drop("run")
+        # runs hold positions in the postings_raw contract (per-posting
+        # delta+varint binary from _partition_inverter), which the segment
+        # writer reads as raw buffers: anything else would be misread
+        ptype = {f.name: f.dataType.simpleString() for f in merged.schema.fields}
+        if ptype.get("positions", "binary") != "binary":
+            raise ValueError(
+                f"run positions in {self.runs_dir} are {ptype['positions']}, "
+                "not the binary postings_raw form; re-ingest the input"
+            )
 
         # the batch builder accepts prebuilt postings via its internal
-        # staging path: write them where the builder's resume logic looks.
-        # New-format runs already store positions in the postings_raw
-        # contract (pre-encoded per-posting delta+varint binary, emitted by
-        # _partition_inverter); legacy runs store array<int> (collect_list
-        # output) and are converted at this boundary.
+        # staging path: write them where the builder's resume logic looks
         os.makedirs(index_dir, exist_ok=True)
         postings_path = os.path.join(index_dir, "postings_raw")
-        pos_is_binary = any(
-            f.name == "positions" and f.dataType.simpleString() == "binary"
-            for f in merged.schema.fields
+        merged = merged.select(
+            "term", "doc_id", "tf", "dl",
+            *(["positions"] if "positions" in ptype else []),
         )
-        if "positions" in merged.columns and not pos_is_binary:
-            from ..build import POSTINGS_SCHEMA, _encode_positions_binary
-
-            def _enc(batches):
-                import numpy as np
-                import pyarrow as pa
-
-                for batch in batches:
-                    if batch.num_rows == 0:
-                        continue
-                    pos = batch.column("positions")
-                    if isinstance(pos, pa.ChunkedArray):
-                        pos = pos.combine_chunks()
-                    offs = pos.offsets.to_numpy(zero_copy_only=False).astype(
-                        np.int64
-                    )
-                    vals = pos.values.to_numpy(zero_copy_only=False).astype(
-                        np.int64
-                    )
-                    flat = vals[offs[0] : offs[-1]]
-                    bounds = offs - offs[0]
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            batch.column("term"),
-                            batch.column("doc_id"),
-                            batch.column("tf"),
-                            batch.column("dl"),
-                            _encode_positions_binary(bounds, flat),
-                        ],
-                        names=["term", "doc_id", "tf", "dl", "positions"],
-                    )
-
-            merged = merged.select(
-                "term", "doc_id", "tf", "dl", "positions"
-            ).mapInArrow(_enc, POSTINGS_SCHEMA)
-        else:
-            merged = merged.select(
-                "term", "doc_id", "tf", "dl",
-                *(["positions"] if "positions" in merged.columns else []),
-            )
         merged.write.mode("overwrite").parquet(postings_path)
 
         # docs table from the surviving (last-run) postings (doc_id, doclen)

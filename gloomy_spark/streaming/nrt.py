@@ -19,20 +19,10 @@ to the base corpus.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _latest_runs(spark: SparkSession, runs_dir: str) -> DataFrame:
-    """Run postings with last-run-wins per doc (same rule as compact())."""
-    runs = (
-        spark.read.option("basePath", runs_dir)
-        .parquet(os.path.join(runs_dir, "run=*"))
-    )
-    latest = runs.groupBy("doc_id").agg(F.max("run").alias("run"))
-    return runs.join(latest, ["doc_id", "run"], "inner").drop("run")
+from .incremental import latest_runs
 
 
 def nrt_merged_stats(si, run_docs: DataFrame) -> tuple[int, float]:
@@ -80,7 +70,7 @@ def nrt_bm25_topk_batch(
     if not all_toks:
         return spark.createDataFrame([], "query_id int, doc_id long, score double")
 
-    run_posts = _latest_runs(spark, runs_dir).select("term", "doc_id", "tf", "dl")
+    run_posts = latest_runs(spark, runs_dir).select("term", "doc_id", "tf", "dl")
     run_docs = run_posts.groupBy("doc_id").agg(F.first("dl").alias("dl"))
     n_docs, avgdl = nrt_merged_stats(si, run_docs)
 

@@ -158,6 +158,51 @@ def test_resume_after_injected_failure(spark, tmp_path):
     assert sorted(buckets) == [0, 1, 2]
 
 
+def test_resume_skips_torn_ledger_line(spark, tmp_path):
+    """A crash mid-append leaves half a JSON line at the end of the
+    ledger. That bucket never committed: completed_buckets skips the line,
+    the resume rebuilds the bucket, and the index equals an uninterrupted
+    build. A bad line that is not the last one still raises."""
+    import json
+
+    from gloomy_spark.index_store import IndexStore
+
+    docs = pages_df(spark, 80, partitions=4).select("doc_id", "text")
+    builder = IndexBuilder(spark, CFG)
+    whole = str(tmp_path / "idx_whole")
+    builder.build(docs, whole, n_buckets=3)
+    idx_dir = str(tmp_path / "idx_torn")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        builder.build(docs, idx_dir, n_buckets=3, fail_after_bucket=0)
+    ledger = f"{idx_dir}/ledger.jsonl"
+    with open(ledger, "a") as f:
+        f.write('{"bucket": 1, "term_id_lo": 4')  # torn: no closing brace
+    store = IndexStore(idx_dir)
+    assert sorted(store.completed_buckets()) == [0]
+
+    builder.build(docs, idx_dir, n_buckets=3, resume=True)
+
+    def spans(recs):
+        return sorted(
+            (r.bucket, r.term_id_lo, r.term_id_hi, r.n_postings)
+            for r in recs.values()
+        )
+
+    assert spans(store.completed_buckets()) == spans(
+        IndexStore(whole).completed_buckets()
+    )
+    assert [b for b, *_ in spans(store.completed_buckets())] == [0, 1, 2]
+    a, b = SearchIndex(spark, whole), SearchIndex(spark, idx_dir)
+    for q in QUERIES:
+        assert a.bm25_topk(q, 10).collect() == b.bm25_topk(q, 10).collect(), q
+
+    lines = open(ledger).read().splitlines()
+    with open(ledger, "w") as f:
+        f.write("\n".join([lines[0], '{"bucket": 1, "ter', *lines[1:]]) + "\n")
+    with pytest.raises(json.JSONDecodeError):
+        store.completed_buckets()
+
+
 def test_cached_dictionary_fast_path_identical(built):
     index, oracle, _ = built
     from gloomy_spark.query.engine import SearchIndex
@@ -168,6 +213,31 @@ def test_cached_dictionary_fast_path_identical(built):
         a = [(r.doc_id, round(r.score, 9)) for r in index.bm25_topk(q, 10).collect()]
         b = [(r.doc_id, round(r.score, 9)) for r in cached.bm25_topk(q, 10).collect()]
         assert a == b, q
+
+    # every other operator that resolves terms: the cached term map and
+    # the uncached dictionary collect give the same rows, absent terms
+    # included
+    assert index._term_map is None
+    docs = pages_df(index.spark, N_DOCS, partitions=6).select("doc_id", "text")
+    absent = "qqqzz"
+    ops = {
+        "postings": lambda si: si.postings("the"),
+        "postings absent": lambda si: si.postings(absent),
+        "positions": lambda si: si.postings_positions("of"),
+        "positions absent": lambda si: si.postings_positions(absent),
+        "phrase": lambda si: si.phrase_match("of the", with_positions=True),
+        "phrase absent": lambda si: si.phrase_match(f"of {absent}"),
+        "boolean": lambda si: si.boolean_search(["the"], ["and", absent], ["in", absent]),
+        "boolean must absent": lambda si: si.boolean_search(["the", absent]),
+        "collocations": lambda si: si.collocations("to", docs),
+        "collocations absent": lambda si: si.collocations(absent, docs),
+        "attr counts": lambda si: si.term_attr_counts(["the", "zosa", absent], ["lang"]),
+    }
+    for name, op in ops.items():
+        a = sorted(tuple(r) for r in op(index).collect())
+        b = sorted(tuple(r) for r in op(cached).collect())
+        assert a == b, name
+        assert bool(a) != name.endswith("absent"), name
 
 
 @pytest.mark.spark

@@ -162,6 +162,23 @@ def test_incremental_runs_use_inverter_binary_positions(spark, tmp_path):
     assert pos_b == {1: [1], 2: [0]}
 
 
+@pytest.mark.spark
+def test_compact_rejects_array_positions_run(spark, tmp_path):
+    """compact hands run positions to the segment writer as the binary
+    postings_raw form; a run holding array<int> positions would be
+    misread there, so compact refuses it up front."""
+    from gloomy_spark.streaming.incremental import IncrementalIndexer
+
+    cfg = EngineConfig(shuffle_partitions=2, doc_bucket_width=64)
+    inc = IncrementalIndexer(spark, str(tmp_path / "work"), cfg)
+    spark.createDataFrame(
+        [("alpha", 1, 2, 3, [0, 2])],
+        "term string, doc_id long, tf int, dl int, positions array<int>",
+    ).write.parquet(os.path.join(inc.runs_dir, "run=0"))
+    with pytest.raises(ValueError, match="not the binary postings_raw form"):
+        inc.compact(str(tmp_path / "idx"), n_buckets=1)
+
+
 def test_lsh_store_fingerprint_changes_on_rewrite(tmp_path):
     from gloomy_spark.entry_queries import _emb_fingerprint
 
@@ -201,10 +218,43 @@ def test_verify_unique_doc_ids(spark, tmp_path):
     assert m.n_docs == 2
 
 
+def _assert_prefix_pages_agree(spark, idx, port, capsys):
+    """CLI search and HTTP /search return the same term-sorted page of a
+    prefix query with more matches than the page, at offset 0 and past
+    it."""
+    import json
+    import urllib.request
+
+    from gloomy_spark.cli import main
+    from gloomy_spark.query.engine import SearchIndex
+
+    terms = sorted(
+        r["term"] for r in SearchIndex(spark, idx).search_prefix("t").collect()
+    )
+    limit = 3
+    assert len(terms) > 2 * limit
+    for offset in (0, limit):
+        assert main(
+            ["search", "--index", idx, "--query", "t*",
+             "--offset", str(offset), "--limit", str(limit)],
+            spark=spark,
+        ) == 0
+        cli = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
+        with urllib.request.urlopen(
+            f"http://127.0.0.1:{port}/search?corpus=main&q=t*"
+            f"&offset={offset}&limit={limit}",
+            timeout=120,
+        ) as r:
+            http = json.loads(r.read())["rows"]
+        assert cli == http, offset
+        assert [r["term"] for r in cli] == terms[offset : offset + limit], offset
+
+
 @pytest.mark.spark
-def test_service_search_attrs(spark, tmp_path):
+def test_service_search_attrs(spark, tmp_path, capsys):
     """/search?attrs= must attach per-(term, attr-values) occurrence
-    counts (reference search-result Args) and key the cache on attrs."""
+    counts (reference search-result Args) and key the cache on attrs;
+    prefix pages match the CLI, term-sorted from offset 0."""
     import json
     import urllib.request
 
@@ -248,6 +298,7 @@ def test_service_search_attrs(spark, tmp_path):
         assert again["cached"] and again["rows"][0]["args"] == row["args"]
         plain2 = get("/search?corpus=main&q=the&qtype=default")
         assert "args" not in plain2["rows"][0]
+        _assert_prefix_pages_agree(spark, idx, port, capsys)
     finally:
         svc.stop()
 
@@ -417,12 +468,14 @@ def test_service_info_endpoint(spark, tmp_path):
 @pytest.mark.spark
 def test_cli_search_attrs_and_ngram_regexp(spark, tmp_path, capsys):
     """CLI search: --attrs attaches per-attr-values counts (reference
-    searchCLI meta output); regexp qtype with spaces is per-position."""
+    searchCLI meta output); regexp qtype with spaces is per-position;
+    prefix pages match HTTP /search, term-sorted from offset 0."""
     import json
 
     from gloomy_spark.build import IndexBuilder
     from gloomy_spark.cli import main
     from gloomy_spark.corpus import pages_df
+    from gloomy_spark.service import SearchService
 
     cfg = EngineConfig(shuffle_partitions=4, doc_bucket_width=64)
     idx = str(tmp_path / "cidx")
@@ -447,6 +500,13 @@ def test_cli_search_attrs_and_ngram_regexp(spark, tmp_path, capsys):
     out2 = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
     # unigram index → no bigram terms; per-position dispatch must not blow up
     assert out2 == []
+
+    svc = SearchService(spark, {"main": idx})
+    port = svc.start(warm=False)
+    try:
+        _assert_prefix_pages_agree(spark, idx, port, capsys)
+    finally:
+        svc.stop()
 
 
 @pytest.mark.spark
@@ -885,6 +945,27 @@ def test_postings_positions_prep_runs_no_job(spark, small_index):
         assert sc.statusTracker().getJobIdsForGroup(group) == []
         assert df.count() > 0
         # the group does see jobs that run under it
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.mark.spark
+def test_collocations_prep_runs_no_job(spark, small_index):
+    """On a cached index the node's cf comes from the term map and the
+    corpus token count from cache(): building the collocations DataFrame
+    submits no Spark job; only executing it does."""
+    from gloomy_spark.corpus import pages_df
+
+    docs = pages_df(spark, 120, partitions=4).select("doc_id", "text")
+    sc = spark.sparkContext
+    group = "collocations-prep"
+    sc.setJobGroup(group, "collocations prep")
+    try:
+        df = small_index.collocations("The", docs)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert df.count() > 0
         assert sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
