@@ -41,6 +41,7 @@ import os
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from typing import Iterator
 
 import numpy as np
@@ -67,6 +68,62 @@ _DRIVER_ID_LIMIT = 2_000_000
 # the driver-tiled explicit partitioner to repartitionByRange (a 5M-term
 # (id, df) slice is ~80 MB on the driver — comfortably under budget)
 _PARTITIONER_DICT_LIMIT = 5_000_000
+# Arrow batch rows for the INVERTER stage only (doc rows in, heavy numpy
+# per batch). Small batches pipeline JVM tokenization with python
+# inversion and keep the sort keys cache-resident; measured at 300k docs /
+# 4 cores: 1M-row batches 32 s, 30k 18-23 s, 10k 13 s, 4k 10.3 s, 2k
+# 10.4 s (knee ≈ 4k ≈ 1M tokens at avgdl 240).
+_INVERTER_BATCH_ROWS = 4096
+# floor on postings per segment-writer chunk: the dictionary tiler targets
+# bucket_postings/(shuffle_partitions*4) postings per chunk, which for
+# small buckets degenerates into hundreds of near-empty grouped-python
+# tasks (~90 ms protocol overhead each, guide §2.2 "fewer, larger
+# partitions"). Chunk count therefore derives from data volume: at 100 TB
+# the slot-based target is far above this floor and the tiling is
+# unchanged.
+_SEGMENT_CHUNK_MIN_POSTINGS = 1 << 18
+# Build-scoped session confs, RESTORED on exit: leaking 32 MB splits into
+# the caller's session taxed every later scan with 4× the tasks (the
+# round-3 32-core bench suite regression — mixed build+query sessions paid
+# task-launch overhead on queries that never asked for small splits).
+#
+# - arrow.maxRecordsPerBatch 1M: the writer/inverter do O(1) python work
+#   per batch, so 10k-row default batches = 8000 needless round trips at
+#   80M postings; 1M rows ≈ 40 MB.
+# - files.maxPartitionBytes 32 MB: the corpus and postings_raw scans feed
+#   the two python-heavy stages, and the default 128 MB split gives a
+#   300 MB input only ~5 tasks — 1.5 scheduling waves with a straggler
+#   tail. 32 MB keeps every core fed; at 100 TB the same setting yields
+#   ~3M splits, the normal regime for a 1000-executor cluster.
+# - arrow.pyspark.enabled: createDataFrame(pandas) feeds the terms write
+#   and the per-bucket tiling dims; the pickle path materializes them as a
+#   defaultParallelism-slice python RDD, and a coalesce(1) write then pays
+#   one python-worker round trip PER SLICE sequentially — measured 5.8 s
+#   to write a 31-row terms table vs 0.2 s over Arrow (guide §6 "Arrow for
+#   driver transfers").
+_BUILD_CONFS = {
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "1000000",
+    "spark.sql.files.maxPartitionBytes": "33554432",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
+
+@contextmanager
+def _session_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set `confs` on the session for the block, then restore each key's
+    earlier value, unsetting keys that were not set (`get(k, None)` is
+    None for those; a plain `get` would return the default)."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, pv in prev.items():
+            if pv is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, pv)
 
 SEGMENT_SCHEMA = (
     "term_id long, doc_bucket long, first_doc long, last_doc long, n_docs int, "
@@ -566,515 +623,441 @@ class IndexBuilder:
         kept in the docs dimension; every n-gram hit recovers them via the
         broadcast metadata join (with_doc_metadata) — the dictionary-
         encoded analog of the reference's per-record args columns."""
-        # Build-scoped session confs, RESTORED on exit: leaking 32 MB
-        # splits into the caller's session taxed every later scan with
-        # 4× the tasks (the round-3 32-core bench suite regression —
-        # mixed build+query sessions paid task-launch overhead on
-        # queries that never asked for small splits).
-        #
-        # - arrow.maxRecordsPerBatch 1M: the writer/inverter do O(1)
-        #   python work per batch, so 10k-row default batches = 8000
-        #   needless round trips at 80M postings; 1M rows ≈ 40 MB.
-        # - files.maxPartitionBytes 32 MB: the corpus and postings_raw
-        #   scans feed the two python-heavy stages, and the default
-        #   128 MB split gives a 300 MB input only ~5 tasks — 1.5
-        #   scheduling waves with a straggler tail. 32 MB keeps every
-        #   core fed; at 100 TB the same setting yields ~3M splits, the
-        #   normal regime for a 1000-executor cluster.
-        # - arrow.pyspark.enabled: createDataFrame(pandas) feeds the
-        #   terms write and the per-bucket tiling dims; the pickle path
-        #   materializes them as a defaultParallelism-slice python RDD,
-        #   and a coalesce(1) write then pays one python-worker round
-        #   trip PER SLICE sequentially — measured 5.8 s to write a
-        #   31-row terms table vs 0.2 s over Arrow (guide §6 "Arrow for
-        #   driver transfers").
-        _scoped = {
-            "spark.sql.execution.arrow.maxRecordsPerBatch": "1000000",
-            "spark.sql.files.maxPartitionBytes": "33554432",
-            "spark.sql.execution.arrow.pyspark.enabled": "true",
-        }
-        _prev: dict[str, str | None] = {}
-        for _k, _v in _scoped.items():
-            try:
-                _prev[_k] = self.spark.conf.get(_k)
-            except Exception:
-                _prev[_k] = None
-            self.spark.conf.set(_k, _v)
-        try:
-            return self._build_impl(
-                docs, index_dir,
-                id_col=id_col, text_col=text_col, url_col=url_col,
-                lang_col=lang_col, attr_cols=attr_cols, n_buckets=n_buckets,
-                resume=resume, input_snapshot=input_snapshot,
-                ngram_size=ngram_size, min_term_freq=min_term_freq,
-                term_filter=term_filter,
-                verify_unique_doc_ids=verify_unique_doc_ids,
-                attr_rollup_cols=attr_rollup_cols,
-                fail_after_bucket=fail_after_bucket,
+        with _session_confs(self.spark, _BUILD_CONFS):
+            cfg = self.cfg
+            store = IndexStore(index_dir)
+            store.ensure_dirs()
+            store.save_config(cfg)
+            t0 = time.time()
+            stages: dict[str, float] = {}
+            shuffle_parts = cfg.shuffle_partitions
+
+            attr_cols = attr_cols or []
+            base = docs.select(
+                F.col(id_col).cast("long").alias("doc_id"),
+                F.col(text_col).alias("text"),
+                *( [F.col(url_col).alias("url")] if url_col else [F.lit(None).cast("string").alias("url")] ),
+                *( [F.col(lang_col).alias("lang")] if lang_col else [F.lit(None).cast("string").alias("lang")] ),
+                *[F.col(a) for a in attr_cols],
             )
-        finally:
-            for _k, _pv in _prev.items():
-                if _pv is None:
-                    self.spark.conf.unset(_k)
-                else:
-                    self.spark.conf.set(_k, _pv)
 
-    def _build_impl(
-        self,
-        docs: DataFrame,
-        index_dir: str,
-        *,
-        id_col: str,
-        text_col: str,
-        url_col: str | None,
-        lang_col: str | None,
-        attr_cols: list[str] | None,
-        n_buckets: int,
-        resume: bool,
-        input_snapshot: str,
-        ngram_size: int,
-        min_term_freq: int,
-        term_filter,
-        verify_unique_doc_ids: bool,
-        attr_rollup_cols: list[str] | None,
-        fail_after_bucket: int | None,
-    ) -> Manifest:
-        cfg = self.cfg
-        store = IndexStore(index_dir)
-        store.ensure_dirs()
-        store.save_config(cfg)
-        t0 = time.time()
-        stages: dict[str, float] = {}
-        shuffle_parts = cfg.shuffle_partitions
+            # --------------------------------------------------------- tokens/
+            # Tokenize EXACTLY ONCE and materialize: explode(generator_expr)
+            # re-evaluates the generator expression per emitted element, so
+            # feeding posexplode an inline regex-tokenizer is O(tokens²)/doc.
+            # A stored token array costs one transient parquet but makes every
+            # downstream stage a cheap column scan. (Transient; removable after
+            # build.)
+            from .functions.text import ngrams_col
 
-        attr_cols = attr_cols or []
-        base = docs.select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(text_col).alias("text"),
-            *( [F.col(url_col).alias("url")] if url_col else [F.lit(None).cast("string").alias("url")] ),
-            *( [F.col(lang_col).alias("lang")] if lang_col else [F.lit(None).cast("string").alias("lang")] ),
-            *[F.col(a) for a in attr_cols],
-        )
-
-        # --------------------------------------------------------- tokens/
-        # Tokenize EXACTLY ONCE and materialize: explode(generator_expr)
-        # re-evaluates the generator expression per emitted element, so
-        # feeding posexplode an inline regex-tokenizer is O(tokens²)/doc.
-        # A stored token array costs one transient parquet but makes every
-        # downstream stage a cheap column scan. (Transient; removable after
-        # build.)
-        from .functions.text import ngrams_col
-
-        term_expr = (
-            tokens_col(F.col("text"), cfg)
-            if ngram_size <= 1
-            else ngrams_col(F.col("text"), ngram_size, cfg)
-        )
-        if term_filter is not None:
-            term_expr = F.filter(term_expr, term_filter)
-
-        # -------------------------------------------------- postings_raw/
-        # ONE corpus pass: JVM tokenization feeds the Arrow partition
-        # inverter directly (mapInArrow consumes each row once, so the
-        # tokenizer expression is evaluated exactly once per doc — unlike
-        # explode(generator), which re-evaluates per element)
-        postings_path = os.path.join(index_dir, "postings_raw")
-        if not (resume and os.path.exists(os.path.join(postings_path, "_SUCCESS"))):
-            schema = (
-                POSTINGS_SCHEMA if cfg.store_positions else POSTINGS_SCHEMA_NOPOS
+            term_expr = (
+                tokens_col(F.col("text"), cfg)
+                if ngram_size <= 1
+                else ngrams_col(F.col("text"), ngram_size, cfg)
             )
-            # the inverter wants SMALL doc-row batches (see
-            # EngineConfig.inverter_batch_rows: JVM/python pipelining +
-            # cache-resident sort keys — 3× the stage throughput vs the
-            # build-wide 1M-row setting, which stays in force for the
-            # posting-row writer stage where it was measured to win)
-            _bk = "spark.sql.execution.arrow.maxRecordsPerBatch"
-            _bprev = self.spark.conf.get(_bk)
-            self.spark.conf.set(_bk, str(int(cfg.inverter_batch_rows)))
-            try:
-                # degenerate-input parallelism guard: a corpus stored as
-                # a single parquet row group yields ONE scan partition,
-                # serializing tokenize+invert on one core (measured 7.96 s
-                # → the whole stage single-task at local[32] on the sf1.0
-                # fixture). Redistributing the raw (doc_id, text) rows
-                # also gives postings_raw enough files for the downstream
-                # dict/segment scans to parallelize.
-                src = ensure_min_partitions(base.select("doc_id", "text"))
-                (
-                    src.select(F.col("doc_id"), term_expr.alias("tokens"))
-                    .mapInArrow(_partition_inverter(cfg), schema)
-                    .write.mode("overwrite")
-                    .parquet(postings_path)
-                )
-            finally:
-                self.spark.conf.set(_bk, _bprev)
-        stages["postings"] = round(time.time() - t0, 2)
-        postings = self.spark.read.parquet(postings_path)
+            if term_filter is not None:
+                term_expr = F.filter(term_expr, term_filter)
 
-        # ---------------------------------------------------------- docs/
-        # doc dimension: url/lang from the corpus, doclen recovered from
-        # postings (docs with zero surviving tokens get doclen 0).
-        # Runs in a HELPER THREAD concurrently with the dictionary
-        # aggregation below (guide §2.6 "overlap independent jobs"): both
-        # stages read postings_raw and neither depends on the other, so
-        # the docs write's task tail backfills the dict agg's idle slots.
-        stat_aggs = [
-            F.count("*").alias("n"),
-            F.avg("doclen").alias("avgdl"),
-            F.min("doc_id").alias("min_doc"),
-            F.max("doc_id").alias("max_doc"),
-        ]
-        if verify_unique_doc_ids:
-            # exact hash-collision check (see sources/pages.py collision
-            # budget): count(*) already in the agg, so one extra distinct
-            # pass over the 8-byte id column makes a ~10⁻⁴-probability
-            # silent url merge a LOUD build failure instead
-            stat_aggs.append(F.countDistinct("doc_id").alias("n_distinct"))
-
-        def _docs_stage():
-            st = time.time()
-            if not (resume and store.stage_done("docs")):
-                dls = postings.groupBy("doc_id").agg(
-                    F.first("dl").alias("doclen")
+            # -------------------------------------------------- postings_raw/
+            # ONE corpus pass: JVM tokenization feeds the Arrow partition
+            # inverter directly (mapInArrow consumes each row once, so the
+            # tokenizer expression is evaluated exactly once per doc — unlike
+            # explode(generator), which re-evaluates per element)
+            postings_path = os.path.join(index_dir, "postings_raw")
+            if not (resume and os.path.exists(os.path.join(postings_path, "_SUCCESS"))):
+                schema = (
+                    POSTINGS_SCHEMA if cfg.store_positions else POSTINGS_SCHEMA_NOPOS
                 )
-                (
-                    base.select("doc_id", "url", "lang", *attr_cols)
-                    .join(dls, "doc_id", "left")
-                    .select(
-                        "doc_id", "url", "lang",
-                        F.coalesce("doclen", F.lit(0)).cast("int").alias("doclen"),
-                        *attr_cols,
-                    )
-                    .write.mode("overwrite")
-                    .parquet(store.docs_path)
-                )
-            stats_df = self.spark.read.parquet(store.docs_path)
-            row = stats_df.agg(*stat_aggs).collect()[0]
-            return stats_df, row, round(time.time() - st, 2)
-
-        # stage-overlap pool of ONE thread: the docs stage overlaps the
-        # dictionary aggregation (pool thread + main thread), and segment
-        # buckets run one at a time. An interleaved A/B on the bench
-        # corpora measured 2-in-flight buckets a wash on the small build
-        # and a consistent loss with heavy outliers on the 4M-posting one
-        # (medians 15.1 s vs 8.5 s — two concurrent python-heavy writer
-        # jobs thrash the python worker pool at local core counts).
-        pool = ThreadPoolExecutor(max_workers=1)
-        docs_future = pool.submit(_docs_stage)
-
-        # ---------------------------------------------------------- terms/
-        # dict_pdf: driver-resident (term, term_id, df, cf, idf) when the
-        # vocabulary is driver-sized — reused for segment-shuffle tiling
-        # and bucket metrics so those stages cost zero extra Spark jobs.
-        # The df/cf aggregation + bounded collect run on the MAIN thread
-        # while the docs stage runs in the pool; the idf computation and
-        # the terms write wait below for n_docs from the docs stats.
-        t_terms = time.time()
-        dict_pdf: pd.DataFrame | None = None
-        head = None
-        dict_df = None
-        terms_todo = not (resume and store.stage_done("terms"))
-        if terms_todo:
-            dict_df = postings.groupBy("term").agg(
-                F.count("*").cast("long").alias("df"),
-                F.sum("tf").cast("long").alias("cf"),
-            )
-            if min_term_freq > 1:
-                # reference minNgramFreq HAVING filter (builder.go:199);
-                # postings of dropped terms vanish at the bucket dict-join
-                dict_df = dict_df.where(F.col("cf") >= min_term_freq)
-            # bounded-collect probe: ONE job computes the 40M-row agg AND
-            # fetches the vocab when it is driver-sized (the common case
-            # even for web corpora — vocabularies are millions of terms,
-            # not billions); oversized vocabs take the distributed
-            # zipWithIndex path below
-            head = dict_df.limit(_DRIVER_ID_LIMIT + 1).collect()
-        terms_head_sec = round(time.time() - t_terms, 2)
-
-        docs_stats, agg, docs_sec = docs_future.result()
-        stages["docs"] = docs_sec
-        if verify_unique_doc_ids and int(agg["n_distinct"]) != int(agg["n"]):
-            raise ValueError(
-                f"doc_id collision: {int(agg['n'])} docs but only "
-                f"{int(agg['n_distinct'])} distinct doc_ids — two input "
-                "documents hash to the same 64-bit id (see "
-                "sources/pages.py collision budget). Deduplicate inputs "
-                "or derive ids from a wider hash."
-            )
-        n_docs, avgdl = int(agg["n"]), float(agg["avgdl"])
-
-        # --------------------------------------------------- attr_rollup/
-        # optional (term, attrs…, count) table — search-result Args paid
-        # at BUILD time like the reference (builder.go:130-139 groups
-        # n-grams by their metadata while counting). Queries then answer
-        # term_attr_counts from a term-pushed-down scan of this table,
-        # O(result) instead of O(postings of term) — the difference
-        # between a head term and a full posting decode at 10¹² docs.
-        # Range-partitioned + sorted by term so the isin filter prunes to
-        # a few row groups.
-        if attr_rollup_cols:
-            ar0 = time.time()
-            roll_cols = [c for c in attr_rollup_cols if c in docs_stats.columns]
-            if not roll_cols:
-                raise ValueError(
-                    f"attr_rollup_cols {attr_rollup_cols} — none present in "
-                    f"the docs dimension ({docs_stats.columns})"
-                )
-            if not (resume and store.stage_done("attr_rollup")):
-                (
-                    postings.select("term", "doc_id", "tf")
-                    .join(docs_stats.select("doc_id", *roll_cols), "doc_id")
-                    .groupBy("term", *roll_cols)
-                    .agg(F.sum("tf").cast("long").alias("count"))
-                    .repartitionByRange(shuffle_parts, "term")
-                    .sortWithinPartitions("term")
-                    .write.mode("overwrite")
-                    .parquet(store.attr_rollup_path)
-                )
-            stages["attr_rollup"] = round(time.time() - ar0, 2)
-        min_doc = int(agg["min_doc"]) if agg["min_doc"] is not None else 0
-        max_doc = int(agg["max_doc"]) if agg["max_doc"] is not None else 0
-
-        t_terms2 = time.time()
-        if terms_todo:
-            if len(head) <= _DRIVER_ID_LIMIT:
-                dict_pdf = pd.DataFrame(
-                    {
-                        "term": [r["term"] for r in head],
-                        "df": np.array([r["df"] for r in head], np.int64),
-                        "cf": np.array([r["cf"] for r in head], np.int64),
-                    }
-                ).sort_values("term", ignore_index=True)
-                dict_pdf["term_id"] = np.arange(len(dict_pdf), dtype=np.int64)
-                # literal log(1 + x), mirroring bm25_idf, so driver- and
-                # JVM-computed idf stay bit-identical
-                dfv = dict_pdf["df"].to_numpy(np.float64)
-                dict_pdf["idf"] = np.log(
-                    1.0 + (n_docs - dfv + 0.5) / (dfv + 0.5)
-                )
-                (
-                    self.spark.createDataFrame(
-                        dict_pdf[["term", "term_id", "df", "cf", "idf"]],
-                        "term string, term_id long, df long, cf long, idf double",
-                    )
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(store.terms_path)
-                )
-            else:
-                # materialize once: assign_dense_ids counts it and the
-                # write scans it again
-                dict_df = dict_df.localCheckpoint()
-                dict_df = assign_dense_ids(
-                    dict_df, "term", "term_id", shuffle_parts
-                )
-                try:
+                # the inverter wants SMALL doc-row batches (see
+                # _INVERTER_BATCH_ROWS: JVM/python pipelining +
+                # cache-resident sort keys — 3× the stage throughput vs the
+                # build-wide 1M-row setting, which stays in force for the
+                # posting-row writer stage where it was measured to win)
+                with _session_confs(self.spark, {
+                    "spark.sql.execution.arrow.maxRecordsPerBatch":
+                        str(_INVERTER_BATCH_ROWS),
+                }):
+                    # degenerate-input parallelism guard: a corpus stored as
+                    # a single parquet row group yields ONE scan partition,
+                    # serializing tokenize+invert on one core (measured 7.96 s
+                    # → the whole stage single-task at local[32] on the sf1.0
+                    # fixture). Redistributing the raw (doc_id, text) rows
+                    # also gives postings_raw enough files for the downstream
+                    # dict/segment scans to parallelize.
+                    src = ensure_min_partitions(base.select("doc_id", "text"))
                     (
-                        dict_df.withColumn(
-                            "idf", bm25_idf(n_docs, F.col("df"))
+                        src.select(F.col("doc_id"), term_expr.alias("tokens"))
+                        .mapInArrow(_partition_inverter(cfg), schema)
+                        .write.mode("overwrite")
+                        .parquet(postings_path)
+                    )
+            stages["postings"] = round(time.time() - t0, 2)
+            postings = self.spark.read.parquet(postings_path)
+
+            # ---------------------------------------------------------- docs/
+            # doc dimension: url/lang from the corpus, doclen recovered from
+            # postings (docs with zero surviving tokens get doclen 0).
+            # Runs in a HELPER THREAD concurrently with the dictionary
+            # aggregation below (guide §2.6 "overlap independent jobs"): both
+            # stages read postings_raw and neither depends on the other, so
+            # the docs write's task tail backfills the dict agg's idle slots.
+            stat_aggs = [
+                F.count("*").alias("n"),
+                F.avg("doclen").alias("avgdl"),
+                F.min("doc_id").alias("min_doc"),
+                F.max("doc_id").alias("max_doc"),
+            ]
+            if verify_unique_doc_ids:
+                # exact hash-collision check (see sources/pages.py collision
+                # budget): count(*) already in the agg, so one extra distinct
+                # pass over the 8-byte id column makes a ~10⁻⁴-probability
+                # silent url merge a LOUD build failure instead
+                stat_aggs.append(F.countDistinct("doc_id").alias("n_distinct"))
+
+            def _docs_stage():
+                st = time.time()
+                if not (resume and store.stage_done("docs")):
+                    dls = postings.groupBy("doc_id").agg(
+                        F.first("dl").alias("doclen")
+                    )
+                    (
+                        base.select("doc_id", "url", "lang", *attr_cols)
+                        .join(dls, "doc_id", "left")
+                        .select(
+                            "doc_id", "url", "lang",
+                            F.coalesce("doclen", F.lit(0)).cast("int").alias("doclen"),
+                            *attr_cols,
                         )
-                        .select("term", "term_id", "df", "cf", "idf")
+                        .write.mode("overwrite")
+                        .parquet(store.docs_path)
+                    )
+                stats_df = self.spark.read.parquet(store.docs_path)
+                row = stats_df.agg(*stat_aggs).collect()[0]
+                return stats_df, row, round(time.time() - st, 2)
+
+            # stage-overlap pool of ONE thread: the docs stage overlaps the
+            # dictionary aggregation (pool thread + main thread), and segment
+            # buckets run one at a time. An interleaved A/B on the bench
+            # corpora measured 2-in-flight buckets a wash on the small build
+            # and a consistent loss with heavy outliers on the 4M-posting one
+            # (medians 15.1 s vs 8.5 s — two concurrent python-heavy writer
+            # jobs thrash the python worker pool at local core counts).
+            pool = ThreadPoolExecutor(max_workers=1)
+            docs_future = pool.submit(_docs_stage)
+
+            # ---------------------------------------------------------- terms/
+            # dict_pdf: driver-resident (term, term_id, df, cf, idf) when the
+            # vocabulary is driver-sized — reused for segment-shuffle tiling
+            # and bucket metrics so those stages cost zero extra Spark jobs.
+            # The df/cf aggregation + bounded collect run on the MAIN thread
+            # while the docs stage runs in the pool; the idf computation and
+            # the terms write wait below for n_docs from the docs stats.
+            t_terms = time.time()
+            dict_pdf: pd.DataFrame | None = None
+            head = None
+            dict_df = None
+            terms_todo = not (resume and store.stage_done("terms"))
+            if terms_todo:
+                dict_df = postings.groupBy("term").agg(
+                    F.count("*").cast("long").alias("df"),
+                    F.sum("tf").cast("long").alias("cf"),
+                )
+                if min_term_freq > 1:
+                    # reference minNgramFreq HAVING filter (builder.go:199);
+                    # postings of dropped terms vanish at the bucket dict-join
+                    dict_df = dict_df.where(F.col("cf") >= min_term_freq)
+                # bounded-collect probe: ONE job computes the 40M-row agg AND
+                # fetches the vocab when it is driver-sized (the common case
+                # even for web corpora — vocabularies are millions of terms,
+                # not billions); oversized vocabs take the distributed
+                # zipWithIndex path below
+                head = dict_df.limit(_DRIVER_ID_LIMIT + 1).collect()
+            terms_head_sec = round(time.time() - t_terms, 2)
+
+            docs_stats, agg, docs_sec = docs_future.result()
+            stages["docs"] = docs_sec
+            if verify_unique_doc_ids and int(agg["n_distinct"]) != int(agg["n"]):
+                raise ValueError(
+                    f"doc_id collision: {int(agg['n'])} docs but only "
+                    f"{int(agg['n_distinct'])} distinct doc_ids — two input "
+                    "documents hash to the same 64-bit id (see "
+                    "sources/pages.py collision budget). Deduplicate inputs "
+                    "or derive ids from a wider hash."
+                )
+            n_docs, avgdl = int(agg["n"]), float(agg["avgdl"])
+
+            # --------------------------------------------------- attr_rollup/
+            # optional (term, attrs…, count) table — search-result Args paid
+            # at BUILD time like the reference (builder.go:130-139 groups
+            # n-grams by their metadata while counting). Queries then answer
+            # term_attr_counts from a term-pushed-down scan of this table,
+            # O(result) instead of O(postings of term) — the difference
+            # between a head term and a full posting decode at 10¹² docs.
+            # Range-partitioned + sorted by term so the isin filter prunes to
+            # a few row groups.
+            if attr_rollup_cols:
+                ar0 = time.time()
+                roll_cols = [c for c in attr_rollup_cols if c in docs_stats.columns]
+                if not roll_cols:
+                    raise ValueError(
+                        f"attr_rollup_cols {attr_rollup_cols} — none present in "
+                        f"the docs dimension ({docs_stats.columns})"
+                    )
+                if not (resume and store.stage_done("attr_rollup")):
+                    (
+                        postings.select("term", "doc_id", "tf")
+                        .join(docs_stats.select("doc_id", *roll_cols), "doc_id")
+                        .groupBy("term", *roll_cols)
+                        .agg(F.sum("tf").cast("long").alias("count"))
+                        .repartitionByRange(shuffle_parts, "term")
+                        .sortWithinPartitions("term")
+                        .write.mode("overwrite")
+                        .parquet(store.attr_rollup_path)
+                    )
+                stages["attr_rollup"] = round(time.time() - ar0, 2)
+            min_doc = int(agg["min_doc"]) if agg["min_doc"] is not None else 0
+            max_doc = int(agg["max_doc"]) if agg["max_doc"] is not None else 0
+
+            t_terms2 = time.time()
+            if terms_todo:
+                if len(head) <= _DRIVER_ID_LIMIT:
+                    dict_pdf = pd.DataFrame(
+                        {
+                            "term": [r["term"] for r in head],
+                            "df": np.array([r["df"] for r in head], np.int64),
+                            "cf": np.array([r["cf"] for r in head], np.int64),
+                        }
+                    ).sort_values("term", ignore_index=True)
+                    dict_pdf["term_id"] = np.arange(len(dict_pdf), dtype=np.int64)
+                    # literal log(1 + x), mirroring bm25_idf, so driver- and
+                    # JVM-computed idf stay bit-identical
+                    dfv = dict_pdf["df"].to_numpy(np.float64)
+                    dict_pdf["idf"] = np.log(
+                        1.0 + (n_docs - dfv + 0.5) / (dfv + 0.5)
+                    )
+                    (
+                        self.spark.createDataFrame(
+                            dict_pdf[["term", "term_id", "df", "cf", "idf"]],
+                            "term string, term_id long, df long, cf long, idf double",
+                        )
+                        .coalesce(1)
                         .write.mode("overwrite")
                         .parquet(store.terms_path)
                     )
-                finally:
-                    # release the cache assign_dense_ids pinned for offsets
-                    dep = getattr(dict_df, "_gloomy_persisted", None)
-                    if dep is not None:
-                        dep.unpersist()
-        terms = self.spark.read.parquet(store.terms_path)
-        n_terms = len(dict_pdf) if dict_pdf is not None else terms.count()
-        stages["terms"] = round(
-            terms_head_sec + (time.time() - t_terms2), 2
-        )
-
-        # ------------------------------------------------ segments/bucket=K
-        width = max(1, math.ceil(n_terms / n_buckets))
-        done = store.completed_buckets() if resume else {}
-        writer = _segment_writer(cfg, avgdl)
-        total_postings = 0
-        t_segs = time.time()
-        ledger_lock = threading.Lock()
-
-        def _bucket_job(k: int, lo: int, hi: int) -> int:
-            bt0 = time.time()
-            bt_pdf = None
-            pos_cols = ["positions"] if "positions" in postings.columns else []
-            if hi - lo <= _PARTITIONER_DICT_LIMIT:
-                # dictionary-driven EXPLICIT partitioning: per-term posting
-                # counts (df) are already known, so the segment shuffle
-                # needs no repartitionByRange — whose RangePartitioner runs
-                # a sampling job that recomputes the ENTIRE postings⨝dict
-                # projection once more just to learn a distribution the
-                # dictionary already states. Terms are tiled into ~equal
-                # posting chunks in term_id order; a term straddling a
-                # chunk boundary splits into doc_id RANGE sub-chunks
-                # (width_bucket over [min_doc, max_doc] — doc ids are
-                # sequential or 64-bit hashes, i.e. ~uniform), so per-term
-                # blocks stay globally doc-sorted and non-overlapping and
-                # a head term ("the" ≈ every doc) spreads over many
-                # partitions (explicit skew handling, north rule).
-                if dict_pdf is not None:
-                    # dictionary already driver-resident: zero extra jobs
-                    bt_pdf = dict_pdf.iloc[lo:hi][
-                        ["term", "term_id", "idf", "df"]
-                    ].reset_index(drop=True)
                 else:
-                    bt_pdf = (
-                        terms.where(
-                            (F.col("term_id") >= lo) & (F.col("term_id") < hi)
+                    # materialize once: assign_dense_ids counts it and the
+                    # write scans it again
+                    dict_df = dict_df.localCheckpoint()
+                    dict_df = assign_dense_ids(
+                        dict_df, "term", "term_id", shuffle_parts
+                    )
+                    try:
+                        (
+                            dict_df.withColumn(
+                                "idf", bm25_idf(n_docs, F.col("df"))
+                            )
+                            .select("term", "term_id", "df", "cf", "idf")
+                            .write.mode("overwrite")
+                            .parquet(store.terms_path)
                         )
-                        .select("term", "term_id", "idf", "df")
-                        .toPandas()
-                        .sort_values("term_id", ignore_index=True)
-                    )
-                df_arr = bt_pdf["df"].to_numpy(np.int64)
-                cum = np.concatenate(([0], np.cumsum(df_arr)))
-                # ~4 chunks per partition slot: fine chunks bound the
-                # straggler a hash collision of two chunks can create.
-                # Floored by segment_chunk_min_postings so chunk count is
-                # data-derived: without the floor a small bucket tiles
-                # into shuffle_parts*4 near-empty chunks, each paying a
-                # full grouped-python task launch (guide §2.2) — measured
-                # 256 tasks for ~0.6M postings/bucket on the sf1.0 bench.
-                target = max(
-                    1,
-                    int(-(-int(cum[-1]) // (shuffle_parts * 4))),
-                    int(cfg.segment_chunk_min_postings),
-                )
-                bt_pdf["pid_base"] = (cum[:-1] // target).astype(np.int32)
-                bt_pdf["n_splits"] = (
-                    (cum[1:] - 1) // target - cum[:-1] // target + 1
-                ).astype(np.int32)
-                n_pids = int((cum[-1] - 1) // target + 1) if cum[-1] else 1
-                dim = self.spark.createDataFrame(
-                    bt_pdf[["term", "term_id", "pid_base", "n_splits"]]
-                )
-                # idf is a per-TERM value: re-attach it AFTER the shuffle
-                # with a second broadcast join so the exchange moves 8
-                # fewer bytes per posting row
-                idf_dim = self.spark.createDataFrame(
-                    bt_pdf[["term_id", "idf"]]
-                )
-                joined = postings.join(F.broadcast(dim), "term")
-                pid = F.col("pid_base") + F.when(
-                    F.col("n_splits") > 1,
-                    F.width_bucket(
-                        F.col("doc_id"),
-                        F.lit(min_doc),
-                        F.lit(max_doc + 1),
-                        F.col("n_splits"),
-                    ) - 1,
-                ).otherwise(F.lit(0))
-                segs = (
-                    joined.withColumn("_pid", pid.cast("int"))
-                    .select("term_id", "doc_id", "tf", "dl", *pos_cols, "_pid")
-                    .repartition(n_pids, F.col("_pid"))
-                    .join(F.broadcast(idf_dim), "term_id")
-                    .select("term_id", "doc_id", "tf", "dl", "idf", *pos_cols)
-                    .mapInArrow(writer, SEGMENT_SCHEMA)
-                )
-            else:
-                # vocabulary slice too large for a driver-side tiling —
-                # fall back to the sampling range shuffle
-                bucket_terms = terms.where(
-                    (F.col("term_id") >= lo) & (F.col("term_id") < hi)
-                ).select("term", "term_id", "idf")
-                joined = postings.join(F.broadcast(bucket_terms), "term").select(
-                    "term_id", "doc_id", "tf", "dl", "idf", *pos_cols
-                )
-                segs = (
-                    joined.repartitionByRange(shuffle_parts, "term_id", "doc_id")
-                    .mapInArrow(writer, SEGMENT_SCHEMA)
-                )
-            segs.write.mode("overwrite").parquet(store.bucket_dir(k))
-            stages[f"segments_write_{k}"] = round(time.time() - bt0, 2)
-            # bucket metrics without re-scanning payload bytes: the
-            # dictionary slice already states n_terms and n_postings
-            # (sum df) exactly, block count comes from parquet footers
-            # (metadata-only), payload bytes from file sizes on disk.
-            # Only the range-shuffle fallback (no driver tiling) pays a
-            # small-column Spark agg.
-            pq_files = [
-                e.path
-                for e in os.scandir(store.bucket_dir(k))
-                if e.name.endswith(".parquet")
-            ]
-            if bt_pdf is not None:
-                import pyarrow.parquet as _pq
+                    finally:
+                        # release the cache assign_dense_ids pinned for offsets
+                        dep = getattr(dict_df, "_gloomy_persisted", None)
+                        if dep is not None:
+                            dep.unpersist()
+            terms = self.spark.read.parquet(store.terms_path)
+            n_terms = len(dict_pdf) if dict_pdf is not None else terms.count()
+            stages["terms"] = round(
+                terms_head_sec + (time.time() - t_terms2), 2
+            )
 
-                m_nt = int(len(bt_pdf))
-                m_np = int(bt_pdf["df"].sum())
-                m_nb = sum(
-                    _pq.ParquetFile(f).metadata.num_rows for f in pq_files
-                )
-            else:
-                written = self.spark.read.parquet(store.bucket_dir(k))
-                m = written.agg(
-                    F.countDistinct("term_id").alias("nt"),
-                    F.count("*").alias("nb"),
-                    F.sum("n_docs").alias("np"),
-                ).collect()[0]
-                m_nt, m_nb, m_np = int(m["nt"]), int(m["nb"]), int(m["np"] or 0)
-            bucket_bytes = sum(os.stat(f).st_size for f in pq_files)
-            elapsed = time.time() - bt0
-            # the resume ledger is an append-only file shared by all
-            # concurrently-built buckets — serialize the appends
-            with ledger_lock:
-                store.append_bucket(
-                    BucketRecord(
-                        bucket=k,
-                        term_id_lo=lo,
-                        term_id_hi=hi,
-                        n_terms=m_nt,
-                        n_blocks=m_nb,
-                        n_postings=m_np,
-                        bytes_payload=bucket_bytes,
-                        elapsed_sec=elapsed,
-                        terms_per_sec=(m_nt / elapsed if elapsed > 0 else 0.0),
-                        postings_per_sec=(m_np / elapsed if elapsed > 0 else 0.0),
-                        input_snapshot=input_snapshot,
-                    )
-                )
-            return m_np
+            # ------------------------------------------------ segments/bucket=K
+            width = max(1, math.ceil(n_terms / n_buckets))
+            done = store.completed_buckets() if resume else {}
+            writer = _segment_writer(cfg, avgdl)
+            total_postings = 0
+            t_segs = time.time()
+            ledger_lock = threading.Lock()
 
-        # buckets are independent jobs (disjoint term ranges, each
-        # committing its own dir + ledger line) queued on the one-thread
-        # pool above, after the docs stage. The fail-injection test hook
-        # runs them on this thread so "only buckets ≤ k committed" stays
-        # exact.
-        pending: list[tuple[int, object]] = []
-        try:
-            for k in range(n_buckets):
-                lo, hi = k * width, min((k + 1) * width, n_terms)
-                if lo >= n_terms:
-                    break
-                if k in done and os.path.exists(store.bucket_dir(k)):
-                    total_postings += done[k].n_postings
-                    continue
-                if fail_after_bucket is not None:
-                    total_postings += _bucket_job(k, lo, hi)
-                    if k >= fail_after_bucket:
-                        raise RuntimeError(f"injected failure after bucket {k}")
+            def _bucket_job(k: int, lo: int, hi: int) -> int:
+                bt0 = time.time()
+                bt_pdf = None
+                pos_cols = ["positions"] if "positions" in postings.columns else []
+                if hi - lo <= _PARTITIONER_DICT_LIMIT:
+                    # dictionary-driven EXPLICIT partitioning: per-term posting
+                    # counts (df) are already known, so the segment shuffle
+                    # needs no repartitionByRange — whose RangePartitioner runs
+                    # a sampling job that recomputes the ENTIRE postings⨝dict
+                    # projection once more just to learn a distribution the
+                    # dictionary already states. Terms are tiled into ~equal
+                    # posting chunks in term_id order; a term straddling a
+                    # chunk boundary splits into doc_id RANGE sub-chunks
+                    # (width_bucket over [min_doc, max_doc] — doc ids are
+                    # sequential or 64-bit hashes, i.e. ~uniform), so per-term
+                    # blocks stay globally doc-sorted and non-overlapping and
+                    # a head term ("the" ≈ every doc) spreads over many
+                    # partitions (explicit skew handling, north rule).
+                    if dict_pdf is not None:
+                        # dictionary already driver-resident: zero extra jobs
+                        bt_pdf = dict_pdf.iloc[lo:hi][
+                            ["term", "term_id", "idf", "df"]
+                        ].reset_index(drop=True)
+                    else:
+                        bt_pdf = (
+                            terms.where(
+                                (F.col("term_id") >= lo) & (F.col("term_id") < hi)
+                            )
+                            .select("term", "term_id", "idf", "df")
+                            .toPandas()
+                            .sort_values("term_id", ignore_index=True)
+                        )
+                    df_arr = bt_pdf["df"].to_numpy(np.int64)
+                    cum = np.concatenate(([0], np.cumsum(df_arr)))
+                    # ~4 chunks per partition slot: fine chunks bound the
+                    # straggler a hash collision of two chunks can create.
+                    # Floored by _SEGMENT_CHUNK_MIN_POSTINGS so chunk count is
+                    # data-derived: without the floor a small bucket tiles
+                    # into shuffle_parts*4 near-empty chunks, each paying a
+                    # full grouped-python task launch (guide §2.2) — measured
+                    # 256 tasks for ~0.6M postings/bucket on the sf1.0 bench.
+                    target = max(
+                        1,
+                        int(-(-int(cum[-1]) // (shuffle_parts * 4))),
+                        _SEGMENT_CHUNK_MIN_POSTINGS,
+                    )
+                    bt_pdf["pid_base"] = (cum[:-1] // target).astype(np.int32)
+                    bt_pdf["n_splits"] = (
+                        (cum[1:] - 1) // target - cum[:-1] // target + 1
+                    ).astype(np.int32)
+                    n_pids = int((cum[-1] - 1) // target + 1) if cum[-1] else 1
+                    dim = self.spark.createDataFrame(
+                        bt_pdf[["term", "term_id", "pid_base", "n_splits"]]
+                    )
+                    # idf is a per-TERM value: re-attach it AFTER the shuffle
+                    # with a second broadcast join so the exchange moves 8
+                    # fewer bytes per posting row
+                    idf_dim = self.spark.createDataFrame(
+                        bt_pdf[["term_id", "idf"]]
+                    )
+                    joined = postings.join(F.broadcast(dim), "term")
+                    pid = F.col("pid_base") + F.when(
+                        F.col("n_splits") > 1,
+                        F.width_bucket(
+                            F.col("doc_id"),
+                            F.lit(min_doc),
+                            F.lit(max_doc + 1),
+                            F.col("n_splits"),
+                        ) - 1,
+                    ).otherwise(F.lit(0))
+                    segs = (
+                        joined.withColumn("_pid", pid.cast("int"))
+                        .select("term_id", "doc_id", "tf", "dl", *pos_cols, "_pid")
+                        .repartition(n_pids, F.col("_pid"))
+                        .join(F.broadcast(idf_dim), "term_id")
+                        .select("term_id", "doc_id", "tf", "dl", "idf", *pos_cols)
+                        .mapInArrow(writer, SEGMENT_SCHEMA)
+                    )
                 else:
-                    pending.append((k, pool.submit(_bucket_job, k, lo, hi)))
-            for _k, fut in pending:
-                total_postings += fut.result()
-        finally:
-            pool.shutdown(wait=True)
+                    # vocabulary slice too large for a driver-side tiling —
+                    # fall back to the sampling range shuffle
+                    bucket_terms = terms.where(
+                        (F.col("term_id") >= lo) & (F.col("term_id") < hi)
+                    ).select("term", "term_id", "idf")
+                    joined = postings.join(F.broadcast(bucket_terms), "term").select(
+                        "term_id", "doc_id", "tf", "dl", "idf", *pos_cols
+                    )
+                    segs = (
+                        joined.repartitionByRange(shuffle_parts, "term_id", "doc_id")
+                        .mapInArrow(writer, SEGMENT_SCHEMA)
+                    )
+                segs.write.mode("overwrite").parquet(store.bucket_dir(k))
+                stages[f"segments_write_{k}"] = round(time.time() - bt0, 2)
+                # bucket metrics without re-scanning payload bytes: the
+                # dictionary slice already states n_terms and n_postings
+                # (sum df) exactly, block count comes from parquet footers
+                # (metadata-only), payload bytes from file sizes on disk.
+                # Only the range-shuffle fallback (no driver tiling) pays a
+                # small-column Spark agg.
+                pq_files = [
+                    e.path
+                    for e in os.scandir(store.bucket_dir(k))
+                    if e.name.endswith(".parquet")
+                ]
+                if bt_pdf is not None:
+                    import pyarrow.parquet as _pq
 
-        stages["segments"] = round(time.time() - t_segs, 2)
-        build_seconds = time.time() - t0
-        manifest = Manifest(
-            n_docs=n_docs,
-            avgdl=avgdl,
-            n_terms=int(n_terms),
-            config=__import__("json").loads(cfg.to_json()),
-            build_seconds=build_seconds,
-            docs_per_sec=n_docs / build_seconds if build_seconds > 0 else 0.0,
-            postings_total=total_postings,
-            input_snapshot=input_snapshot,
-            stages=stages,
-        )
-        manifest.save(index_dir)
-        return manifest
+                    m_nt = int(len(bt_pdf))
+                    m_np = int(bt_pdf["df"].sum())
+                    m_nb = sum(
+                        _pq.ParquetFile(f).metadata.num_rows for f in pq_files
+                    )
+                else:
+                    written = self.spark.read.parquet(store.bucket_dir(k))
+                    m = written.agg(
+                        F.countDistinct("term_id").alias("nt"),
+                        F.count("*").alias("nb"),
+                        F.sum("n_docs").alias("np"),
+                    ).collect()[0]
+                    m_nt, m_nb, m_np = int(m["nt"]), int(m["nb"]), int(m["np"] or 0)
+                bucket_bytes = sum(os.stat(f).st_size for f in pq_files)
+                elapsed = time.time() - bt0
+                # the resume ledger is an append-only file shared by all
+                # concurrently-built buckets — serialize the appends
+                with ledger_lock:
+                    store.append_bucket(
+                        BucketRecord(
+                            bucket=k,
+                            term_id_lo=lo,
+                            term_id_hi=hi,
+                            n_terms=m_nt,
+                            n_blocks=m_nb,
+                            n_postings=m_np,
+                            bytes_payload=bucket_bytes,
+                            elapsed_sec=elapsed,
+                            terms_per_sec=(m_nt / elapsed if elapsed > 0 else 0.0),
+                            postings_per_sec=(m_np / elapsed if elapsed > 0 else 0.0),
+                            input_snapshot=input_snapshot,
+                        )
+                    )
+                return m_np
+
+            # buckets are independent jobs (disjoint term ranges, each
+            # committing its own dir + ledger line) queued on the one-thread
+            # pool above, after the docs stage. The fail-injection test hook
+            # runs them on this thread so "only buckets ≤ k committed" stays
+            # exact.
+            pending: list[tuple[int, object]] = []
+            try:
+                for k in range(n_buckets):
+                    lo, hi = k * width, min((k + 1) * width, n_terms)
+                    if lo >= n_terms:
+                        break
+                    if k in done and os.path.exists(store.bucket_dir(k)):
+                        total_postings += done[k].n_postings
+                        continue
+                    if fail_after_bucket is not None:
+                        total_postings += _bucket_job(k, lo, hi)
+                        if k >= fail_after_bucket:
+                            raise RuntimeError(f"injected failure after bucket {k}")
+                    else:
+                        pending.append((k, pool.submit(_bucket_job, k, lo, hi)))
+                for _k, fut in pending:
+                    total_postings += fut.result()
+            finally:
+                pool.shutdown(wait=True)
+
+            stages["segments"] = round(time.time() - t_segs, 2)
+            build_seconds = time.time() - t0
+            manifest = Manifest(
+                n_docs=n_docs,
+                avgdl=avgdl,
+                n_terms=int(n_terms),
+                config=__import__("json").loads(cfg.to_json()),
+                build_seconds=build_seconds,
+                docs_per_sec=n_docs / build_seconds if build_seconds > 0 else 0.0,
+                postings_total=total_postings,
+                input_snapshot=input_snapshot,
+                stages=stages,
+            )
+            manifest.save(index_dir)
+            return manifest

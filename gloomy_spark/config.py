@@ -19,9 +19,6 @@ class BM25Config:
 
 @dataclass(frozen=True)
 class EngineConfig:
-    # HAVING count >= min_ngram_freq (reference: conf-sample.json:11,
-    # builder.go:199)
-    min_ngram_freq: int = 4
     # stop strings RESET the n-gram window (reference: builder.go:120-122);
     # ignore strings are dropped, window continues (builder.go:124)
     stop_strings: tuple[str, ...] = (".", ":")
@@ -38,22 +35,8 @@ class EngineConfig:
     # doc_bucket boundary so the query side can co-locate all query terms'
     # blocks for a doc range with a single groupBy(doc_bucket)
     doc_bucket_width: int = 1 << 20
-    # Arrow batch rows for the INVERTER stage only (doc rows in, heavy
-    # numpy per batch). Small batches pipeline JVM tokenization with
-    # python inversion and keep the sort keys cache-resident; measured at
-    # 300k docs / 4 cores: 1M-row batches 32 s, 30k 18-23 s, 10k 13 s,
-    # 4k 10.3 s, 2k 10.4 s (knee ≈ 4k ≈ 1M tokens at avgdl 240).
-    inverter_batch_rows: int = 4096
     # shuffle parallelism used by the build pipeline
     shuffle_partitions: int = 32
-    # floor on postings per segment-writer chunk: the dictionary tiler
-    # targets bucket_postings/(shuffle_partitions*4) postings per chunk,
-    # which for small buckets degenerates into hundreds of near-empty
-    # grouped-python tasks (~90 ms protocol overhead each, guide §2.2
-    # "fewer, larger partitions"). Chunk count therefore derives from
-    # data volume: at 100 TB the slot-based target is far above this
-    # floor and the tiling is unchanged.
-    segment_chunk_min_postings: int = 1 << 18
 
     def to_json(self) -> str:
         return json.dumps(asdict(self), indent=2, default=list)

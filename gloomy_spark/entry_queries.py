@@ -26,7 +26,9 @@ from .ops.hashing import M31, hash_params, md5_long, md5_long_sql, universal_has
 
 CFG = EngineConfig()
 K1, B = CFG.bm25.k1, CFG.bm25.b
-MIN_FREQ = CFG.min_ngram_freq
+# n-gram count queries keep terms with count >= MIN_FREQ (reference:
+# conf-sample.json:11 minNgramFreq, builder.go:199 HAVING filter)
+MIN_FREQ = 4
 
 # ---------------------------------------------------------------- shared --
 

@@ -301,21 +301,12 @@ def _kmeans_centroids(sample: np.ndarray, k: int, iters: int = 8, seed: int = 42
     return cent
 
 
-def ivf_topk(
-    emb: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    sample_size: int = 2000,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF approximate top-k: coarse k-means quantizer → per-vector list
-    assignment (one matmul per Arrow batch) → exact rerank inside the
-    `n_probe` lists nearest to the query. The scan prunes to
-    ~n_probe/n_lists of the corpus; at scale the list id becomes a
-    partition column so pruning happens at the file level."""
+def _ivf_quantize(
+    emb: DataFrame, n_lists: int, sample_size: int, vec_col: str
+) -> tuple[DataFrame, np.ndarray]:
+    """The IVF coarse quantizer: k-means on a driver-side sample, then
+    `emb` with an `ivf_list` column (each vector's nearest centroid, one
+    matmul per Arrow batch). Returns (that frame, centroids)."""
     from ..session import ship_package
 
     ship_package(emb.sparkSession)
@@ -332,7 +323,26 @@ def ivf_topk(
         d = cent_sq[None, :] - 2.0 * (mat @ cent.T)
         return pd.Series(d.argmin(1).astype(np.int32))
 
-    with_list = emb.withColumn("ivf_list", assign(F.col(vec_col)))
+    return emb.withColumn("ivf_list", assign(F.col(vec_col))), cent
+
+
+def ivf_topk(
+    emb: DataFrame,
+    query_vec_id: int,
+    k: int = 10,
+    n_lists: int = 16,
+    n_probe: int = 4,
+    sample_size: int = 2000,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """IVF approximate top-k: coarse k-means quantizer → per-vector list
+    assignment (one matmul per Arrow batch) → exact rerank inside the
+    `n_probe` lists nearest to the query. The scan prunes to
+    ~n_probe/n_lists of the corpus; at scale the list id becomes a
+    partition column so pruning happens at the file level."""
+    with_list, cent = _ivf_quantize(emb, n_lists, sample_size, vec_col)
+    cent_sq = (cent**2).sum(1)
     qrow = emb.where(F.col(id_col) == query_vec_id).select(vec_col).collect()
     if not qrow:
         return emb.sparkSession.createDataFrame([], "vec_id long, cos_sim double")
@@ -366,24 +376,9 @@ def ivf_build(
     asserted in tests) — at 10⁹ vectors the scan never opens the cold lists."""
     import json as _json
 
-    from ..session import ship_package
-
-    ship_package(emb.sparkSession)
-    sample = np.stack(
-        [np.asarray(r[0], dtype=np.float64) for r in emb.select(vec_col).limit(sample_size).collect()]
-    )
-    cent = _kmeans_centroids(sample, n_lists)
-    cent_sq = (cent**2).sum(1)
-
-    @pandas_udf("int")
-    def assign(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        d = cent_sq[None, :] - 2.0 * (mat @ cent.T)
-        return pd.Series(d.argmin(1).astype(np.int32))
-
+    with_list, cent = _ivf_quantize(emb, n_lists, sample_size, vec_col)
     (
-        emb.withColumn("ivf_list", assign(F.col(vec_col)))
-        .write.mode("overwrite")
+        with_list.write.mode("overwrite")
         .partitionBy("ivf_list")
         .parquet(f"{out_dir}/vectors")
     )

@@ -798,6 +798,32 @@ class SearchIndex:
             fields.append(pa.field("positions", pa.list_(pa.int32())))
         return self._per_bucket(segs, est, match, pa.schema(fields), schema)
 
+    def _hit_tokens(self, docs: DataFrame, hits: DataFrame) -> DataFrame:
+        """(doc_id, pos, _toks): `hits` (doc_id, positions) joined to the
+        forward store `docs`, one row per hit position with the doc's
+        token array. kwic and collocations slice their windows from it.
+
+        _toks is materialized in a projection BELOW the explode: Generate
+        re-evaluates sibling expressions once per emitted element, so a
+        same-projection tokens_col would re-tokenize the doc once per hit
+        (tf(query, doc) times). A separate select keeps split() under the
+        Generate node (CollapseProject cannot merge across Generate — the
+        child projection is requiredChildOutput); pinned by
+        test_kwic_tokenizes_below_explode and
+        test_collocations_tokenize_below_explode."""
+        from ..functions.text import tokens_col
+
+        return (
+            docs.select("doc_id", "text")
+            .join(hits, "doc_id")
+            .select(
+                "doc_id",
+                "positions",
+                tokens_col(F.col("text"), self.cfg).alias("_toks"),
+            )
+            .select("doc_id", F.explode("positions").alias("pos"), "_toks")
+        )
+
     def kwic(self, query: str, docs: DataFrame, width: int = 3) -> DataFrame:
         """Keyword-in-context concordance: every occurrence of ``query``
         (a single term or an exact phrase) with up to ``width`` tokens of
@@ -831,26 +857,8 @@ class SearchIndex:
         else:
             hits = self.phrase_match(query, with_positions=True)
 
-        from ..functions.text import tokens_col
-
         w = F.lit(int(width))
-        # _toks is materialized in a projection BELOW the explode: Generate
-        # re-evaluates sibling expressions once per emitted element, so a
-        # same-projection tokens_col would re-tokenize the doc once per hit
-        # (tf(query, doc) times). A separate select keeps split() under the
-        # Generate node (CollapseProject cannot merge across Generate — the
-        # child projection is requiredChildOutput); pinned by
-        # test_kwic_tokenizes_below_explode.
-        joined = (
-            docs.select("doc_id", "text")
-            .join(hits, "doc_id")
-            .select(
-                "doc_id",
-                "positions",
-                tokens_col(F.col("text"), self.cfg).alias("_toks"),
-            )
-            .select("doc_id", F.explode("positions").alias("pos"), "_toks")
-        )
+        joined = self._hit_tokens(docs, hits)
         start1 = F.col("pos") + 1  # 1-based index of the match start
         return joined.select(
             "doc_id",
@@ -912,18 +920,9 @@ class SearchIndex:
             )
         n_tokens = self._total_cf
 
-        from ..functions.text import tokens_col
-
         w = F.lit(int(window))
         hits = self.postings_positions(node_term).select("doc_id", "positions")
-        # tokenize once per matched doc, not once per node occurrence — see
-        # the kwic comment above (same Generate re-evaluation trap).
-        j = (
-            docs.select("doc_id", "text")
-            .join(hits, "doc_id")
-            .select("positions", tokens_col(F.col("text"), self.cfg).alias("_toks"))
-            .select(F.explode("positions").alias("pos"), "_toks")
-        )
+        j = self._hit_tokens(docs, hits)
         start1 = F.col("pos") + 1
         ctx = j.select(
             F.explode(

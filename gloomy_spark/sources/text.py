@@ -1,9 +1,13 @@
-"""Corpus sources: plain-text files (optionally gzip/bzip2, non-UTF8).
+"""Corpus sources: one record source for every file reader, plus the
+plain-text and whole-file readers.
 
-Reference parity: files.NewReader transparent gz/bz2 handling
-(index/builder/files/util.go:28-56) — Spark's text reader decompresses
-.gz/.bz2 by extension natively; charset decode (simple.go:84-90) is a
-vectorized bytes-decode over binaryFile rows for non-UTF8 corpora.
+Reference parity: gloomy reads every corpus through one reader, files.
+NewReader, with transparent gz/bz2 handling (index/builder/files/
+util.go:28-56) and a charset decode (simple.go:84-90). Here that reader
+is `_file_records`; the plain-text and both vertical readers
+(sources/vertical.py) are built on it and share one content-stable
+doc_id rule, `xxhash64(path, content key, occurrence)`, for every
+charset and codec.
 """
 
 from __future__ import annotations
@@ -11,78 +15,86 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def read_plaintext_docs(
-    spark: SparkSession, path: str, charset: str = "utf-8",
-    stable_ids: bool = True,
+def _file_records(
+    spark: SparkSession, path: str, sep: str | None, charset: str
 ) -> DataFrame:
-    """One document per line: (doc_id, text). Handles *.gz / *.bz2
-    transparently. For non-UTF8, reads bytes and decodes vectorized.
+    """(path, rec): the records of every file under `path` — its lines
+    when `sep` is None, else the text between consecutive `sep`s (which
+    are consumed).
 
-    doc_ids are CONTENT-stable by default: re-reading the same corpus at
-    any parallelism / split layout yields the identical (doc_id, text)
-    set, so resume lineage and cross-run comparisons hold.
-    doc_id = xxhash64(path, text, occurrence), where occurrence numbers
-    duplicate (path, text) lines 1..k — the assignment order within a
-    duplicate group is arbitrary, but the emitted ID SET is permutation-
-    invariant, hence layout-independent. Costs one shuffle on
-    (path, line-hash); only exact-duplicate lines within one file share a
-    key. Duplicate groups are numbered sequentially (no layout-free salt
-    exists for byte-identical rows), so a pathological file that is
-    mostly ONE repeated line concentrates that group on one task —
-    for such corpora dedup first or pass `stable_ids=False`, which skips
-    the shuffle and falls back to monotonically_increasing_id
-    (partition-layout-dependent — fine for one-shot pipelines)."""
-    if charset.lower() in ("utf-8", "utf8"):
-        lines = spark.read.text(path).select(
-            F.input_file_name().alias("path"), F.col("value").alias("text")
-        )
-        if not stable_ids:
-            return lines.select(
-                F.monotonically_increasing_id().alias("doc_id"), "text"
-            )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("path", F.xxhash64("text")).orderBy(
-            F.monotonically_increasing_id()
-        )
-        return lines.select(
-            F.xxhash64("path", "text", F.row_number().over(w)).alias("doc_id"),
-            "text",
-        )
-    # non-UTF8: binaryFile → decode whole file → split lines
+    UTF-8 goes through Spark's text source, which is SPLITTABLE: one
+    multi-GB plain file parallelizes at record boundaries, and Hadoop
+    decompresses .gz / .bz2 by extension (bz2 splits too; gzip stays one
+    task per file, as in the reference). Other charsets cannot be split
+    at byte offsets, so each file is loaded whole, decompressed by
+    extension, decoded and split (`splitlines()` for lines)."""
     from ..session import ship_package
 
     ship_package(spark)
-    bf = spark.read.format("binaryFile").load(path)
+    if charset.lower() in ("utf-8", "utf8"):
+        reader = spark.read if sep is None else spark.read.option("lineSep", sep)
+        return reader.text(path).select(
+            F.input_file_name().alias("path"), F.col("value").alias("rec")
+        )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import bz2
+        import gzip
+
         for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                body = bytes(r["content"])
-                if r["path"].endswith(".gz"):
-                    import gzip
-
+            paths, recs = [], []
+            for p, content in zip(pdf["path"], pdf["content"]):
+                body = bytes(content)
+                if p.endswith(".gz"):
                     body = gzip.decompress(body)
-                elif r["path"].endswith(".bz2"):
-                    import bz2
-
+                elif p.endswith(".bz2"):
                     body = bz2.decompress(body)
-                for i, line in enumerate(body.decode(charset).splitlines()):
-                    rows.append((r["path"], i, line))
-            yield pd.DataFrame(rows, columns=["path", "line_no", "text"])
+                text = body.decode(charset)
+                parts = text.splitlines() if sep is None else text.split(sep)
+                paths.extend([p] * len(parts))
+                recs.extend(parts)
+            yield pd.DataFrame({"path": paths, "rec": recs})
 
-    decoded = bf.mapInPandas(decode, "path string, line_no long, text string")
-    # 64-bit hash of the full (path, line) pair — no 32-bit fold / abs()
-    # sign squash, so distinct documents don't silently merge at large
-    # file counts (birthday bound moves from 2^16 to 2^32 files·lines)
-    return decoded.select(
-        F.xxhash64("path", "line_no").alias("doc_id"),
-        "text",
+    return (
+        spark.read.format("binaryFile").load(path)
+        .select("path", "content")
+        .mapInPandas(decode, "path string, rec string")
+    )
+
+
+def _occurrence(*keys) -> Column:
+    """1..k over the rows that share `keys`. Which duplicate gets which
+    number is arbitrary, but the emitted set of numbers is not, so ids
+    built from (keys, occurrence) are the same at any split layout. Costs
+    one shuffle on `keys`; only exact duplicates share one."""
+    w = Window.partitionBy(*keys).orderBy(F.monotonically_increasing_id())
+    return F.row_number().over(w)
+
+
+def read_plaintext_docs(
+    spark: SparkSession, path: str, charset: str = "utf-8"
+) -> DataFrame:
+    """One document per line: (doc_id, text), from plain, .gz or .bz2
+    files in any charset (see `_file_records`).
+
+    doc_ids are CONTENT-stable: doc_id = xxhash64(path, text,
+    occurrence), where occurrence numbers duplicate (path, text) lines
+    1..k, so re-reading the same corpus at any parallelism / split layout
+    yields the identical (doc_id, text) set, and inserting a line leaves
+    every other line's id unchanged. Duplicate groups are numbered on one
+    task (no layout-free salt exists for byte-identical rows), so a file
+    that is mostly ONE repeated line concentrates on that task — dedup
+    such corpora first."""
+    lines = _file_records(spark, path, None, charset)
+    return lines.select(
+        F.xxhash64("path", "rec", _occurrence("path", F.xxhash64("rec"))).alias(
+            "doc_id"
+        ),
+        F.col("rec").alias("text"),
     )
 
 

@@ -7,24 +7,32 @@ tab-separated positional attributes, SGML-ish structure tags like
 Structure boundaries reset the n-gram window (builder.go:142-144), and
 structure attributes become per-n-gram metadata (builder.go:131-139).
 
-This implementation parses whole vertical files (optionally .gz) into
-documents: (doc_id, text, <struct attrs...>). Tokens inside one structure
-are space-joined; every NON-doc structure tag (<s>, <p>, …, opening or
-closing) injects a stop-character boundary marker into the token stream,
-so the engine tokenizer reproduces the reference's window reset
-(builder.go:142-144 ProcToken(nil)): unigram stream and doclen are
-unchanged (the marker is a split character and vanishes), but n-gram
-windows never cross the structure boundary.
+Both readers take their records from the one record source,
+`sources.text._file_records`, split at the doc close tag, so each record
+is one document chunk (a plain UTF-8 file parallelizes at document
+boundaries) and every charset and codec takes the same path.
+`read_vertical_docs` parses chunks into documents: (doc_id, text, <doc
+attrs...>). Tokens inside one structure are space-joined; every NON-doc
+structure tag (<s>, <p>, …, opening or closing) injects a stop-character
+boundary marker, so the engine tokenizer reproduces the reference's
+window reset (builder.go:142-144 ProcToken(nil)): the unigram stream and
+doclen are unchanged (the marker is a split character), but n-gram
+windows never cross the boundary. `read_vertical_structs` emits one row
+per structure run. Both id a document by xxhash64(path, content key,
+occurrence), never by its position in the file.
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .text import _file_records, _occurrence
 
 _OPEN_RE = re.compile(r"<(\w+)((?:\s+\w+=\"[^\"]*\")*)\s*/?>")
 _ATTR_RE = re.compile(r"(\w+)=\"([^\"]*)\"")
@@ -54,7 +62,6 @@ def parse_vertical(
         return {"attrs": dict(cur_attrs), "text": " ".join(toks)}
 
     for line in body.splitlines():
-        line = line.rstrip("\n")
         if not line:
             continue
         if line.startswith("</"):
@@ -123,7 +130,6 @@ def parse_vertical_structs(body: str, doc_tag: str = "doc") -> list[dict]:
         cur = []
 
     for line in body.splitlines():
-        line = line.rstrip("\n")
         if not line:
             continue
         if line.startswith("</"):
@@ -159,6 +165,31 @@ def parse_vertical_structs(body: str, doc_tag: str = "doc") -> list[dict]:
     return out
 
 
+def _parse_records(
+    spark: SparkSession,
+    path: str,
+    doc_tag: str,
+    charset: str,
+    rows_of: Callable[[str, str], Iterator[tuple]],
+    schema: str,
+) -> DataFrame:
+    """`rows_of(path, chunk)` over every document chunk of the vertical
+    files under `path`, as one mapInPandas with DDL `schema`."""
+    close = f"</{doc_tag}>"
+    cols = [c.split()[0] for c in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for p, rec in zip(pdf["path"], pdf["rec"]):
+                # re-append the close tag the split consumed; a chunk
+                # holds at most one <doc> (text between two </doc>s)
+                rows.extend(rows_of(p, rec + "\n" + close))
+            yield pd.DataFrame(rows, columns=cols)
+
+    return _file_records(spark, path, close, charset).mapInPandas(run, schema)
+
+
 def read_vertical_structs(
     spark: SparkSession,
     path: str,
@@ -176,31 +207,23 @@ def read_vertical_structs(
     via the metadata join — exact per hit, because structure tags reset
     the n-gram window so no window spans two runs. `attrs` use the
     reference's qualified names ('doc.file', 's.n'); emitted columns
-    replace '.' with '_' ('doc_file', 's_n'). Splittable lineSep reader
-    for utf-8 (same as read_vertical_docs); whole-file decode otherwise.
+    replace '.' with '_' ('doc_file', 's_n').
 
     ids are content-stable across any partitioning: doc_id =
     xxhash64(path, doc-content-hash, occ), struct_id adds the run ordinal;
     byte-identical duplicate docs in one file get distinct ids via the
     occurrence window (their run→instance pairing is arbitrary but the
     emitted row SET is permutation-invariant)."""
-    from ..session import ship_package
-
-    ship_package(spark)
     attrs = attrs or []
     cols = [a.replace(".", "_") for a in attrs]
-    close = f"</{doc_tag}>"
 
-    def rows_of(p: str, text: str):
-        import hashlib
-
+    def rows_of(p: str, chunk: str) -> Iterator[tuple]:
         by_doc: dict[int, list[dict]] = {}
-        for d in parse_vertical_structs(text, doc_tag):
+        for d in parse_vertical_structs(chunk, doc_tag):
             by_doc.setdefault(d["seq"], []).append(d)
         for ds in by_doc.values():
             # dkey hashes the WHOLE doc's run contents (shared by all of
-            # its runs, independent of chunk/wholefile parsing and of the
-            # doc's position in the file)
+            # its runs, independent of the doc's position in the file)
             ident = "\x1f".join(
                 f"{d['run']}\x1e{d['text']}\x1e"
                 + "\x1d".join(f"{k}={v}" for k, v in sorted(d["attrs"].items()))
@@ -216,52 +239,8 @@ def read_vertical_structs(
     schema = "path string, dkey string, run long, text string" + "".join(
         f", {c} string" for c in cols
     )
-    if charset.lower() in ("utf-8", "utf8"):
-        chunks = spark.read.option("lineSep", close).text(path).select(
-            F.input_file_name().alias("path"), F.col("value").alias("chunk")
-        )
-
-        def run_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for p, chunk in zip(pdf["path"], pdf["chunk"]):
-                    rows.extend(rows_of(p, chunk + "\n" + close))
-                yield pd.DataFrame(
-                    rows, columns=["path", "dkey", "run", "text", *cols]
-                )
-
-        parsed = chunks.mapInPandas(run_chunks, schema)
-    else:
-        bf = spark.read.format("binaryFile").load(path)
-
-        def run_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for _, r in pdf.iterrows():
-                    body = bytes(r["content"])
-                    if r["path"].endswith(".gz"):
-                        import gzip
-
-                        body = gzip.decompress(body)
-                    elif r["path"].endswith(".bz2"):
-                        import bz2
-
-                        body = bz2.decompress(body)
-                    rows.extend(rows_of(r["path"], body.decode(charset)))
-                yield pd.DataFrame(
-                    rows, columns=["path", "dkey", "run", "text", *cols]
-                )
-
-        parsed = bf.mapInPandas(run_files, schema)
-
-    from pyspark.sql import Window
-
-    # dkey identifies a doc's run-content; occ disambiguates byte-identical
-    # duplicate docs (set-stable, see docstring)
-    w = Window.partitionBy("path", "dkey", "run").orderBy(
-        F.monotonically_increasing_id()
-    )
-    occ = F.row_number().over(w)
+    parsed = _parse_records(spark, path, doc_tag, charset, rows_of, schema)
+    occ = _occurrence("path", "dkey", "run")
     return parsed.select(
         F.xxhash64("path", "dkey", occ).alias("doc_id"),
         F.xxhash64("path", "dkey", "run", occ).alias("struct_id"),
@@ -277,109 +256,33 @@ def read_vertical_docs(
     attrs: list[str] | None = None,
     charset: str = "utf-8",
 ) -> DataFrame:
-    """Vertical files → (doc_id, text, <attr columns>).
-
-    UTF-8 input (plain, .gz or .bz2 — Hadoop decompresses by extension,
-    files/util.go:43-54 parity) goes through a SPLITTABLE reader: the text
-    source with lineSep=``</doc>`` makes each record one document chunk,
-    so a single multi-GB plain ``.vert`` file parallelizes across tasks at
-    exact document boundaries (and bz2, being a splittable codec, does
-    too; gzip stays one-task-per-file — the codec's constraint, same as
-    the reference). Non-UTF8 input falls back to whole-file binary decode
-    (gz/bz2 by extension), matching the plaintext reader.
+    """Vertical files (plain, .gz or .bz2, any charset; files/util.go:43-54)
+    → (doc_id, text, <attr columns>).
 
     doc_ids are CONTENT-stable: xxhash64(path, doc-content-hash,
     occurrence) — re-reading at any parallelism yields the identical
-    (doc_id, text) set (see sources/text.py for the occurrence-window
-    rationale). Assumes no other structure tag name has ``doc_tag`` as a
-    prefix ending in '>' (true for SGML-ish verticals: ``</docs>`` does
-    not contain ``</doc>`` as a substring)."""
+    (doc_id, text) set, and inserting a document leaves every other
+    document's id unchanged (see sources/text.py `_occurrence`). Assumes
+    no other structure tag name has ``doc_tag`` as a prefix ending in '>'
+    (true for SGML-ish verticals: ``</docs>`` does not contain ``</doc>``
+    as a substring)."""
     attrs = attrs or []
-    if charset.lower() in ("utf-8", "utf8"):
-        return _read_vertical_chunked(spark, path, doc_tag, attrs)
-    return _read_vertical_wholefile(spark, path, doc_tag, attrs, charset)
 
-
-def _read_vertical_chunked(
-    spark: SparkSession, path: str, doc_tag: str, attrs: list[str]
-) -> DataFrame:
-    from ..session import ship_package
-
-    ship_package(spark)
-    close = f"</{doc_tag}>"
-    chunks = spark.read.option("lineSep", close).text(path).select(
-        F.input_file_name().alias("path"), F.col("value").alias("chunk")
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            rows = []
-            for p, chunk in zip(pdf["path"], pdf["chunk"]):
-                # re-append the close tag the delimiter consumed; a chunk
-                # holds at most one <doc> (text between two </doc>s)
-                for d in parse_vertical(chunk + "\n" + close, doc_tag):
-                    ident = "\x1f".join(
-                        [d["text"]]
-                        + [f"{k}\x1e{v}" for k, v in sorted(d["attrs"].items())]
-                    )
-                    key = hashlib.md5(ident.encode()).hexdigest()
-                    rows.append(
-                        (p, key, d["text"], *[d["attrs"].get(a) for a in attrs])
-                    )
-            cols = ["path", "key", "text", *attrs]
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_of(p: str, chunk: str) -> Iterator[tuple]:
+        for d in parse_vertical(chunk, doc_tag):
+            ident = "\x1f".join(
+                [d["text"]]
+                + [f"{k}\x1e{v}" for k, v in sorted(d["attrs"].items())]
+            )
+            key = hashlib.md5(ident.encode()).hexdigest()
+            yield (p, key, d["text"], *[d["attrs"].get(a) for a in attrs])
 
     schema = "path string, key string, text string" + "".join(
         f", {a} string" for a in attrs
     )
-    parsed = chunks.mapInPandas(run, schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("path", "key").orderBy(F.monotonically_increasing_id())
+    parsed = _parse_records(spark, path, doc_tag, charset, rows_of, schema)
     return parsed.select(
-        F.xxhash64("path", "key", F.row_number().over(w)).alias("doc_id"),
-        "text",
-        *attrs,
-    )
-
-
-def _read_vertical_wholefile(
-    spark: SparkSession, path: str, doc_tag: str, attrs: list[str], charset: str
-) -> DataFrame:
-    from ..session import ship_package
-
-    ship_package(spark)
-    bf = spark.read.format("binaryFile").load(path)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                body = bytes(r["content"])
-                if r["path"].endswith(".gz"):
-                    import gzip
-
-                    body = gzip.decompress(body)
-                elif r["path"].endswith(".bz2"):
-                    import bz2
-
-                    body = bz2.decompress(body)
-                for i, d in enumerate(parse_vertical(body.decode(charset), doc_tag)):
-                    rows.append(
-                        (r["path"], i, d["text"], *[d["attrs"].get(a) for a in attrs])
-                    )
-            cols = ["path", "seq", "text", *attrs]
-            yield pd.DataFrame(rows, columns=cols)
-
-    schema = "path string, seq long, text string" + "".join(
-        f", {a} string" for a in attrs
-    )
-    parsed = bf.mapInPandas(run, schema)
-    # 64-bit (path, seq) hash — see sources/text.py doc_id rationale
-    return parsed.select(
-        F.xxhash64("path", "seq").alias("doc_id"),
+        F.xxhash64("path", "key", _occurrence("path", "key")).alias("doc_id"),
         "text",
         *attrs,
     )

@@ -158,6 +158,41 @@ def test_resume_after_injected_failure(spark, tmp_path):
     assert sorted(buckets) == [0, 1, 2]
 
 
+def test_build_restores_session_confs(spark, tmp_path):
+    """build scopes three session confs to itself: after a build, and
+    after one that fails, each is back at its earlier value, and a conf
+    that was unset before is unset again (not pinned to its default)."""
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    split = "spark.sql.files.maxPartitionBytes"
+    arrow = "spark.sql.execution.arrow.pyspark.enabled"
+    keys = (batch, split, arrow)
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    docs = pages_df(spark, 40, partitions=2).select("doc_id", "text")
+    builder = IndexBuilder(spark, CFG)
+
+    def now():
+        return {k: spark.conf.get(k, None) for k in keys}
+
+    try:
+        spark.conf.unset(batch)
+        spark.conf.set(split, "67108864")
+        spark.conf.set(arrow, "false")
+        before = now()
+        assert before == {batch: None, split: "67108864", arrow: "false"}
+        builder.build(docs, str(tmp_path / "ok"), n_buckets=2)
+        assert now() == before
+        with pytest.raises(RuntimeError, match="injected failure"):
+            builder.build(docs, str(tmp_path / "bad"), n_buckets=2,
+                          fail_after_bucket=0)
+        assert now() == before
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_resume_skips_torn_ledger_line(spark, tmp_path):
     """A crash mid-append leaves half a JSON line at the end of the
     ledger. That bucket never committed: completed_buckets skips the line,

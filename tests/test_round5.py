@@ -341,7 +341,8 @@ def test_bm25_filtered_plan_is_mapinarrow(small_index):
 def test_config_with_removed_keys_opens_and_round_trips(spark, small_index, tmp_path):
     """An index whose config.json still holds keys of fields since
     removed (salt_threshold_df, ngram_sizes, max_ngram_size,
-    proc_chunk_size) still opens with the same config, and the config
+    proc_chunk_size, min_ngram_freq, inverter_batch_rows,
+    segment_chunk_min_postings) still opens with the same config, and the config
     round-trips through to_json/from_json."""
     import json
     import shutil
@@ -353,7 +354,9 @@ def test_config_with_removed_keys_opens_and_round_trips(spark, small_index, tmp_
     with open(f"{idx}/config.json") as f:
         d = json.load(f)
     d.update(salt_threshold_df=0.05, ngram_sizes=[1, 2, 3],
-             max_ngram_size=10, proc_chunk_size=1_000_000)
+             max_ngram_size=10, proc_chunk_size=1_000_000,
+             min_ngram_freq=4, inverter_batch_rows=4096,
+             segment_chunk_min_postings=1 << 18)
     with open(f"{idx}/config.json", "w") as f:
         json.dump(d, f)
     cfg = SearchIndex(spark, idx).cfg

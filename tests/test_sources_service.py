@@ -86,6 +86,94 @@ def test_vertical_source(spark, tmp_path):
     assert rows == [("baz", "y", "2"), ("foo bar", "x", "1")]
 
 
+# one vertical and one plain corpus, with doc attrs, <s n=…> structures,
+# a duplicate doc, a duplicate line and characters outside ASCII
+VERT_BODY = (
+    '<doc file="a" n="1">\n<s n="1">\nŽluťoučký\tA\nkůň\tN\n</s>\n'
+    '<s n="2">\núpěl\tV\n</s>\n</doc>\n'
+    '<doc file="b" n="2">\nďábelské\tA\n<s n="3">\nódy\tN\n</s>\n</doc>\n'
+    '<doc file="a" n="1">\n<s n="1">\nŽluťoučký\tA\nkůň\tN\n</s>\n'
+    '<s n="2">\núpěl\tV\n</s>\n</doc>\n'
+)
+PLAIN_BODY = "Žluťoučký kůň\núpěl ďábelské ódy\n\nŽluťoučký kůň\nčtvrtý řádek\n"
+
+
+def _source_rows(spark, vert, plain, charset):
+    from collections import Counter
+
+    from gloomy_spark.sources import read_vertical_structs
+
+    docs = read_vertical_docs(spark, vert, attrs=["file", "n"], charset=charset)
+    structs = read_vertical_structs(
+        spark, vert, attrs=["doc.file", "s.n"], charset=charset
+    )
+    lines = read_plaintext_docs(spark, plain, charset=charset)
+    return (
+        Counter((r.text, r.file, r.n) for r in docs.collect()),
+        Counter((r.text, r.doc_file, r.s_n) for r in structs.collect()),
+        Counter(r.text for r in lines.collect()),
+    )
+
+
+@pytest.mark.spark
+def test_utf8_and_windows1250_bz2_read_the_same_rows(spark, tmp_path):
+    """Every reader goes through one record source: the same corpus as
+    UTF-8 and as windows-1250 .bz2 gives the same (text, attrs) rows for
+    docs, structure runs and plain lines."""
+    import bz2
+
+    paths = {}
+    for name, enc, pack in (("u8", "utf-8", bytes), ("cp", "windows-1250", bz2.compress)):
+        vert = tmp_path / f"{name}.vert{'.bz2' if name == 'cp' else ''}"
+        plain = tmp_path / f"{name}.txt{'.bz2' if name == 'cp' else ''}"
+        vert.write_bytes(pack(VERT_BODY.encode(enc)))
+        plain.write_bytes(pack(PLAIN_BODY.encode(enc)))
+        paths[enc] = (str(vert), str(plain))
+    utf8 = _source_rows(spark, *paths["utf-8"], "utf-8")
+    cp = _source_rows(spark, *paths["windows-1250"], "windows-1250")
+    assert utf8 == cp
+    docs, structs, lines = utf8
+    assert docs[("Žluťoučký kůň . úpěl", "a", "1")] == 2
+    assert structs == {
+        ("Žluťoučký kůň", "a", "1"): 2, ("úpěl", "a", "2"): 2,
+        ("ďábelské", "b", None): 1, ("ódy", "b", "3"): 1,
+    }
+    assert lines == {
+        "Žluťoučký kůň": 2, "úpěl ďábelské ódy": 1, "": 1, "čtvrtý řádek": 1,
+    }
+
+
+@pytest.mark.spark
+def test_windows1250_ids_survive_an_insert_at_the_top(spark, tmp_path):
+    """Non-UTF-8 doc_ids follow the content rule too: putting a new doc
+    (or line) at the top of a windows-1250 file leaves every other doc's
+    doc_id unchanged; duplicates still get distinct ids."""
+    vert, plain = tmp_path / "c.vert", tmp_path / "c.txt"
+    new_doc = '<doc file="z" n="0">\nnový\tA\n</doc>\n'
+    new_line = "nový řádek\n"
+
+    def read():
+        docs = read_vertical_docs(spark, str(vert), attrs=["file"],
+                                  charset="windows-1250")
+        lines = read_plaintext_docs(spark, str(plain), charset="windows-1250")
+        return (
+            sorted((r.text, r.file, r.doc_id) for r in docs.collect()),
+            sorted((r.text, r.doc_id) for r in lines.collect()),
+        )
+
+    vert.write_bytes(VERT_BODY.encode("windows-1250"))
+    plain.write_bytes(PLAIN_BODY.encode("windows-1250"))
+    docs, lines = read()
+    vert.write_bytes((new_doc + VERT_BODY).encode("windows-1250"))
+    plain.write_bytes((new_line + PLAIN_BODY).encode("windows-1250"))
+    docs2, lines2 = read()
+
+    assert len(docs) == 3 and len({d for *_, d in docs}) == 3
+    assert len(lines) == 5 and len({d for _, d in lines}) == 5
+    assert [r for r in docs2 if r[1] != "z"] == docs
+    assert [r for r in lines2 if r[0] != "nový řádek"] == lines
+
+
 @pytest.fixture(scope="module")
 def bigram_index(spark, tmp_path_factory):
     idx = str(tmp_path_factory.mktemp("bidx"))
