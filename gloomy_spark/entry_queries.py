@@ -759,7 +759,7 @@ def q_boolean_search(
 ):
     """Boolean doc-set retrieval over the staged index: AND over `must`,
     OR over `should`, exclusion of `must_not` (one pushed-down scan +
-    one doc_id agg; see SearchIndex.boolean_search)."""
+    one per-doc_bucket kernel; see SearchIndex.boolean_search)."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         si = _index_for(spark, sf_dir)

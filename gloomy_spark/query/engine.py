@@ -4,8 +4,8 @@ Reference parity (service/search.go:174-200 dispatch; index.go:291-306
 first-token lookup; README query dialect) re-expressed over columnar
 tables, plus the BM25/block-max layer mandated by BASELINE.json.
 
-Distributed scoring plan (bm25_topk, bm25_topk_filtered, phrase_match,
-bm25_topk_batch):
+Distributed per-bucket plan (bm25_topk, bm25_topk_filtered, phrase_match,
+bm25_topk_batch, boolean_search):
     segments.where(term_id IN query terms)       ── parquet pushdown; idf
       [∪ tagged allowed-doc rows (facets)]          attached in python
       repartition(n, doc_bucket) | coalesce(1)   ── all of a bucket's rows
@@ -14,9 +14,18 @@ bm25_topk_batch):
       mapInArrow(_per_bucket_arrow)              ── per bucket: one bulk
                                                     decode; BM25: one top-k
                                                     per distinct term set;
-                                                    one python call per task
+                                                    boolean: per-doc role
+                                                    counts; one python call
+                                                    per task
       orderBy(score desc, doc_id asc) LIMIT k    ── TakeOrderedAndProject
       | row_number() per query_id <= k           ── batch: WindowGroupLimit
+
+Every read-path Python stage takes its task count from the query's
+posting volume (Σ df) through ``_scorer_parts``: the per-bucket plan
+above, and the streaming decoders ``postings_multi`` and
+``postings_positions``, which run as one task (coalesce(1)) when that
+rule gives one partition and keep the segment scan's parallelism
+otherwise.
 
 Every posting decode goes through ``decode_posting_blocks_bulk`` (one
 call per bucket or Arrow batch, never one per block). The three BM25
@@ -183,6 +192,55 @@ def _bucket_scorer(
     return score
 
 
+# boolean_search term roles, as bits: a term may hold several at once
+_MUST, _SHOULD, _NOT = 1, 2, 4
+_BOOL_SCHEMA = "doc_id long, tf int"
+_BOOL_ARROW = pa.schema([("doc_id", pa.int64()), ("tf", pa.int32())])
+
+
+def _boolean_bucket(must: list[int], should: list[int], must_not: list[int]):
+    """The boolean_search kernel for one doc_bucket → (doc_id, tf) of the
+    bucket's matching docs; the arguments are term_id lists (repeats
+    allowed; a term may sit in several). Doc buckets are disjoint doc
+    ranges, so every posting of a doc, for every query term, is in the
+    doc's one bucket, and the bucket alone decides the doc.
+
+    Each term_id gets role bits (_MUST, _SHOULD, _NOT). One bulk decode,
+    then per doc (np.unique + bincount): the number of distinct must
+    terms present (all of them required), whether a should term is
+    present (required when ``should`` is non-empty), whether a must_not
+    term is present (excludes the doc), and the summed tf of the
+    must/should terms. A doc sits in one block of a term, so (term, doc)
+    is unique and counting must postings counts distinct must terms."""
+    role_by_tid: dict[int, int] = {}
+    for bit, tids in ((_MUST, must), (_SHOULD, should), (_NOT, must_not)):
+        for t in tids:
+            role_by_tid[t] = role_by_tid.get(t, 0) | bit
+    n_must = len(set(must))
+
+    def match(blocks: pd.DataFrame) -> pd.DataFrame:
+        d, tf, _ = _decode_blocks(blocks)
+        role = np.repeat(
+            blocks["term_id"].map(role_by_tid).to_numpy(np.int64),
+            blocks["n_docs"].to_numpy(np.int64),
+        )
+        docs, inv = np.unique(d, return_inverse=True)
+
+        def count(bits: int) -> np.ndarray:
+            return np.bincount(inv[(role & bits) != 0], minlength=len(docs))
+
+        keep = count(_NOT) == 0
+        if n_must:
+            keep &= count(_MUST) == n_must
+        if should:
+            keep &= count(_SHOULD) > 0
+        pos = (role & (_MUST | _SHOULD)) != 0
+        tf_sum = np.bincount(inv[pos], weights=tf[pos], minlength=len(docs))
+        return pd.DataFrame({"doc_id": docs[keep], "tf": tf_sum[keep].astype(np.int32)})
+
+    return match
+
+
 def _per_bucket_arrow(fn, arrow_schema):
     """mapInArrow driver: one hash-partitioned task runs ``fn`` over
     every doc_bucket group of its partition in a single python call. The
@@ -254,13 +312,17 @@ class SearchIndex:
         from ..session import ensure_min_partitions
 
         # a small index writes few (large) segment files since the r6
-        # chunk-size floor, which would serialize the decode paths
-        # (postings/kwic/boolean) on a handful of tasks; redistribute to
-        # the cluster's slots when the scan is that narrow. Term filters
-        # still push into the parquet scan BELOW the added exchange, and
-        # at scale (files >> slots) this is a no-op. Measured on the
-        # bench index: head-term kwic 1.2-1.8 s -> 0.7 s, postings decode
-        # 0.6 -> 0.5 s.
+        # chunk-size floor, which would serialize a large decode on a
+        # handful of tasks; redistribute to the cluster's slots when the
+        # scan is that narrow. Term filters still push into the parquet
+        # scan BELOW the added exchange, and at scale (files >> slots)
+        # this is a no-op. The slot-wide scan is what the streaming
+        # decoders (postings_multi, postings_positions: postings, kwic,
+        # collocations, term_attr_counts, NRT) run on once a query's Σ df
+        # is past one task (_scorer_parts), what the per-bucket plan
+        # reads below its doc_bucket exchange, and what bm25_serve's
+        # cache-miss fetch scans; a query under the floor reads it
+        # through coalesce(1) in one Python task.
         self.segments = ensure_min_partitions(
             spark.read.parquet(f"{self.store.segments_path}/bucket=*")
         )
@@ -270,36 +332,52 @@ class SearchIndex:
     # (index.go:502-504); our analog is a driver/broadcast term map, only
     # viable while the vocabulary fits comfortably on the driver
     _TERM_MAP_LIMIT = 5_000_000
-    # floor on (estimated) postings per scorer task — sizes the scorer
-    # shuffle from the query's dictionary-known posting volume instead of
-    # a fixed partition count (see bm25_topk)
-    _SCORER_MIN_POSTINGS = 16384
+    # floor on (estimated) postings per Python task: the posting volume
+    # whose kernel time equals one task's fixed cost, so a second task
+    # only pays once the first has that much work. Both inputs measured
+    # on a 4-core host, PySpark 4.1.2 / CPython 3.11 (BENCH/BASELINE.md
+    # "Python task fixed cost"): fixed cost 150-240 ms per task, spent
+    # in the reused worker's importlib.invalidate_caches(), which re-reads
+    # the zip directory of each of its 17 zipimporters; kernel throughput
+    # 2.0 M postings/s (_bucket_scorer over the 1000-page perfbench
+    # index). 200 ms × 2.0 M/s = 4·10^5, rounded down to 2^18 since the
+    # other bucket kernels (phrase_match's matcher) are slower.
+    _SCORER_MIN_POSTINGS = 1 << 18
 
     def _scorer_parts(self, est_postings: int) -> int:
-        """Partition count for a per-bucket python scorer shuffle:
-        data-derived from the query's posting volume, Σ df of its terms
-        (guide §2.2 — near-empty python tasks cost ~90 ms each), capped
-        by bucket count and shuffle width."""
+        """Task count for a read-path python stage: data-derived from the
+        query's posting volume, Σ df of its terms, one task per
+        _SCORER_MIN_POSTINGS postings (each python task pays ~200 ms of
+        worker setup before any kernel work, see _SCORER_MIN_POSTINGS),
+        capped by bucket count and shuffle width."""
         nb = self._n_doc_buckets
         sp = int(self.cfg.shuffle_partitions)
         cap = max(1, min(sp, nb)) if nb else sp
         return max(1, min(cap, -(-est_postings // self._SCORER_MIN_POSTINGS)))
 
+    def _streamed(self, rows: DataFrame, est_postings: int) -> DataFrame:
+        """``rows`` as input of a streaming per-batch decoder
+        (postings_multi, postings_positions): one task through
+        coalesce(1) when _scorer_parts gives one, otherwise the segment
+        scan's own partitions, with no exchange added."""
+        return rows.coalesce(1) if self._scorer_parts(est_postings) == 1 else rows
+
     def _per_bucket(
         self, rows: DataFrame, est_postings: int, fn, arrow_schema, schema: str
     ) -> DataFrame:
-        """The per-bucket plan shared by the distributed scorers:
-        hash-repartition ``rows`` by doc_bucket (every row of a bucket
-        lands in one task; no Sort) and run ``fn`` over each bucket
-        through one mapInArrow call per task (_per_bucket_arrow).
-        Partition count is DATA-derived (guide §2.2, _scorer_parts): tiny
-        queries run 1-2 python tasks while head queries fan out to the
-        full shuffle width — a fixed count of near-empty python tasks
-        cost ~0.45 s/query at 64 partitions vs ~0.25 s at the derived
-        width on the bench index. One partition trivially co-locates
-        every bucket, so a narrow coalesce replaces the exchange outright
-        (guide §2.4 "remove shuffles") — repartition(1) would still
-        shuffle-write and -read every row."""
+        """The per-bucket plan shared by the distributed scorers and
+        boolean_search: hash-repartition ``rows`` by doc_bucket (every
+        row of a bucket lands in one task; no Sort) and run ``fn`` over
+        each bucket through one mapInArrow call per task
+        (_per_bucket_arrow). Partition count is DATA-derived
+        (_scorer_parts): a query under the floor runs one python task,
+        since each task costs ~200 ms of PySpark worker setup
+        (importlib.invalidate_caches over the worker's zipimporters)
+        before its kernel runs, while head queries fan out to the full
+        shuffle width. One partition trivially co-locates every bucket,
+        so a narrow coalesce replaces the exchange outright (guide §2.4
+        "remove shuffles") — repartition(1) would still shuffle-write and
+        -read every row."""
         n_parts = self._scorer_parts(est_postings)
         rows = (
             rows.coalesce(1)
@@ -557,14 +635,18 @@ class SearchIndex:
         rows (they may still live in uncompacted streaming runs — the NRT
         merger unions those in). One Spark scan total, vs one scan + one
         driver round-trip PER TERM with repeated `postings()` calls."""
-        term_of = {e[0]: t for t, e in self._lookup(terms).items()}
-        if not term_of:
+        found = self._lookup(terms)
+        if not found:
             return self.spark.createDataFrame(
                 [], "term string, doc_id long, tf int, dl int"
             )
-        segs = self.segments.where(
-            _in_longs("term_id", term_of)
-        ).select("term_id", "n_docs", "docs", "tfs", "dls")
+        term_of = {e[0]: t for t, e in found.items()}
+        segs = self._streamed(
+            self.segments.where(_in_longs("term_id", term_of)).select(
+                "term_id", "n_docs", "docs", "tfs", "dls"
+            ),
+            sum(e[2] for e in found.values()),
+        )
 
         def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -600,8 +682,12 @@ class SearchIndex:
             return self.spark.createDataFrame(
                 [], "doc_id long, tf int, positions array<int>"
             )
-        segs = self.segments.where(F.col("term_id") == found[term][0]).select(
-            "n_docs", "docs", "tfs", "dls", "pos_counts", "positions"
+        tid, _, df, _ = found[term]
+        segs = self._streamed(
+            self.segments.where(F.col("term_id") == tid).select(
+                "n_docs", "docs", "tfs", "dls", "pos_counts", "positions"
+            ),
+            df,
         )
 
         def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -627,48 +713,41 @@ class SearchIndex:
         """Boolean doc-set retrieval: docs containing ALL ``must`` terms,
         at least one ``should`` term (when any are given), and NONE of
         ``must_not``. Returns (doc_id, tf) with tf = total occurrences of
-        the positive (must+should) terms in the doc.
+        the positive (must+should) terms in the doc. A term may appear in
+        several lists; it then plays every role it was given.
 
         This is new query capability relative to the reference (gloomy
         returns per-n-gram rows, index/index.go:241-258, and unions
         sub-results — Q7; it has no doc-set algebra because it has no doc
-        ids). Scale shape: ONE pushed-down segments scan for every term in
-        the query (term_id IN (...) reaches the parquet scan), per-block
-        parallel decode, then a single partial-agg shuffle on doc_id — no
-        joins, no per-term scans, no driver materialization. Exclusion
-        needs no anti-join: any result doc must carry a positive term, so
-        grouping the combined postings by doc_id sees the must_not hits
-        of every candidate doc.
+        ids). Scale shape: the per-bucket plan (_per_bucket) over ONE
+        pushed-down segments scan of every query term's blocks, which
+        ship compressed to the bucket kernel _boolean_bucket. Doc buckets
+        are disjoint doc ranges, so each bucket decides its own docs
+        after one bulk decode: no doc_id exchange, no decoded posting
+        shuffled, no joins, no driver materialization. Exclusion needs no
+        anti-join: a doc's must_not postings sit in its bucket next to
+        its positive ones.
         """
-        must = [t.lower() for t in dict.fromkeys(must)]
-        should = [t.lower() for t in dict.fromkeys(should)]
-        must_not = [t.lower() for t in dict.fromkeys(must_not)]
+        must = list(dict.fromkeys(t.lower() for t in must))
+        should = list(dict.fromkeys(t.lower() for t in should))
+        must_not = list(dict.fromkeys(t.lower() for t in must_not))
         if not must and not should:
             raise ValueError("boolean_search needs at least one must/should term")
-        empty = self.spark.createDataFrame([], "doc_id long, tf int")
-        if len(self._lookup(must)) < len(must):
-            return empty  # an unindexed must term can match nothing
-        p = self.postings_multi(must + should + must_not)
-        is_must = _in_strings("term", must) if must else F.lit(False)
-        is_should = _in_strings("term", should) if should else F.lit(False)
-        is_not = _in_strings("term", must_not) if must_not else F.lit(False)
-        # (term, doc_id) is unique in decoded postings (each doc lives in
-        # exactly one block of a term), so a conditional COUNT replaces
-        # count-distinct — no Expand in the plan
-        agg = p.groupBy("doc_id").agg(
-            F.sum(F.when(is_must, 1).otherwise(0)).alias("_nm"),
-            F.max(F.when(is_should, 1).otherwise(0)).alias("_hs"),
-            F.max(F.when(is_not, 1).otherwise(0)).alias("_hn"),
-            F.sum(F.when(~is_not, F.col("tf")).otherwise(0))
-            .cast("int")
-            .alias("tf"),
+        found = self._lookup(must + should + must_not)
+        if any(t not in found for t in must) or (
+            should and not any(t in found for t in should)
+        ):
+            # an unindexed must term, or no indexed should term, matches nothing
+            return self.spark.createDataFrame([], _BOOL_SCHEMA)
+        tid = {t: e[0] for t, e in found.items()}
+        segs = self.segments.where(_in_longs("term_id", tid.values())).select(
+            "doc_bucket", "term_id", "n_docs", "docs", "tfs", "dls"
         )
-        cond = F.col("_hn") == 0
-        if must:
-            cond = cond & (F.col("_nm") == len(must))
-        if should:
-            cond = cond & (F.col("_hs") == 1)
-        return agg.where(cond).select("doc_id", "tf")
+        match = _boolean_bucket(
+            *([tid[t] for t in ts if t in tid] for ts in (must, should, must_not))
+        )
+        est = sum(e[2] for e in found.values())
+        return self._per_bucket(segs, est, match, _BOOL_ARROW, _BOOL_SCHEMA)
 
     def phrase_match(self, phrase: str, with_positions: bool = False) -> DataFrame:
         """Docs containing the exact token phrase (adjacent positions).
@@ -803,6 +882,12 @@ class SearchIndex:
         forward store `docs`, one row per hit position with the doc's
         token array. kwic and collocations slice their windows from it.
 
+        The join is left to AQE. On the 1000-page perfbench index it runs
+        as BroadcastHashJoin BuildLeft: the forward store's (doc_id,
+        text) is the broadcast side, so every call ships every doc's
+        text, whatever the hit count. A broadcast(hits) hint would be
+        unsafe for head terms at scale, so the plan is not pinned.
+
         _toks is materialized in a projection BELOW the explode: Generate
         re-evaluates sibling expressions once per emitted element, so a
         same-projection tokens_col would re-tokenize the doc once per hit
@@ -842,10 +927,9 @@ class SearchIndex:
         join against the forward store restricted to (doc_id, text), with
         tokenization and window slicing AFTER the join so only matched
         docs are tokenized, all in JVM expressions (slice/array_join —
-        no Python, no explode of full token streams). The hits side is
-        tiny relative to the corpus for selective queries; AQE sizes it
-        at runtime and picks a broadcast join, so the 100 TB forward
-        store is never shuffled.
+        no Python, no explode of full token streams). The join strategy
+        is AQE's (see _hit_tokens): on a small forward store it
+        broadcasts the store itself, not the hits.
         """
         out_schema = "doc_id long, pos int, lctx string, kw string, rctx string"
         terms = tokenize(query, self.cfg)
@@ -893,11 +977,10 @@ class SearchIndex:
 
         Scale shape: node positions from ONE pushed-down postings scan;
         forward store joined and tokenized only for matching docs (same
-        plan as kwic — AQE broadcasts the hit side against a 100 TB
-        store); window tokens sliced and exploded in JVM expressions;
-        one groupBy(collocate) partial agg; marginals attached by ONE
-        join against the term dictionary (f_xy side is vocabulary-
-        bounded). f_x (``_lookup``) and N (Σ cf) are driver scalars; on a
+        join as kwic, see _hit_tokens); window tokens sliced and exploded
+        in JVM expressions; one groupBy(collocate) partial agg; marginals
+        attached by ONE join against the term dictionary (f_xy side is
+        vocabulary-bounded). f_x (``_lookup``) and N (Σ cf) are driver scalars; on a
         cached index neither runs a Spark job."""
         out_schema = (
             "collocate string, f_xy long, f_y long, "

@@ -222,3 +222,62 @@ def test_batch_bucket_scorer_matches_per_term(seed):
                 assert int((got["query_id"] == 4).sum()) == n9
             if allow is not None and not len(allow):
                 assert got.empty
+
+
+def _bool_algebra(post, must, should, must_not):
+    """boolean_search's contract as python set algebra over per-term
+    {doc: tf} dicts: every must term, one should term when any are
+    given, no must_not term; tf summed over the distinct must/should
+    terms."""
+    pos = set(must) | set(should)
+    docs = set().union(*(post.get(t, {}) for t in pos))
+    for t in must:
+        docs &= set(post.get(t, {}))
+    if should:
+        docs &= set().union(*(post.get(t, {}) for t in should))
+    for t in must_not:
+        docs -= set(post.get(t, {}))
+    return {d: sum(post.get(t, {}).get(d, 0) for t in pos) for d in docs}
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_boolean_bucket_matches_set_algebra(seed):
+    """engine._boolean_bucket, boolean_search's bucket kernel, on
+    hand-encoded blocks of four overlapping terms (blocks interleaved,
+    one bulk decode) against set algebra over a per-block decode: same
+    docs, same tf. Covers terms holding two roles (must+must_not,
+    must+should, should+must_not), repeated terms, a must term and a
+    should term with no block in the bucket, and a query every doc
+    fails."""
+    from gloomy_spark.codecs import decode_posting_block
+    from gloomy_spark.query.engine import _boolean_bucket
+
+    rng = np.random.default_rng(seed)
+    stride = 1 if seed % 2 else 1009
+    blocks, _ = _encoded_bucket(rng, False, stride, {1: 1.0, 2: 1.0, 3: 1.0, 4: 1.0})
+    post: dict[int, dict[int, int]] = {}
+    for r in blocks.itertuples():
+        d, tf, _ = decode_posting_block(r.docs, r.tfs, r.dls, r.n_docs)
+        post.setdefault(r.term_id, {}).update(zip(d.tolist(), tf.tolist()))
+    cases = [
+        ([1, 2], [], []),
+        ([1], [2, 3], [4]),
+        ([1, 3], [], [3]),  # must+must_not: nothing
+        ([1], [1, 2], []),  # must+should
+        ([], [2, 3], [3, 4]),  # should+must_not
+        ([2, 2, 1], [3, 3], [4, 4]),  # repeats
+        ([], [1], [1]),  # the only positive term also excluded: nothing
+        ([1, 9], [], []),  # a must term with no block here: nothing
+        ([], [2, 9], [9]),  # absent should and must_not terms
+        ([], [1, 2, 3, 4], []),
+    ]
+    for must, should, must_not in cases:
+        # the scan ships only the query terms' blocks
+        shipped = blocks[blocks["term_id"].isin(must + should + must_not)]
+        got = _boolean_bucket(must, should, must_not)(shipped)
+        assert got["doc_id"].dtype == np.int64 and got["tf"].dtype == np.int32
+        assert got["doc_id"].is_unique
+        want = _bool_algebra(post, must, should, must_not)
+        assert dict(zip(got["doc_id"].tolist(), got["tf"].tolist())) == want, (
+            must, should, must_not
+        )

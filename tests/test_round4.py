@@ -770,6 +770,114 @@ def test_batch_scorer_partition_cap(small_index, spark):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def _python_input_partitions(df) -> list[int]:
+    """Partition count of the input of every Python node (MapInArrow,
+    MapInPandas) in ``df``'s physical plan, as planned before it runs."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        kids = [node.children().apply(i) for i in range(node.children().size())]
+        if node.nodeName() in ("MapInArrow", "MapInPandas"):
+            out.append(kids[0].outputPartitioning().numPartitions())
+        stack.extend(kids)
+    return out
+
+
+def _small_batch(si, n=40):
+    """``n`` two- and three-term queries over the index's 60 most
+    frequent terms."""
+    import random
+
+    head = [r["term"] for r in si.terms.orderBy(F.desc("df"), F.asc("term")).limit(60).collect()]
+    rng = random.Random(5)
+    return [" ".join(rng.sample(head, rng.choice((2, 3)))) for _ in range(n)]
+
+
+@pytest.mark.spark
+def test_boolean_search_plan_is_per_bucket(small_index):
+    """boolean_search runs the per-bucket plan: one MapInArrow bucket
+    kernel over the compressed blocks, with no doc_id aggregate and no
+    doc_id exchange (no decoded posting is shuffled)."""
+    df = small_index.boolean_search(["the"], ["data", "of"], ["and"])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
+    assert "HashAggregate" not in plan, plan
+    assert "Exchange hashpartitioning(doc_id" not in plan, plan
+
+
+@pytest.mark.spark
+def test_boolean_search_dedups_terms_after_lowercasing(small_index):
+    """Terms differing only in case are one term: ["The", "the"] as must
+    asks for one term, not two (which no doc could satisfy)."""
+    a = small_index.boolean_search(["The", "the"], ["OF", "of"]).collect()
+    b = small_index.boolean_search(["the"], ["of"]).collect()
+    assert a and sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+
+@pytest.mark.spark
+def test_small_queries_run_one_python_task(small_index):
+    """A query whose posting volume (Σ df) is under the per-task floor
+    feeds its Python node from one partition: boolean_search,
+    postings_multi, postings_positions (kwic, collocations) and a
+    40-query bm25_topk_batch. Each extra python task costs a fixed
+    worker setup that dwarfs the kernel work of such a query."""
+    si = small_index
+    batch = _small_batch(si)
+    cases = {
+        "boolean_search": si.boolean_search(["the"], ["data", "of"], ["and"]),
+        "postings_multi": si.postings_multi(["the", "of", "and"]),
+        "postings_positions": si.postings_positions("the"),
+        "bm25_topk_batch": si.bm25_topk_batch(batch, 10),
+    }
+    for name, df in cases.items():
+        assert _python_input_partitions(df) == [1], name
+
+
+@pytest.mark.spark
+def test_past_floor_plans(small_index, spark):
+    """Past the per-task floor (lowered on the instance, so this index's
+    queries cross it) the batch scorer keeps its doc_bucket exchange,
+    capped at min(cfg.shuffle_partitions, doc buckets) whatever the
+    session's shuffle.partitions; postings_multi keeps the segment
+    scan's partitions with no exchange; boolean_search and
+    postings_multi return the same rows as on one task."""
+    import re
+
+    si = small_index
+    mid = si.terms.orderBy(F.desc("df"), F.asc("term")).offset(100).first()["term"]
+    queries = {
+        "boolean_search": lambda: si.boolean_search(["the"], ["data", "of"], [mid]),
+        "postings_multi": lambda: si.postings_multi(["the", "of", "and"]),
+    }
+    one_task = {k: sorted(map(tuple, q().collect())) for k, q in queries.items()}
+    assert all(one_task.values()), one_task
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    si._SCORER_MIN_POSTINGS = 1
+    try:
+        for k, q in queries.items():
+            assert sorted(map(tuple, q().collect())) == one_task[k], k
+        assert _python_input_partitions(queries["postings_multi"]()) == [
+            si.segments.rdd.getNumPartitions()
+        ]
+        df = si.bm25_topk_batch(_small_batch(si), 5)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        counts = [
+            int(n)
+            for n in re.findall(
+                r"Exchange hashpartitioning\(doc_bucket[^)]*, (\d+)\)", plan
+            )
+        ]
+        cap = min(int(si.cfg.shuffle_partitions), si._n_doc_buckets)
+        assert cap > 1 and counts == [cap], (counts, cap, plan)
+    finally:
+        del si._SCORER_MIN_POSTINGS
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
 @pytest.mark.spark
 def test_microbatcher_survives_batch_failure(small_index):
     """A failing batch job propagates its error to that batch's callers
