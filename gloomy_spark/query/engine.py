@@ -21,11 +21,12 @@ bm25_topk_batch, boolean_search):
       | row_number() per query_id <= k           ── batch: WindowGroupLimit
 
 Every read-path Python stage takes its task count from the query's
-posting volume (Σ df) through ``_scorer_parts``: the per-bucket plan
-above, and the streaming decoders ``postings_multi`` and
-``postings_positions``, which run as one task (coalesce(1)) when that
-rule gives one partition and keep the segment scan's parallelism
-otherwise.
+posting volume through ``_scorer_parts``: the per-bucket plan above
+(Σ df; the phrase matcher weighs each posting by its higher cost), and
+the streaming decoders ``postings_multi`` (Σ df) and
+``postings_positions`` (cf, weighted by what its consumers do per
+position), which run as one task (coalesce(1)) when that rule gives one
+partition and keep the segment scan's parallelism otherwise.
 
 Every posting decode goes through ``decode_posting_blocks_bulk`` (one
 call per bucket or Arrow batch, never one per block). The three BM25
@@ -318,7 +319,7 @@ class SearchIndex:
         # scan BELOW the added exchange, and at scale (files >> slots)
         # this is a no-op. The slot-wide scan is what the streaming
         # decoders (postings_multi, postings_positions: postings, kwic,
-        # collocations, term_attr_counts, NRT) run on once a query's Σ df
+        # collocations, term_attr_counts, NRT) run on once a query's volume
         # is past one task (_scorer_parts), what the per-bucket plan
         # reads below its doc_bucket exchange, and what bm25_serve's
         # cache-miss fetch scans; a query under the floor reads it
@@ -339,16 +340,26 @@ class SearchIndex:
     # "Python task fixed cost"): fixed cost 150-240 ms per task, spent
     # in the reused worker's importlib.invalidate_caches(), which re-reads
     # the zip directory of each of its 17 zipimporters; kernel throughput
-    # 2.0 M postings/s (_bucket_scorer over the 1000-page perfbench
-    # index). 200 ms × 2.0 M/s = 4·10^5, rounded down to 2^18 since the
-    # other bucket kernels (phrase_match's matcher) are slower.
+    # 1.0-3.5 M postings/s (_boolean_bucket, _bucket_scorer) and 4.8 M
+    # positions/s (postings_positions' decode) over the 1000-page
+    # perfbench index. 200 ms × 1.0-3.5 M/s = 2-7·10^5 → 2^18.
     _SCORER_MIN_POSTINGS = 1 << 18
+    # weight against that floor of one phrase_match posting and of one
+    # postings_positions position, measured on the same index and host.
+    # The phrase matcher decodes positions and checks adjacency per
+    # candidate doc in Python: 0.11 M postings/s, 10-30× below the
+    # kernels above. kwic and collocations tokenize, explode and slice
+    # per position in the JVM tasks that read postings_positions' output:
+    # ~10 µs per position in one task, 20-35× a scored posting. Either
+    # floor is 2^18 / 16 = 16,384.
+    _SLOW_UNIT_COST = 16
 
     def _scorer_parts(self, est_postings: int) -> int:
         """Task count for a read-path python stage: data-derived from the
-        query's posting volume, Σ df of its terms, one task per
-        _SCORER_MIN_POSTINGS postings (each python task pays ~200 ms of
-        worker setup before any kernel work, see _SCORER_MIN_POSTINGS),
+        query's posting volume (Σ df of its terms, × _SLOW_UNIT_COST for
+        the phrase matcher; cf × _SLOW_UNIT_COST for postings_positions),
+        one task per _SCORER_MIN_POSTINGS (each python task pays ~200 ms
+        of worker setup before any kernel work, see _SCORER_MIN_POSTINGS),
         capped by bucket count and shuffle width."""
         nb = self._n_doc_buckets
         sp = int(self.cfg.shuffle_partitions)
@@ -682,12 +693,14 @@ class SearchIndex:
             return self.spark.createDataFrame(
                 [], "doc_id long, tf int, positions array<int>"
             )
-        tid, _, df, _ = found[term]
+        # sized by positions: the decode, and what kwic/collocations
+        # explode and slice in the same tasks, grow with cf, not df
+        tid, _, _, cf = found[term]
         segs = self._streamed(
             self.segments.where(F.col("term_id") == tid).select(
                 "n_docs", "docs", "tfs", "dls", "pos_counts", "positions"
             ),
-            df,
+            cf * self._SLOW_UNIT_COST,
         )
 
         def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -871,7 +884,7 @@ class SearchIndex:
             return res
 
         # doc_buckets are disjoint doc ranges → no cross-bucket duplicates
-        est = sum(found[t][2] for t in terms)
+        est = sum(found[t][2] for t in terms) * self._SLOW_UNIT_COST
         fields = [pa.field("doc_id", pa.int64())]
         if with_positions:
             fields.append(pa.field("positions", pa.list_(pa.int32())))

@@ -819,7 +819,8 @@ def test_boolean_search_dedups_terms_after_lowercasing(small_index):
 
 @pytest.mark.spark
 def test_small_queries_run_one_python_task(small_index):
-    """A query whose posting volume (Σ df) is under the per-task floor
+    """A query whose posting volume (Σ df; weighted cf for
+    postings_positions) is under the per-task floor
     feeds its Python node from one partition: boolean_search,
     postings_multi, postings_positions (kwic, collocations) and a
     40-query bm25_topk_batch. Each extra python task costs a fixed
@@ -876,6 +877,44 @@ def test_past_floor_plans(small_index, spark):
     finally:
         del si._SCORER_MIN_POSTINGS
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+@pytest.mark.spark
+def test_stage_volume_counts_its_own_work(small_index):
+    """postings_positions measures its volume in weighted positions (cf
+    × _SLOW_UNIT_COST) and phrase_match weighs each posting by
+    _SLOW_UNIT_COST: with the floor set to the plain Σ df,
+    postings_positions keeps the segment scan's partitions and
+    phrase_match keeps its doc_bucket exchange, each returning the same
+    rows as on one task."""
+    import re
+
+    si = small_index
+    found = si._lookup(["of", "the"])
+    _, _, df_the, cf_the = found["the"]
+    assert cf_the > df_the
+
+    def rows(df):
+        return sorted((r[0], tuple(r[-1])) for r in df.collect())
+
+    def positions():
+        return si.postings_positions("the")
+
+    def phrase():
+        return si.phrase_match("of the", with_positions=True)
+
+    want_pos, want_phrase = rows(positions()), rows(phrase())
+    assert want_phrase
+    try:
+        si._SCORER_MIN_POSTINGS = df_the
+        assert _python_input_partitions(positions()) == [si.segments.rdd.getNumPartitions()]
+        assert rows(positions()) == want_pos
+        si._SCORER_MIN_POSTINGS = df_the + found["of"][2]
+        plan = phrase()._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"Exchange hashpartitioning\(doc_bucket", plan), plan
+        assert rows(phrase()) == want_phrase
+    finally:
+        del si._SCORER_MIN_POSTINGS
 
 
 @pytest.mark.spark
