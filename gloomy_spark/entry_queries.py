@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from .config import EngineConfig
 from .functions.text import ngrams_col, tokens_col
 from .ops import dedup, simsearch, textstats, multimodal
-from .ops.hashing import M31, hash_params, md5_long, md5_long_sql, universal_hash_sql
+from .ops.hashing import M31, hash_params, md5_long_duckdb_sql, universal_hash_sql
 
 CFG = EngineConfig()
 K1, B = CFG.bm25.k1, CFG.bm25.b
@@ -959,7 +959,7 @@ sh AS (
 
 def _minhash_sql_select(num_hashes: int) -> str:
     params = hash_params(num_hashes)
-    base = f"({md5_long_sql('sh')} % {M31})"
+    base = f"({md5_long_duckdb_sql('sh')} % {M31})"
     cols = ", ".join(
         f"min({universal_hash_sql('bm', i, params)}) AS mh_{i}" for i in range(num_hashes)
     )
@@ -1000,7 +1000,7 @@ FROM bands l JOIN bands r ON l.band = r.band AND l.key = r.key AND l.doc_id < r.
 
 
 def _simhash_cte() -> str:
-    h = md5_long_sql("term")
+    h = md5_long_duckdb_sql("term")
     bit_sums = ", ".join(
         f"sum(CASE WHEN (h >> {j}) & 1 = 1 THEN tf ELSE -tf END) AS s{j}"
         for j in range(dedup.SIMHASH_BITS)
@@ -1378,7 +1378,7 @@ sh AS (
   FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - {shingle_k - 1})) AS i
         FROM shingle_base WHERE len(toks) >= {shingle_k})
 ),
-minsh AS (SELECT doc_id, min({md5_long_sql('sh')}) AS min_shingle_hash FROM sh GROUP BY doc_id)
+minsh AS (SELECT doc_id, min({md5_long_duckdb_sql('sh')}) AS min_shingle_hash FROM sh GROUP BY doc_id)
 SELECT b.doc_id, md5(array_to_string(b.toks, ' ')) AS content_md5, minsh.min_shingle_hash
 FROM base b LEFT JOIN minsh ON b.doc_id = minsh.doc_id"""
     return fn, sql

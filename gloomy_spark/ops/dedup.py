@@ -5,6 +5,17 @@ hashing constants are shared with the DuckDB oracle so every operator is
 value-checkable. Scale notes per operator are in the docstrings — the
 designs are the standard 100 TB patterns (shingle → minhash → band →
 bucket-join; simhash chunk blocking), tested at sf scale.
+
+The wide, loop-generated expression lists (simhash's md5 projection, 60
+bit-sum aggregates and 60-term fold; the signatures' md5 base, 24
+universal hashes and 24 mins; the band and chunk structs) are Spark SQL
+text (``selectExpr`` / ``F.expr``), which the JVM parses in one call, not
+Column-API trees. PySpark 4.1's classic Column API wraps every call in
+call-site capture (active session, JVM class lookup, conf read, set and
+clear origin), ~13 py4j round trips each: building ``simhash`` took
+~12,000 round trips and ~1.1 s of driver time before any job started,
+against 453 and ~0.12 s as text, with the same physical plan
+(tests/test_dedup_plans.py pins both).
 """
 
 from __future__ import annotations
@@ -15,7 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.text import tokens_col
 from ..session import ensure_min_partitions
 from ..textnorm import FULL_SPLIT_PATTERN
-from .hashing import M31, hash_params, md5_long, universal_hash
+from .hashing import M31, hash_params, md5_long_spark_sql, universal_hash_sql
 
 
 def _plain_tokens(text: Column) -> Column:
@@ -96,16 +107,11 @@ def _signatures_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
     concentrates on one task. The md5 base is materialized in its own
     projection so the H hash expressions share ONE md5 evaluation."""
     params = hash_params(num_hashes)
-    based = sh.select("doc_id", (md5_long(F.col("sh")) % F.lit(M31)).alias("bm"))
-    hashed = based.select(
-        "doc_id",
-        *[
-            universal_hash(F.col("bm"), i, params).alias(f"h{i}")
-            for i in range(num_hashes)
-        ],
+    hashed = sh.selectExpr("doc_id", f"{md5_long_spark_sql('sh')} % {M31} AS bm").selectExpr(
+        "doc_id", *[f"{universal_hash_sql('bm', i, params)} AS h{i}" for i in range(num_hashes)]
     )
     return hashed.groupBy("doc_id").agg(
-        *[F.min(f"h{i}").alias(f"mh_{i}") for i in range(num_hashes)]
+        *[F.expr(f"min(h{i}) AS mh_{i}") for i in range(num_hashes)]
     )
 
 
@@ -151,16 +157,15 @@ def minhash_lsh_pairs(
     if _shingles is None:
         _shingles = _shingle_table(docs, shingle_k, text_col, id_col)
     sig = _signatures_from_shingles(_shingles, num_hashes)
-    band_cols = [
-        F.struct(
-            F.lit(j).alias("band"),
-            F.concat_ws("_", *[F.col(f"mh_{j * rows + r}") for r in range(rows)]).alias("key"),
-        )
+    band_structs = ", ".join(
+        f"struct({j} AS band, concat_ws('_', "
+        + ", ".join(f"mh_{j * rows + r}" for r in range(rows))
+        + ") AS key)"
         for j in range(bands)
-    ]
-    banded = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    )
+    banded = sig.selectExpr("doc_id", f"explode(array({band_structs})) AS bk").selectExpr(
+        "doc_id", "bk.band AS band", "bk.key AS key"
+    )
     if max_bucket is not None:
         from .skew import cap_buckets, capped_bucket_stats
 
@@ -179,12 +184,13 @@ def minhash_lsh_pairs(
     # materialize before the self-join: Spark does not deduplicate
     # common subtrees, so without this both join sides re-run the whole
     # corpus-pass shingle → md5 → 24-hash → min-agg pipeline (guide §1.2
-    # "don't compute things twice"). LAZY: the join's two map stages run
-    # concurrently, so in the worst case each computes the pipeline once
-    # (exactly the un-checkpointed cost, overlapped on idle cores) and
-    # every later stage reads the persisted copy; an eager checkpoint
-    # would serialize a full materialization job in front of the join —
-    # measured slower on the bench (4.8 s lazy vs 7.3 s eager).
+    # "don't compute things twice"). eager=False is not lazy under AQE:
+    # building the checkpoint runs every upstream shuffle stage, one after
+    # another, before this function returns (2 of the 5 jobs of a
+    # 400-page call start before collect()). Only the stage after the
+    # last exchange waits for the first action, which persists it for
+    # both join sides; eager=True would run that stage up front as one
+    # more job (measured slower on the bench: 4.8 s against 7.3 s).
     banded = banded.localCheckpoint(eager=False)
     left = banded.alias("l")
     right = banded.alias("r")
@@ -223,22 +229,15 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         F.explode(tokens_col(F.col(text_col))).alias("tok"),
     )
     tf = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
-    hb = tf.select("doc_id", "tf", md5_long(F.col("tok")).alias("h"))
+    hb = tf.selectExpr("doc_id", "tf", f"{md5_long_spark_sql('tok')} AS h")
     bit_sums = hb.groupBy("doc_id").agg(
         *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1,
-                    F.col("tf"),
-                ).otherwise(-F.col("tf"))
-            ).alias(f"s{j}")
+            F.expr(f"sum(CASE WHEN (shiftright(h, {j}) & 1) = 1 THEN tf ELSE -tf END) AS s{j}")
             for j in range(SIMHASH_BITS)
         ]
     )
-    acc = F.lit(0).cast("long")
-    for j in range(SIMHASH_BITS):
-        acc = acc + F.when(F.col(f"s{j}") > 0, F.lit(2**j).cast("long")).otherwise(F.lit(0).cast("long"))
-    return bit_sums.select("doc_id", acc.alias("simhash"))
+    bits = " + ".join(f"CASE WHEN s{j} > 0 THEN {2**j}L ELSE 0L END" for j in range(SIMHASH_BITS))
+    return bit_sums.selectExpr("doc_id", f"{bits} AS simhash")
 
 
 def simhash_near_pairs(
@@ -251,26 +250,17 @@ def simhash_near_pairs(
     candidate join is a chunk-equality shuffle join, never O(n²)."""
     n_chunks = max_hamming + 1
     chunk_bits = SIMHASH_BITS // n_chunks
-    sh = simhash(docs, text_col, id_col)
-    chunks = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("simhash"), c * chunk_bits)
-                        .bitwiseAND(F.lit((1 << chunk_bits) - 1))
-                        .alias("ckey"),
-                    )
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("ck"),
-    ).select("doc_id", "simhash", F.col("ck.chunk").alias("chunk"), F.col("ck.ckey").alias("ckey"))
+    chunk_structs = ", ".join(
+        f"struct({c} AS chunk, shiftright(simhash, {c * chunk_bits}) & {(1 << chunk_bits) - 1} AS ckey)"
+        for c in range(n_chunks)
+    )
+    chunks = simhash(docs, text_col, id_col).selectExpr(
+        "doc_id", "simhash", f"explode(array({chunk_structs})) AS ck"
+    ).selectExpr("doc_id", "simhash", "ck.chunk AS chunk", "ck.ckey AS ckey")
     # materialize once before the self-join — otherwise both sides re-run
-    # the full simhash pipeline (explode + tf + 60-bit agg) over the corpus
+    # the full simhash pipeline (explode + tf + 60-bit agg) over the corpus.
+    # As in minhash_lsh_pairs, AQE runs the upstream shuffle stages while
+    # the checkpoint is built (2 of 5 jobs start before collect()).
     chunks = chunks.localCheckpoint(eager=False)
     l, r = chunks.alias("l"), chunks.alias("r")
     cand = (
@@ -316,7 +306,10 @@ def lsh_jaccard_pipeline(
     # shingle table is the corpus-pass cost and is referenced four times
     # downstream (signatures, sizes, both intersection sides), so it is
     # locally checkpointed — without it each reference re-tokenizes and
-    # re-shingles the whole corpus (guide §1.2).
+    # re-shingles the whole corpus (guide §1.2). Neither checkpoint is
+    # lazy under AQE: building `cand` runs the signature and band stages,
+    # one after another, before this function returns (4 of the 15 jobs
+    # of a 400-page call start before collect()).
     sh = _shingle_table(docs, shingle_k, text_col, id_col).localCheckpoint(
         eager=False
     )

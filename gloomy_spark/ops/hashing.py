@@ -9,13 +9,13 @@ Universal hash family over M = 2^31 - 1 (Mersenne prime):
     h_i(x) = (a_i * (base(x) % M) + b_i) % M
 with a_i, b_i < 2^31 derived from splitmix64(seed=42, i) — products stay
 below 2^62, so both engines' int64 arithmetic is overflow-free and equal.
+
+Every helper returns SQL text; a name ending in ``_spark_sql`` or
+``_duckdb_sql`` is valid in that dialect only, ``universal_hash_sql`` in
+both.
 """
 
 from __future__ import annotations
-
-import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 M31 = 2_147_483_647  # 2^31 - 1
 _SEED = 42
@@ -35,19 +35,14 @@ def hash_params(num_hashes: int) -> tuple[list[int], list[int]]:
     return a, b
 
 
-def md5_long(col: Column) -> Column:
-    """60-bit positive bigint from md5 (Spark side)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+def md5_long_spark_sql(expr: str) -> str:
+    """60-bit positive bigint from md5, Spark SQL."""
+    return f"cast(conv(substring(md5({expr}), 1, 15), 16, 10) as bigint)"
 
 
-def md5_long_sql(expr: str) -> str:
+def md5_long_duckdb_sql(expr: str) -> str:
     """Same hash, DuckDB SQL."""
     return f"cast(('0x' || substr(md5({expr}), 1, 15)) as bigint)"
-
-
-def universal_hash(base_mod: Column, i: int, params: tuple[list[int], list[int]]) -> Column:
-    a, b = params
-    return (F.lit(a[i]) * base_mod + F.lit(b[i])) % F.lit(M31)
 
 
 def universal_hash_sql(base_mod_expr: str, i: int, params: tuple[list[int], list[int]]) -> str:

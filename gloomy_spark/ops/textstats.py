@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG
 from ..functions.text import tokens_col
-from .hashing import md5_long
+from .hashing import md5_long_spark_sql
 
 # marker token sets for the n-gram/stopword language heuristic
 EN_MARKERS = ["the", "of", "and", "to", "in", "is", "that", "for", "it", "as"]
@@ -109,15 +109,11 @@ def fingerprint(docs: DataFrame, shingle_k: int = 5, text_col: str = "text", id_
     winnowing-style content sketch)."""
     from .dedup import shingles_col
 
-    toks = _tokens(F.col(text_col))
-    norm = F.concat_ws(" ", toks)
-    sh = shingles_col(F.col(text_col), shingle_k)
-    min_sh = F.when(
-        F.size(sh) > 0,
-        F.array_min(F.transform(sh, lambda s: md5_long(s))),
-    ).otherwise(F.lit(None).cast("long"))
+    min_sh = f"array_min(transform(sh, s -> {md5_long_spark_sql('s')}))"
     return docs.select(
         F.col(id_col).alias("doc_id"),
-        F.md5(norm).alias("content_md5"),
-        min_sh.alias("min_shingle_hash"),
+        F.md5(F.concat_ws(" ", _tokens(F.col(text_col)))).alias("content_md5"),
+        shingles_col(F.col(text_col), shingle_k).alias("sh"),
+    ).selectExpr(
+        "doc_id", "content_md5", f"CASE WHEN size(sh) > 0 THEN {min_sh} END AS min_shingle_hash"
     )
